@@ -431,7 +431,7 @@ object SparkEntry {
 
   /** q86: the GROWING-index day-over-day pattern — day 0's corpus
     * (doc_id < 400) is mined once; day 1's delta ([400, 450)) is FOLDED
-    * into the index with [[operators.Dedup.appendToMinhashIndex]]
+    * into the index with [[operators.Dedup.append]]
     * (banding is per-doc deterministic, so append is an exact union at
     * delta cost — no re-mine); day 2's delta (≥ 450) then dedups
     * against the grown snapshot. Output ≡ the full batch operator
@@ -463,7 +463,7 @@ object SparkEntry {
     * modality's day-over-day loop: day 0's embeddings (< 300) assigned
     * ONCE under q83's pinned deterministic centroids, day 1
     * ([300, 400)) folded in with
-    * [[operators.Dedup.appendToSemanticIndex]] (assignment is a pure
+    * [[operators.Dedup.append]] (assignment is a pure
     * per-row function of vector + pinned centroids, so append is an
     * exact union at delta cost — no corpus re-assignment), day 2
     * (≥ 400) then emits within-cluster θ-pairs against the grown
@@ -478,7 +478,7 @@ object SparkEntry {
       .collect().map(_.getSeq[Float](0).toArray)
     val ix0 = Dedup.buildSemanticIndex(e.where(col("vec_id") < 300),
       "vec_id", "embedding", cents)
-    val ix1 = Dedup.appendToSemanticIndex(ix0,
+    val ix1 = Dedup.append(ix0,
       e.where(col("vec_id") >= 300 && col("vec_id") < 400), "vec_id", "embedding")
     Dedup.semanticDeltaPairs(ix1, e.where(col("vec_id") >= 400),
         "vec_id", "embedding", threshold = 0.4,
@@ -488,7 +488,7 @@ object SparkEntry {
 
   /** q87: the cosine append twin of q86 — day 0's embeddings (< 300)
     * indexed once, day 1 ([300, 400)) folded in with
-    * [[operators.Dedup.appendToCosineIndex]] (exact union of pinned-
+    * [[operators.Dedup.append]] (exact union of pinned-
     * width signatures + vectors), day 2 (≥ 400) deduped against the
     * grown snapshot. At oracle scale the route is the exact delta tier
     * over the grown index's vector union, so the output — and the
@@ -499,7 +499,7 @@ object SparkEntry {
     val e = Tables(s, dir, "embeddings")
     val ix0 = Dedup.buildCosineIndex(e.where(col("vec_id") < 300),
       "vec_id", "embedding", numBits = 8, bands = 8)
-    val ix1 = Dedup.appendToCosineIndex(ix0,
+    val ix1 = Dedup.append(ix0,
       e.where(col("vec_id") >= 300 && col("vec_id") < 400), "vec_id", "embedding")
     // exactLimit pinned wide open — same oracle-contract rationale as q85
     Dedup.cosineDeltaPairs(ix1, e.where(col("vec_id") >= 400),
@@ -520,7 +520,7 @@ object SparkEntry {
       operators.StageCache.cached("q84_ix_buckets_16x4_sh3_lt400", docs)(built.buckets),
       operators.StageCache.cached("q84_ix_sets_sh3_lt400", docs)(built.sets),
       built.numHashes, built.bands, built.shingleLen)
-    val ix1 = Dedup.appendToMinhashIndex(ix0,
+    val ix1 = Dedup.append(ix0,
       docs.where(col("doc_id") >= 400 && col("doc_id") < 450), "doc_id", "text")
     Dedup.minhashDeltaPairs(ix1, docs.where(col("doc_id") >= 450),
         "doc_id", "text", threshold = 0.5,
@@ -1057,8 +1057,8 @@ object SparkEntry {
     val docs = Tables(s, dir, "documents").where(col("doc_id") < 2000)
     val arch = java.nio.file.Files.createTempDirectory("graft-q96").toString
     val pairsDir = java.nio.file.Files.createTempDirectory("graft-q96-p").toString
-    ArchiveDedup.seedArchive(
-      docs.where(col("doc_id") < 400), arch, "doc_id", "text")
+    ArchiveDedup.seedArchive(Dedup.buildMinhashIndex(
+      docs.where(col("doc_id") < 400), "doc_id", "text"), arch)
     ArchiveDedup.processBatch(
       docs.where(col("doc_id") >= 400), 0L, arch, pairsDir,
       "doc_id", "text", 0.5, compactEvery = 0)
@@ -1074,8 +1074,8 @@ object SparkEntry {
 
   /** q97: the COSINE twin of q96 — closes the takedown-oracle asymmetry
     * the r15 verdict named (q96 gates only the minhash modality of
-    * [[graft.streaming.ArchiveDedup.forgetDocs]]; the cosine route runs
-    * a different retraction kernel, `Dedup.retractCosineCovered`). Same
+    * [[graft.streaming.ArchiveDedup.forgetDocs]]; the cosine route
+    * retracts different components, `buckets` + `vecs`). Same
     * lifecycle: seed the hyperplane-LSH archive (vec_id < 400, widths
     * pinned 8×8 as q85), fold one embedding batch (≥ 400), forget every
     * vec_id ≡ 2 (mod 5) TWICE (the second call is the ledgered
@@ -1090,10 +1090,10 @@ object SparkEntry {
     val e = Tables(s, dir, "embeddings")
     val arch = java.nio.file.Files.createTempDirectory("graft-q97").toString
     val pairsDir = java.nio.file.Files.createTempDirectory("graft-q97-p").toString
-    ArchiveDedup.seedCosineArchive(
-      e.where(col("vec_id") < 400), arch, "vec_id", "embedding",
-      numBits = 8, bands = 8)
-    ArchiveDedup.processCosineBatch(
+    ArchiveDedup.seedArchive(Dedup.buildCosineIndex(
+      e.where(col("vec_id") < 400), "vec_id", "embedding",
+      numBits = 8, bands = 8), arch)
+    ArchiveDedup.processBatch(
       e.where(col("vec_id") >= 400), 0L, arch, pairsDir,
       "vec_id", "embedding", 0.4, compactEvery = 0)
     val victims = e.where(col("vec_id") % 5 === 2)
@@ -1110,8 +1110,8 @@ object SparkEntry {
   }
 
   /** q98: the SEMANTIC twin of q96/q97 — the third and last
-    * `forgetDocs` modality (`Dedup.retractSemanticCovered`: the member
-    * anti-join under PINNED centroids). Seed under q83's deterministic
+    * `forgetDocs` family (the member anti-join under PINNED
+    * centroids). Seed under q83's deterministic
     * centroids (the 4 smallest vec_ids of the FULL table — pinned, so
     * forgetting vec_id 2, itself a centroid source, must NOT move the
     * centroids), fold ≥ 400, forget vec_id ≡ 2 (mod 5) twice (ledgered
@@ -1127,9 +1127,9 @@ object SparkEntry {
       .collect().map(_.getSeq[Float](0).toArray)
     val arch = java.nio.file.Files.createTempDirectory("graft-q98").toString
     val pairsDir = java.nio.file.Files.createTempDirectory("graft-q98-p").toString
-    ArchiveDedup.seedSemanticArchive(
-      e.where(col("vec_id") < 400), arch, "vec_id", "embedding", cents)
-    ArchiveDedup.processSemanticBatch(
+    ArchiveDedup.seedArchive(Dedup.buildSemanticIndex(
+      e.where(col("vec_id") < 400), "vec_id", "embedding", cents), arch)
+    ArchiveDedup.processBatch(
       e.where(col("vec_id") >= 400), 0L, arch, pairsDir,
       "vec_id", "embedding", 0.4, compactEvery = 0)
     val victims = e.where(col("vec_id") % 5 === 2)
@@ -2602,7 +2602,7 @@ ORDER BY d.doc_id"""
     // the within-cluster θ-join restricted to delta-touching pairs. No
     // closure stage: the operator's contract is the candidate pair set.
     // q89: the semantic APPEND twin — day 0 (< 300) indexed, day 1
-    // ([300, 400)) folded in with appendToSemanticIndex, day 2 (≥ 400)
+    // ([300, 400)) folded in with Dedup.append, day 2 (≥ 400)
     // delta-paired. Assignment is a pure function of vector + pinned
     // centroids, so the grown member set ≡ q88's (< 400) and the oracle
     // is q88's verbatim: the same provided-centroid argmin CTE + the

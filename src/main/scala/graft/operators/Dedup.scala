@@ -2,8 +2,10 @@ package graft.operators
 
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType,
+  StructField, StructType}
 
 /**
  * Deduplication operators for a large-scale training-data pipeline: exact,
@@ -626,27 +628,28 @@ object Dedup {
    * then verified with exact Jaccard. Runs as a typed map (md5 in a hot
    * loop) + equi-join on (band, bucket) — the shuffle key is the bucket
    * hash, so candidate generation is a co-partitioned join, never O(n²).
+   *
+   * `hotBucketPairCap` (round 18, verdict ask #2): the BATCH twin of
+   * [[minhashDeltaPairs]]'s cap — a band bucket whose m² pair space
+   * exceeds the cap emits one representative covering edge per doc
+   * (min-id verified block-0 representative, exact Jaccard) instead of
+   * the full pair list; KEEP/DROP verdict under Components closure is
+   * preserved on fully-dense buckets (see
+   * [[SimilarityJoin.batchGrid]]). Default MaxValue = unbounded (this
+   * is the pair-list primitive — the q25/q35 oracle contract; the safe
+   * default lives on [[minhashDedup]], the KEEP/DROP transform). A
+   * finite cap forces the grid route — the small-corpus self-join has
+   * no covering form and would materialize the dense pair space the
+   * cap exists to avoid.
+   *
+   * EAGERNESS (r19 probe, documented r20): under a FINITE cap this
+   * method runs the banding pass plus one tiny aggregate (the
+   * hot-bucket probe) at DataFrame-CONSTRUCTION time — the probe's
+   * answer decides the scan plan's shape, so construction blocks on
+   * one driver job and upstream errors surface here rather than at
+   * the first action. One probe per invocation; unbounded
+   * (Long.MaxValue) callers stay fully lazy.
    */
-  /** `hotBucketPairCap` (round 18, verdict ask #2): the BATCH twin of
-    * [[minhashDeltaPairs]]'s cap — a band bucket whose m² pair space
-    * exceeds the cap emits one representative covering edge per doc
-    * (min-id verified block-0 representative, exact Jaccard) instead of
-    * the full pair list; KEEP/DROP verdict under Components closure is
-    * preserved on fully-dense buckets (see
-    * [[SimilarityJoin.batchGrid]]). Default MaxValue = unbounded (this
-    * is the pair-list primitive — the q25/q35 oracle contract; the safe
-    * default lives on [[minhashDedup]], the KEEP/DROP transform). A
-    * finite cap forces the grid route — the small-corpus self-join has
-    * no covering form and would materialize the dense pair space the
-    *
-    * EAGERNESS (r19 probe, documented r20): under a FINITE cap this
-    * method runs the banding pass plus one tiny aggregate (the
-    * hot-bucket probe) at DataFrame-CONSTRUCTION time — the probe's
-    * answer decides the scan plan's shape, so construction blocks on
-    * one driver job and upstream errors surface here rather than at
-    * the first action. One probe per invocation; unbounded
-    * (Long.MaxValue) callers stay fully lazy.
-    * cap exists to avoid. */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
                       numHashes: Int = 16, bands: Int = 4,
                       shingleLen: Int = 3, threshold: Double = 0.5,
@@ -761,9 +764,8 @@ object Dedup {
             ((bkt, nb, anyHot && SimilarityJoin.isHotBucket(m, m, cap)),
               (id, hs))
           }
-        // scanBlockPairJaccardDelta over all-true flags IS
-        // scanBlockPairJaccard (identical kernel, no skips) — cold
-        // cells stay bit-identical to the pre-r18 grid
+        // scanBlockPairJaccardDelta over all-true flags scans every
+        // pair — cold cells stay bit-identical to the pre-r18 grid
         SimilarityJoin.routedPairScan[Long, Int, Array[Long]](
             SimilarityJoin.batchGrid(gridRows), partitions, anyHot,
             _ => 0,
@@ -779,32 +781,316 @@ object Dedup {
   }
 
   // =====================================================================
-  // Incremental (delta) fuzzy dedup — band a NEW batch against a saved
-  // index instead of re-mining the whole corpus
+  // Incremental (delta) dedup indexes — dedup a NEW batch against a
+  // saved index instead of re-mining the whole corpus. One lifecycle
+  // over named components; each family supplies only its kernels.
   // =====================================================================
 
-  /** A reusable MinHash banding index over a corpus snapshot: the
-    * (bucket, id) keys of the md5 banding pass plus the (id, sorted
-    * shingle hashes) verification payload, with the banding parameters
-    * pinned (delta batches MUST band identically — md5 banding is a
-    * pure function of the text and the widths, so reuse is exact, not
-    * approximate). This is the 100-TB ingestion pattern: a daily crawl
-    * delta dedups against yesterday's index at delta-sized cost; the
-    * full-corpus job never reruns. Caller contract: delta ids must be
-    * disjoint from indexed ids — ENFORCED by a flag-gated guard on
-    * every delta scan and append (see `requireDeltaDisjoint`;
-    * `spark.graft.checkDeltaDisjoint=false` disables, after which the
-    * scan kernels still refuse self-pairs). */
-  /** Marker for the three incremental-index modalities so callers can
-    * route a delta batch through one facade ([[deltaPairs]]) — the
-    * modality choice is made ONCE, at index build; see the facade's
-    * Scaladoc for the measured decision rule. */
-  sealed trait DeltaIndex
+  /** A reusable incremental dedup index over a corpus snapshot: named
+    * component frames, every one keyed by the document `id`, plus the
+    * family's PINNED parameters (banding widths, hyperplanes,
+    * centroids) and the seed-time drift baseline. A delta batch is
+    * indexed exactly as the snapshot was — each family's per-row build
+    * is a pure function of the payload and the pinned parameters — so
+    * reuse is exact, not approximate. This is the 100-TB ingestion
+    * pattern: a daily crawl delta dedups against yesterday's index at
+    * delta-sized cost; the full-corpus job never reruns. Caller
+    * contract: delta ids must be disjoint from indexed ids — ENFORCED
+    * by a flag-gated guard on every delta scan and append (see
+    * [[requireDeltaDisjoint]]; `spark.graft.checkDeltaDisjoint=false`
+    * disables, after which the scan kernels still refuse self-pairs).
+    *
+    * The lifecycle is written once over the components ([[save]],
+    * [[load]], [[append]], [[retract]], [[deltaPairs]],
+    * [[pinDriftBaseline]]); a family supplies the kernels declared
+    * here. The family is chosen ONCE, at build time — see
+    * [[deltaPairs]] for the measured decision rule. */
+  sealed trait DeltaIndex {
+    /** The concrete index type, so the lifecycle returns what it got. */
+    type Self <: DeltaIndex
+    def family: IndexFamily[Self]
+    /** Component frames in [[IndexFamily.components]] order. */
+    def frames: Seq[DataFrame]
+    def baseline: Option[DriftBaseline]
+    private[graft] def withFrames(frames: Seq[DataFrame]): Self
+    private[graft] def withBaseline(baseline: Option[DriftBaseline]): Self
+    /** The pinned parameters as the rows of [[IndexFamily.paramsFile]]. */
+    private[graft] def paramsFrame(spark: SparkSession): DataFrame
+    /** `df` indexed under this index's pinned parameters. */
+    private[graft] def batch(df: DataFrame, idCol: String, payloadCol: String): Self
+    /** Pairs touching `newDf`, in the family's own output columns. */
+    private[graft] def pairsAgainst(newDf: DataFrame, idCol: String, payloadCol: String,
+                                    threshold: Double, exactLimit: Long,
+                                    hotPairCap: Long): DataFrame
+    /** The archive fold's kernel over one materialized micro-batch. */
+    private[graft] def fold(b: DataFrame, idCol: String, payloadCol: String,
+                            threshold: Double, exactLimit: Long,
+                            hotPairCap: Long): Fold
+    /** This index's seed-time drift statistics (one-time jobs). */
+    private[graft] def measureBaseline(): DriftBaseline
+    /** This index rebuilt from its own payload under re-fitted
+      * parameters; `atBatch` rotates the random seeds. */
+    private[graft] def refit(atBatch: Long): Self
+    /** Near-duplicate pairs AMONG the indexed documents (the audit). */
+    private[graft] def selfPairs(threshold: Double, exactLimit: Long): DataFrame
+  }
 
+  /** What one index family is on disk: its component directories (name
+    * and pinned schema; the first holds one row per indexed document),
+    * its parameters file and the name of its pair-score column. The
+    * schemas are fixed by the writers, so every read passes them: a
+    * schema-less parquet read pays a footer-inference job per path set. */
+  sealed abstract class IndexFamily[I <: DeltaIndex](
+      val name: String,
+      val components: Seq[(String, StructType)],
+      val paramsFile: String,
+      val paramsSchema: StructType,
+      val scoreCol: String) {
+    def idComponent: String = components.head._1
+    protected def assemble(frames: Seq[DataFrame], params: Array[Row],
+                           baseline: Option[DriftBaseline]): I
+    /** The rows of a batch the index keeps. */
+    private[graft] def indexed(batch: DataFrame, payloadCol: String): DataFrame = batch
+    /** Refuses when the family cannot re-fit its own parameters. */
+    private[graft] def requireInPlaceReseed(op: String): Unit = ()
+    private[graft] def readParams(spark: SparkSession, dir: String): Array[Row] =
+      spark.read.schema(paramsSchema).parquet(s"$dir/$paramsFile").collect()
+    /** One multi-path relation per component over `dirs`. */
+    private[graft] def readFrames(spark: SparkSession, dirs: Seq[String]): Seq[DataFrame] =
+      components.map { case (c, schema) =>
+        spark.read.schema(schema).parquet(dirs.map(d => s"$d/$c"): _*)
+      }
+    private[graft] def read(spark: SparkSession, dirs: Seq[String], params: Array[Row],
+                            baseline: Option[DriftBaseline]): I =
+      assemble(readFrames(spark, dirs), params, baseline)
+  }
+
+  private[graft] val IndexFamilies: Seq[IndexFamily[_ <: DeltaIndex]] =
+    Seq(MinhashIndex, CosineIndex, SemanticIndex)
+
+  /** One micro-batch folded against an index: its delta pairs, its
+    * drift probe, and its sliver index with a release hook for any
+    * per-batch cache the sliver's writes share. */
+  private[graft] final case class Fold(pairs: DataFrame, drift: () => DataFrame,
+                                       sliver: () => (DeltaIndex, () => Unit))
+
+  private def idsOf(ix: DeltaIndex): DataFrame = ix.frames.head.select(col("id"))
+
+  /** `f` applied to each component frame with its pinned columns. */
+  private def mapComponents(ix: DeltaIndex)
+                           (f: (DataFrame, Seq[Column], Int) => DataFrame): ix.Self =
+    ix.withFrames(ix.family.components.zip(ix.frames).zipWithIndex.map {
+      case (((_, schema), frame), i) => f(frame, schema.fieldNames.toSeq.map(col), i)
+    })
+
+  /** Write independent component frames CONCURRENTLY — an index save
+    * (and therefore every streamed sliver commit through it) otherwise
+    * pays one sequential job wall per component. Failures surface
+    * unwrapped; in-flight siblings finish before the error propagates
+    * (see [[graft.streaming.Par]]). */
+  private def writeConcurrently(writes: (DataFrame, String)*): Unit =
+    graft.streaming.Par.run(writes.map { case (df, path) =>
+      () => df.write.mode("overwrite").parquet(path)
+    })
+
+  /** Persist an index snapshot: one parquet directory per component,
+    * the pinned parameters under the family's params file, and the
+    * drift baseline (when pinned) under `dir/drift`. The one-row
+    * frames join the component batch, so a save pays ONE commit wall. */
+  def save(ix: DeltaIndex, dir: String): Unit = {
+    val spark = ix.frames.head.sparkSession
+    writeConcurrently(
+      ix.frames.zip(ix.family.components).map { case (f, (c, _)) => f -> s"$dir/$c" } ++
+        Seq(ix.paramsFrame(spark) -> s"$dir/${ix.family.paramsFile}") ++
+        driftBaselineDf(ix.baseline, spark).map(_ -> s"$dir/drift"): _*)
+  }
+
+  def load[I <: DeltaIndex](spark: SparkSession, dir: String,
+                            family: IndexFamily[I]): I =
+    family.read(spark, Seq(dir), family.readParams(spark, dir),
+      loadDriftBaseline(spark, dir))
+
+  /** Fold a NEW batch into an existing index so the NEXT delta dedups
+    * against (corpus ∪ batch) without a full re-mine. The per-batch
+    * build is a pure per-row function of the payload and the pinned
+    * parameters, so append is an exact unionByName per component — day
+    * N's delta becomes part of day N+1's index at delta cost, which
+    * completes the daily-ingest loop ([[deltaPairs]] mines the pairs,
+    * this grows the snapshot). The drift baseline stays PINNED at seed
+    * time by design (a baseline that absorbed every append would
+    * under-report cumulative drift). The returned frames are lazy;
+    * persist with [[save]] to checkpoint the day. Same caller contract
+    * as the delta scan, enforced by the same flag-gated guard. */
+  def append(ix: DeltaIndex, newDf: DataFrame, idCol: String,
+             payloadCol: String): ix.Self = {
+    requireDeltaDisjoint(idsOf(ix), newDf, idCol, "append")
+    val added = ix.batch(newDf, idCol, payloadCol).frames
+    mapComponents(ix)((frame, cols, i) => frame.select(cols: _*).unionByName(added(i)))
+  }
+
+  /** Remove previously-indexed documents — the right-to-be-forgotten /
+    * takedown operation. Every component row is keyed by its
+    * document's id, so retraction is an exact row filter: one
+    * anti-join per component, no recompute, no corpus access —
+    * `retract(append(ix, B), B.ids) ≡ ix` bit-for-bit. Pinned
+    * parameters and the drift baseline stay pinned (seed-scoped,
+    * exactly as for appends). `ids` needs only the id column;
+    * retracting an id the index never held refuses loudly via
+    * [[requireRetractCovered]] (a takedown that silently "removes"
+    * nothing is how the wrong index ships). */
+  def retract(ix: DeltaIndex, ids: DataFrame, idCol: String): ix.Self = {
+    requireRetractCovered(idsOf(ix), ids, idCol, "retract")
+    retractCovered(ix, ids.select(col(idCol).cast("long").as("id")).distinct())
+  }
+
+  /** The anti-join body of [[retract]] with coverage ALREADY proven by
+    * the caller (ArchiveDedup.forgetDocs classifies every victim
+    * against the live index in its ledger pass — a second
+    * full-component coverage scan here would be pure duplicate cost). */
+  private[graft] def retractCovered(ix: DeltaIndex, rm: DataFrame): ix.Self =
+    mapComponents(ix)((frame, cols, _) =>
+      frame.select(cols: _*).join(rm, Seq("id"), "left_anti").select(cols: _*))
+
+  /**
+   * The unified incremental-dedup facade: route a delta batch against
+   * whichever index family the archive was built with, normalizing
+   * the output to (id_a, id_b, score), id_a < id_b, score rounded to 6
+   * (Jaccard for the minhash tier, cosine for the other two).
+   *
+   * The family is chosen ONCE, at index-build time — the measured
+   * decision rule (×100 rows in BENCH.md "Round 10/11"):
+   *
+   *  - raw text, no embeddings → [[MinhashIndex]] (the only text tier);
+   *    singleton-heavy banding prunes hardest, delta ≈ 0.4× rebuild.
+   *  - embeddings over a CLUSTERED corpus (most real embedding spaces)
+   *    → [[SemanticIndex]]: the same within-cluster pair set as the
+   *    LSH tier at ~¼ its delta cost (measured ×100: 2.7 s vs 10.6 s),
+   *    at the price of missing pairs split across clusters (SemDeDup's
+   *    documented approximation).
+   *  - embeddings where cross-cluster pairs must not be missed →
+   *    [[CosineIndex]]: exact tier below `exactLimit` total rows
+   *    (bit-identical to the batch scan), hyperplane-LSH above it
+   *    (precision 1.0, width-bounded recall, logged on switch); expect
+   *    the shuffle floor on clustered corpora (delta ≈ 0.6× rebuild).
+   *
+   * `payloadCol` is the text column for a minhash index and the vector
+   * column otherwise; `exactLimit` only affects the cosine tier.
+   */
+  def deltaPairs(ix: DeltaIndex, newDf: DataFrame, idCol: String,
+                 payloadCol: String, threshold: Double,
+                 exactLimit: Long = 10000L,
+                 hotPairCap: Long = SimilarityJoin.AutoCap): DataFrame =
+    ix.pairsAgainst(newDf, idCol, payloadCol, threshold, exactLimit, hotPairCap)
+      .select(col("id_a"), col("id_b"), col(ix.family.scoreCol).as("score"))
+
+  /** Compute and pin the seed-time drift baseline (one-time jobs over
+    * the index frames, see each family's statistic). Call at
+    * seed/build time, BEFORE appends — the baseline deliberately never
+    * moves afterwards. The index frames are lazy: pin on a persisted or
+    * save/loaded index so each stats job scans materialized data
+    * instead of re-running the build (the archive seeds pin from the
+    * saved parquet). */
+  def pinDriftBaseline(ix: DeltaIndex): ix.Self =
+    ix.withBaseline(Some(ix.measureBaseline()))
+
+  /** The text family: the (bkt, id) keys of the md5 banding pass plus
+    * the (id, sorted 64-bit shingle hashes) exact-Jaccard payload, with
+    * the banding widths pinned — md5 banding is a pure function of the
+    * text and the widths. */
   final case class MinhashIndex(buckets: DataFrame, sets: DataFrame,
                                 numHashes: Int, bands: Int, shingleLen: Int,
                                 baseline: Option[DriftBaseline] = None)
-    extends DeltaIndex
+      extends DeltaIndex {
+    type Self = MinhashIndex
+    def family: IndexFamily[MinhashIndex] = MinhashIndex
+    def frames: Seq[DataFrame] = Seq(sets, buckets)
+    private[graft] def withFrames(fs: Seq[DataFrame]): MinhashIndex =
+      copy(sets = fs(0), buckets = fs(1))
+    private[graft] def withBaseline(b: Option[DriftBaseline]): MinhashIndex =
+      copy(baseline = b)
+    private[graft] def paramsFrame(spark: SparkSession): DataFrame = {
+      import spark.implicits._
+      Seq((numHashes, bands, shingleLen))
+        .toDF("num_hashes", "bands", "shingle_len").coalesce(1)
+    }
+    private[graft] def batch(df: DataFrame, idCol: String, textCol: String): MinhashIndex =
+      buildMinhashIndex(df, idCol, textCol, numHashes, bands, shingleLen)
+    private[graft] def pairsAgainst(newDf: DataFrame, idCol: String, textCol: String,
+                                    threshold: Double, exactLimit: Long,
+                                    hotPairCap: Long): DataFrame =
+      minhashDeltaPairs(this, newDf, idCol, textCol, threshold, hotPairCap)
+    // the sliver's two component writes share one shingle+minhash pass
+    private[graft] def fold(b: DataFrame, idCol: String, textCol: String,
+                            threshold: Double, exactLimit: Long,
+                            hotPairCap: Long): Fold =
+      Fold(pairsAgainst(b, idCol, textCol, threshold, exactLimit, hotPairCap),
+        () => minhashDriftProbe(this, b, idCol, textCol),
+        () => buildMinhashIndexShared(b, idCol, textCol, numHashes, bands, shingleLen))
+    // bucket statistics and the set-size mean: one wall (Par
+    // establishes happens-before at join, so the vars are safe)
+    private[graft] def measureBaseline(): DriftBaseline = {
+      var keys: (Double, Long, Option[org.apache.spark.util.sketch.BloomFilter]) = null
+      var mss = Double.NaN
+      graft.streaming.Par.run(Seq(
+        () => { keys = bucketBaseline(buckets) },
+        () => { mss = sets.select(avg(size(col("sh")))).head().getDouble(0) }))
+      DriftBaseline(Double.NaN, keys._1, mss, keys._2, keys._3)
+    }
+    private[graft] def refit(atBatch: Long): MinhashIndex = {
+      MinhashIndex.requireInPlaceReseed("refit")
+      this
+    }
+    // banding keys give the LSH candidates, the stored hashed sets the
+    // exact Jaccard — equals minhashLshPairs over the indexed corpus
+    private[graft] def selfPairs(threshold: Double, exactLimit: Long): DataFrame =
+      bucketPairs(buckets, sets, "sh", (a, b) =>
+          size(array_intersect(a, b)).cast("double") / size(array_union(a, b)))
+        .where(col("score") >= threshold)
+        .select(col("id_a"), col("id_b"), round(col("score"), 6).as("jaccard"))
+  }
+
+  object MinhashIndex extends IndexFamily[MinhashIndex]("minhash",
+      Seq("sets" -> StructType(Seq(StructField("id", LongType),
+          StructField("sh", ArrayType(LongType)))),
+        "buckets" -> BucketsSchema),
+      "params",
+      StructType(Seq(StructField("num_hashes", IntegerType),
+        StructField("bands", IntegerType), StructField("shingle_len", IntegerType))),
+      "jaccard") {
+    protected def assemble(fs: Seq[DataFrame], p: Array[Row],
+                           baseline: Option[DriftBaseline]): MinhashIndex =
+      MinhashIndex(fs(1), fs(0), p(0).getAs[Int]("num_hashes"),
+        p(0).getAs[Int]("bands"), p(0).getAs[Int]("shingle_len"), baseline)
+    override private[graft] def requireInPlaceReseed(op: String): Unit =
+      throw new IllegalArgumentException(s"$op: a minhash archive cannot " +
+        "reseed in place (it stores only hashed shingles; re-banding needs " +
+        "the raw corpus) — watch driftDir and call reseedMinhashArchive " +
+        "out-of-band with the stream stopped")
+  }
+
+  private lazy val BucketsSchema =
+    StructType(Seq(StructField("bkt", LongType), StructField("id", LongType)))
+
+  /** (id_a < id_b, score) over the bucket-sharing pairs of a (bkt, id)
+    * key frame — singleton buckets pruned first (they can never emit a
+    * pair and dominate real corpora) — with `score` computed from the
+    * two sides' `payloadCol` hydrated from `payload` (the declarative
+    * audit join; mass-duplicate corpora should mine off the raw corpus
+    * with the block-grid operators instead). */
+  private def bucketPairs(keys: DataFrame, payload: DataFrame, payloadCol: String,
+                          score: (Column, Column) => Column): DataFrame = {
+    val b = keys.select(col("bkt"), col("id"))
+    val multi = b.groupBy(col("bkt")).agg(count(lit(1)).as("m"))
+      .where(col("m") >= 2).select(col("bkt"))
+    val hot = b.join(multi, Seq("bkt"))
+    hot.as("a").join(hot.as("b"),
+        col("a.bkt") === col("b.bkt") && col("a.id") < col("b.id"))
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+      .distinct()
+      .join(payload.select(col("id").as("id_a"), col(payloadCol).as("__pa")), "id_a")
+      .join(payload.select(col("id").as("id_b"), col(payloadCol).as("__pb")), "id_b")
+      .select(col("id_a"), col("id_b"), score(col("__pa"), col("__pb")).as("score"))
+  }
 
   /** (bucket, id) banding keys of a shingled corpus — the md5 pass,
     * factored so the batch grid and the index build band identically. */
@@ -862,40 +1148,6 @@ object Dedup {
       () => { sh.unpersist(false); () })
   }
 
-  /** Persist an index snapshot: `dir/buckets` + `dir/sets` parquet and a
-    * one-row `dir/params` parquet pinning the banding widths. */
-  /** Write independent component frames CONCURRENTLY — an index save
-    * (and therefore every streamed sliver commit through it) otherwise
-    * pays one sequential job wall per component. Failures surface
-    * unwrapped; in-flight siblings finish before the error propagates
-    * (see [[graft.streaming.Par]]). */
-  private def writeConcurrently(writes: (DataFrame, String)*): Unit =
-    graft.streaming.Par.run(writes.map { case (df, path) =>
-      () => df.write.mode("overwrite").parquet(path)
-    })
-
-  def saveMinhashIndex(ix: MinhashIndex, dir: String): Unit = {
-    val spark = ix.buckets.sparkSession
-    import spark.implicits._
-    val params = Seq((ix.numHashes, ix.bands, ix.shingleLen))
-      .toDF("num_hashes", "bands", "shingle_len").coalesce(1)
-    // params and the drift baseline are one-row local frames — they
-    // join the component batch so a save pays ONE commit wall, not four
-    writeConcurrently(Seq(
-      ix.buckets -> s"$dir/buckets", ix.sets -> s"$dir/sets",
-      params -> s"$dir/params") ++
-      driftBaselineDf(ix.baseline, spark).map(_ -> s"$dir/drift"): _*)
-  }
-
-  def loadMinhashIndex(spark: org.apache.spark.sql.SparkSession,
-                       dir: String): MinhashIndex = {
-    val p = spark.read.parquet(s"$dir/params").head()
-    MinhashIndex(spark.read.parquet(s"$dir/buckets"),
-      spark.read.parquet(s"$dir/sets"),
-      p.getAs[Int]("num_hashes"), p.getAs[Int]("bands"),
-      p.getAs[Int]("shingle_len"), loadDriftBaseline(spark, dir))
-  }
-
   /**
    * Near-duplicate pairs INVOLVING a new batch, against an existing
    * index: every (new, old) and (new, new) pair with exact Jaccard ≥
@@ -912,34 +1164,34 @@ object Dedup {
    * set payload — old or new — hydrates only for docs sharing a bucket
    * with the delta. Hot buckets fan out over the same count-sized block
    * grid as the batch operator.
+   *
+   * `hotBucketPairCap` (round 17): the TEXT twin of the embedding
+   * routes' dense-duplicate valve — boilerplate document clusters put
+   * intra-cluster Jaccard above the threshold, making the delta pair
+   * space cluster-quadratic; buckets whose candidate work `m_new × m`
+   * exceeds the cap emit one covering edge per new doc (min-id
+   * verified mate, exact Jaccard in the same merge-count kernel)
+   * instead of the full pair list. Same verdict-preservation contract
+   * as [[SimilarityJoin.lshCosineDeltaPairs]] (CappedEmissionSpec
+   * gates the minhash case too). Default [[SimilarityJoin.AutoCap]]
+   * (r18): SAFE — resolved from session config; Long.MaxValue is the
+   * explicit unbounded opt-out (the pre-r17 path).
+   *
+   * EAGERNESS (r19 probe, documented r20): under a FINITE cap this
+   * method runs the banding pass plus one tiny aggregate (the
+   * hot-bucket probe) at DataFrame-CONSTRUCTION time — the probe's
+   * answer decides the scan plan's shape, so construction blocks on
+   * one driver job and upstream errors surface here rather than at
+   * the first action. One probe per invocation; unbounded
+   * (Long.MaxValue) callers stay fully lazy.
    */
-  /** `hotBucketPairCap` (round 17): the TEXT twin of the embedding
-    * routes' dense-duplicate valve — boilerplate document clusters put
-    * intra-cluster Jaccard above the threshold, making the delta pair
-    * space cluster-quadratic; buckets whose candidate work `m_new × m`
-    * exceeds the cap emit one covering edge per new doc (min-id
-    * verified mate, exact Jaccard in the same merge-count kernel)
-    * instead of the full pair list. Same verdict-preservation contract
-    * as [[SimilarityJoin.lshCosineDeltaPairs]] (CappedEmissionSpec
-    * gates the minhash case too). Default [[SimilarityJoin.AutoCap]]
-    * (r18): SAFE — resolved from session config; Long.MaxValue is the
-    *
-    * EAGERNESS (r19 probe, documented r20): under a FINITE cap this
-    * method runs the banding pass plus one tiny aggregate (the
-    * hot-bucket probe) at DataFrame-CONSTRUCTION time — the probe's
-    * answer decides the scan plan's shape, so construction blocks on
-    * one driver job and upstream errors surface here rather than at
-    * the first action. One probe per invocation; unbounded
-    * (Long.MaxValue) callers stay fully lazy.
-    * explicit unbounded opt-out (the pre-r17 path). */
   def minhashDeltaPairs(ix: MinhashIndex, newDf: DataFrame,
                         idCol: String, textCol: String,
                         threshold: Double = 0.5,
                         hotBucketPairCap: Long = SimilarityJoin.AutoCap): DataFrame = {
     val spark = newDf.sparkSession
     import spark.implicits._
-    requireDeltaDisjoint(ix.sets.select(col("id")), newDf, idCol,
-      "minhashDeltaPairs")
+    requireDeltaDisjoint(idsOf(ix), newDf, idCol, "minhashDeltaPairs")
     val parallelism = math.max(1, spark.sparkContext.defaultParallelism)
     val blockRows = 2048
     val thr = threshold
@@ -1030,33 +1282,6 @@ object Dedup {
           col("is_new")))
   }
 
-  /** Fold a NEW batch into an existing index so the NEXT delta dedups
-    * against (corpus ∪ batch) without a full re-mine. Banding is a pure
-    * per-doc function of text and the pinned widths, so append is an
-    * exact unionByName of banding keys and set payloads — day N's delta
-    * becomes part of day N+1's index at delta cost, which completes the
-    * daily-ingest loop ([[minhashDeltaPairs]] mines the pairs, this
-    * grows the snapshot). The returned frames are lazy; persist with
-    * [[saveMinhashIndex]] to checkpoint the day. Same caller contract
-    * as the delta scan (batch ids disjoint from indexed ids), enforced
-    * by the same flag-gated guard. */
-  def appendToMinhashIndex(ix: MinhashIndex, newDf: DataFrame,
-                           idCol: String, textCol: String): MinhashIndex = {
-    requireDeltaDisjoint(ix.sets.select(col("id")), newDf, idCol,
-      "appendToMinhashIndex")
-    val sh = shingleSets(newDf, idCol, textCol, ix.shingleLen)
-    // copy() carries the drift baseline through — the baseline stays
-    // PINNED at seed time by design (a baseline that absorbed every
-    // append would under-report cumulative drift)
-    ix.copy(
-      buckets = ix.buckets.select(col("bkt"), col("id"))
-        .unionByName(lightBands(sh, ix.numHashes, ix.bands)),
-      sets = ix.sets.select(col("id"), col("sh")).unionByName(hashedSets(sh)))
-  }
-
-  /** True unless the session disables the delta-disjointness guard
-    * (`spark.graft.checkDeltaDisjoint=false`; unparseable values keep
-    * the guard ON — fail safe). */
   /** Driver-side ceiling for the takedown paths' classification
     * collects (one row per victim id): the "collects are
     * takedown-sized" contract made mechanical — the collect is BOUNDED
@@ -1070,6 +1295,9 @@ object Dedup {
       .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
       .getOrElse(2000000)
 
+  /** True unless the session disables the delta-disjointness guard
+    * (`spark.graft.checkDeltaDisjoint=false`; unparseable values keep
+    * the guard ON — fail safe). */
   private[graft] def checkDeltaDisjoint(spark: org.apache.spark.sql.SparkSession): Boolean =
     spark.conf.getOption("spark.graft.checkDeltaDisjoint")
       .forall(v => scala.util.Try(v.trim.toBoolean).getOrElse(true))
@@ -1096,14 +1324,7 @@ object Dedup {
   private val aqeGuardLock = new Object
   private[graft] def withoutAqe(spark: org.apache.spark.sql.SparkSession,
                                 frame: DataFrame): Array[org.apache.spark.sql.Row] = {
-    // A/B switch (-Dgraft.guard.staticPlan=false / GRAFT_GUARD_STATIC):
-    // unparseable keeps the default ON, same fail-safe rule as the
-    // other house flags
-    val enabled = sys.props.get("graft.guard.staticPlan")
-      .orElse(sys.env.get("GRAFT_GUARD_STATIC"))
-      .flatMap(v => scala.util.Try(v.trim.toBoolean).toOption)
-      .getOrElse(true)
-    if (enabled) aqeGuardLock.synchronized {
+    aqeGuardLock.synchronized {
       val key = "spark.sql.adaptive.enabled"
       val prev = spark.conf.getOption(key)
       spark.conf.set(key, "false")
@@ -1250,20 +1471,95 @@ object Dedup {
     * payload, with the signature parameters pinned — hyperplanes are a
     * pure function of (dim, numBits, bands, seed), so an index banded
     * yesterday and a delta banded today bucket identically and reuse is
-    * exact. Same caller contract as [[MinhashIndex]]: delta ids must be
-    * disjoint from indexed ids (enforced by the flag-gated guard). */
+    * exact. */
   final case class CosineIndex(buckets: DataFrame, vecs: DataFrame,
                                numBits: Int, bands: Int, dim: Int,
                                seed: Long,
                                baseline: Option[DriftBaseline] = None)
-    extends DeltaIndex
+      extends DeltaIndex {
+    type Self = CosineIndex
+    def family: IndexFamily[CosineIndex] = CosineIndex
+    def frames: Seq[DataFrame] = Seq(vecs, buckets)
+    private[graft] def withFrames(fs: Seq[DataFrame]): CosineIndex =
+      copy(vecs = fs(0), buckets = fs(1))
+    private[graft] def withBaseline(b: Option[DriftBaseline]): CosineIndex =
+      copy(baseline = b)
+    private[graft] def paramsFrame(spark: SparkSession): DataFrame = {
+      import spark.implicits._
+      Seq((numBits, bands, dim, seed))
+        .toDF("num_bits", "bands", "dim", "seed").coalesce(1)
+    }
+    private[graft] def batch(df: DataFrame, idCol: String, vecCol: String): CosineIndex =
+      buildCosineIndex(df, idCol, vecCol, numBits, bands, dim, seed)
+    private[graft] def pairsAgainst(newDf: DataFrame, idCol: String, vecCol: String,
+                                    threshold: Double, exactLimit: Long,
+                                    hotPairCap: Long): DataFrame =
+      cosineDeltaPairs(this, newDf, idCol, vecCol, threshold, exactLimit, hotPairCap)
+    private[graft] def fold(b: DataFrame, idCol: String, vecCol: String,
+                            threshold: Double, exactLimit: Long,
+                            hotPairCap: Long): Fold =
+      Fold(pairsAgainst(b, idCol, vecCol, threshold, exactLimit, hotPairCap),
+        () => cosineDriftProbe(this, b, idCol, vecCol),
+        () => (batch(b, idCol, vecCol), () => ()))
+    private[graft] def measureBaseline(): DriftBaseline = {
+      val (top, n, bloom) = bucketBaseline(buckets)
+      DriftBaseline(Double.NaN, top, Double.NaN, n, bloom)
+    }
+    // dim never drifts; widths re-auto-size at the CUMULATIVE corpus
+    // row count, and the rotated seed re-randomizes the hyperplanes
+    // against whatever orientation collapsed the old buckets
+    private[graft] def refit(atBatch: Long): CosineIndex =
+      buildCosineIndex(vecs.select(col("id"), col("v")), "id", "v",
+        dim = dim, seed = seed + atBatch + 1L)
+    /** Two-tier like [[cosineDeltaPairs]]: at or under `exactLimit`
+      * stored vectors the EXACT blocked θ-scan (the q15/q97 oracle
+      * shape); above it, LSH candidates off the stored banding keys
+      * verified with exact cosine — precision 1.0, recall the pinned
+      * widths'. */
+    private[graft] def selfPairs(threshold: Double, exactLimit: Long): DataFrame = {
+      // exactLimit=Long.MaxValue (the q85/q97 oracle regime) has already
+      // chosen the exact tier — the tier-pick count would be a pure
+      // driver round-trip
+      val n = if (exactLimit == Long.MaxValue) 0L else vecs.select(col("id")).count()
+      val pairs =
+        if (n <= exactLimit) SimilarityJoin.thresholdPairs(vecs, "id", "v", threshold)
+        else {
+          org.slf4j.LoggerFactory.getLogger(getClass).warn(
+            s"archivePairs: $n stored vectors > exactLimit=$exactLimit — " +
+              s"auditing via the stored LSH banding keys (numBits=$numBits, " +
+              s"bands=$bands): precision 1.0 (exact cosine verification), " +
+              "recall the pinned widths'")
+          bucketPairs(buckets, vecs, "v", cosineSimilarity)
+            .withColumnRenamed("score", "sim").where(col("sim") >= threshold)
+        }
+      pairs.select(col("id_a"), col("id_b"), round(col("sim"), 6).as("sim"))
+    }
+  }
+
+  object CosineIndex extends IndexFamily[CosineIndex]("cosine",
+      Seq("vecs" -> StructType(Seq(StructField("id", LongType),
+          StructField("v", ArrayType(FloatType)))),
+        "buckets" -> BucketsSchema),
+      "params",
+      StructType(Seq(StructField("num_bits", IntegerType),
+        StructField("bands", IntegerType), StructField("dim", IntegerType),
+        StructField("seed", LongType))),
+      "sim") {
+    protected def assemble(fs: Seq[DataFrame], p: Array[Row],
+                           baseline: Option[DriftBaseline]): CosineIndex =
+      CosineIndex(fs(1), fs(0), p(0).getAs[Int]("num_bits"), p(0).getAs[Int]("bands"),
+        p(0).getAs[Int]("dim"), p(0).getAs[Long]("seed"), baseline)
+    // the index stores only non-null vectors
+    override private[graft] def indexed(batch: DataFrame, vecCol: String): DataFrame =
+      batch.where(col(vecCol).isNotNull)
+  }
 
   /** Build a [[CosineIndex]] over `df`. Widths default to the same
     * auto-sizing as [[embeddingNearDupPairs]]'s scale route
     * ([[autoLshBits]]/[[autoLshBands]] at the INDEX corpus size — pin
     * them explicitly if the corpus will grow far past the build size);
     * `dim` is inferred from the data unless given. The returned frames
-    * are lazy — [[saveCosineIndex]] materializes the snapshot. */
+    * are lazy — [[save]] materializes the snapshot. */
   def buildCosineIndex(df: DataFrame, idCol: String, vecCol: String,
                        numBits: Int = -1, bands: Int = -1, dim: Int = -1,
                        seed: Long = 42L): CosineIndex = {
@@ -1289,47 +1585,6 @@ object Dedup {
           col(vecCol).cast("array<float>").as("v"))
         .where(col("v").isNotNull),
       bits, b, d, seed)
-  }
-
-  /** Persist an index snapshot: `dir/buckets` + `dir/vecs` parquet and a
-    * one-row `dir/params` parquet pinning the signature widths. */
-  def saveCosineIndex(ix: CosineIndex, dir: String): Unit = {
-    val spark = ix.buckets.sparkSession
-    import spark.implicits._
-    val params = Seq((ix.numBits, ix.bands, ix.dim, ix.seed))
-      .toDF("num_bits", "bands", "dim", "seed").coalesce(1)
-    writeConcurrently(Seq(
-      ix.buckets -> s"$dir/buckets", ix.vecs -> s"$dir/vecs",
-      params -> s"$dir/params") ++
-      driftBaselineDf(ix.baseline, spark).map(_ -> s"$dir/drift"): _*)
-  }
-
-  def loadCosineIndex(spark: org.apache.spark.sql.SparkSession,
-                      dir: String): CosineIndex = {
-    val p = spark.read.parquet(s"$dir/params").head()
-    CosineIndex(spark.read.parquet(s"$dir/buckets"),
-      spark.read.parquet(s"$dir/vecs"),
-      p.getAs[Int]("num_bits"), p.getAs[Int]("bands"),
-      p.getAs[Int]("dim"), p.getAs[Long]("seed"),
-      loadDriftBaseline(spark, dir))
-  }
-
-  /** Fold a NEW embedding batch into an existing index — the cosine
-    * twin of [[appendToMinhashIndex]]: signatures are a pure per-row
-    * function under the pinned (dim, numBits, bands, seed), so append
-    * is an exact unionByName of signature keys and vector payloads. */
-  def appendToCosineIndex(ix: CosineIndex, newDf: DataFrame,
-                          idCol: String, vecCol: String): CosineIndex = {
-    requireDeltaDisjoint(ix.vecs.select(col("id")), newDf, idCol,
-      "appendToCosineIndex")
-    ix.copy(
-      buckets = ix.buckets.select(col("bkt"), col("id"))
-        .unionByName(SimilarityJoin.cosineBuckets(newDf, idCol, vecCol,
-          ix.numBits, ix.bands, ix.dim, ix.seed)),
-      vecs = ix.vecs.select(col("id"), col("v"))
-        .unionByName(newDf.select(col(idCol).cast("long").as("id"),
-            col(vecCol).cast("array<float>").as("v"))
-          .where(col("v").isNotNull)))
   }
 
   /**
@@ -1368,27 +1623,27 @@ object Dedup {
    *
    * Output: (id_a, id_b, sim), id_a < id_b, sim rounded to 6 — the
    * same shape the batch consumers publish.
+   *
+   * `hotBucketPairCap` (round 17): forwarded to the LSH tier's
+   * [[SimilarityJoin.lshCosineDeltaPairs]] — buckets whose candidate
+   * pair work exceeds the cap emit one covering edge per new row
+   * instead of the full pair space (the dense-duplicate regime; see
+   * that method's verdict-preservation contract). The exact tier is
+   * unaffected: its pair space is already bounded by `exactLimit`².
+   *
+   * EAGERNESS (r19 probe, documented r20): under a FINITE cap this
+   * method runs the banding pass plus one tiny aggregate (the
+   * hot-bucket probe) at DataFrame-CONSTRUCTION time — the probe's
+   * answer decides the scan plan's shape, so construction blocks on
+   * one driver job and upstream errors surface here rather than at
+   * the first action. One probe per invocation; unbounded
+   * (Long.MaxValue) callers stay fully lazy.
    */
-  /** `hotBucketPairCap` (round 17): forwarded to the LSH tier's
-    * [[SimilarityJoin.lshCosineDeltaPairs]] — buckets whose candidate
-    * pair work exceeds the cap emit one covering edge per new row
-    * instead of the full pair space (the dense-duplicate regime; see
-    * that method's verdict-preservation contract). The exact tier is
-    *
-    * EAGERNESS (r19 probe, documented r20): under a FINITE cap this
-    * method runs the banding pass plus one tiny aggregate (the
-    * hot-bucket probe) at DataFrame-CONSTRUCTION time — the probe's
-    * answer decides the scan plan's shape, so construction blocks on
-    * one driver job and upstream errors surface here rather than at
-    * the first action. One probe per invocation; unbounded
-    * (Long.MaxValue) callers stay fully lazy.
-    * unaffected: its pair space is already bounded by `exactLimit`². */
   def cosineDeltaPairs(ix: CosineIndex, newDf: DataFrame,
                        idCol: String, vecCol: String, threshold: Double,
                        exactLimit: Long = 10000L,
                        hotBucketPairCap: Long = SimilarityJoin.AutoCap): DataFrame = {
-    requireDeltaDisjoint(ix.vecs.select(col("id")), newDf, idCol,
-      "cosineDeltaPairs")
+    requireDeltaDisjoint(idsOf(ix), newDf, idCol, "cosineDeltaPairs")
     val cap = SimilarityJoin.resolveHotPairCap(newDf.sparkSession, hotBucketPairCap)
     // ONE tier-pick job (round 17 job diet): the union count replaces
     // two separate count round-trips, and a pinned exactLimit=MaxValue
@@ -1435,12 +1690,76 @@ object Dedup {
     * centroid table itself so every later delta assigns identically
     * (assignment is a pure function of vector + centroids: double-math
     * argmin, strict <, lowest index on ties — the q83/q88 oracle
-    * regime). Same caller contract as the other indexes: delta ids
-    * disjoint from member ids, unique per batch (enforced). */
+    * regime). */
   final case class SemanticIndex(members: DataFrame,
                                  centroids: Array[Array[Float]],
                                  baseline: Option[DriftBaseline] = None)
-    extends DeltaIndex
+      extends DeltaIndex {
+    type Self = SemanticIndex
+    def family: IndexFamily[SemanticIndex] = SemanticIndex
+    def frames: Seq[DataFrame] = Seq(members)
+    private[graft] def withFrames(fs: Seq[DataFrame]): SemanticIndex =
+      copy(members = fs(0))
+    private[graft] def withBaseline(b: Option[DriftBaseline]): SemanticIndex =
+      copy(baseline = b)
+    private[graft] def paramsFrame(spark: SparkSession): DataFrame = {
+      import spark.implicits._
+      centroids.zipWithIndex.map { case (ce, i) => (i, ce.toSeq) }
+        .toSeq.toDF("idx", "ce").coalesce(1)
+    }
+    private[graft] def batch(df: DataFrame, idCol: String, vecCol: String): SemanticIndex =
+      buildSemanticIndex(df, idCol, vecCol, centroids)
+    private[graft] def pairsAgainst(newDf: DataFrame, idCol: String, vecCol: String,
+                                    threshold: Double, exactLimit: Long,
+                                    hotPairCap: Long): DataFrame =
+      semanticDeltaPairs(this, newDf, idCol, vecCol, threshold, hotPairCap)
+    // ONE argmin pass feeds pairs, drift probe and sliver — assignment
+    // is a pure function of vector + pinned centroids, so sharing the
+    // materialized frame is exact (and the guard runs on the raw batch
+    // exactly as the public operator would)
+    private[graft] def fold(b: DataFrame, idCol: String, vecCol: String,
+                            threshold: Double, exactLimit: Long,
+                            hotPairCap: Long): Fold = {
+      requireDeltaDisjoint(idsOf(this), b, idCol, "processBatch")
+      val asg = assignMembers(b, idCol, vecCol, centroids).localCheckpoint()
+      Fold(semanticDeltaPairsAssigned(this, asg, threshold, hotPairCap),
+        () => semanticDriftProbeAssigned(this, asg),
+        () => (SemanticIndex(asg, centroids), () => ()))
+    }
+    private[graft] def measureBaseline(): DriftBaseline =
+      DriftBaseline(memberMeanDist(this), Double.NaN, Double.NaN, 0L, None)
+    // same k, fresh KMeans seed, every member re-assigned — pinned
+    // centroids make in-place recentering impossible by design
+    private[graft] def refit(atBatch: Long): SemanticIndex = {
+      val vs = members.select(col("id"), col("v"))
+      buildSemanticIndex(vs, "id", "v",
+        Clustering.fitCentroids(vs, "v", centroids.length, seed = atBatch + 43L))
+    }
+    /** Within-cluster θ-pairs over the stored assignments (Σcᵢ² pair
+      * work, never n²) — the SemDeDup candidate stage over the indexed
+      * corpus. */
+    private[graft] def selfPairs(threshold: Double, exactLimit: Long): DataFrame =
+      SimilarityJoin.groupedThresholdPairs(
+          members.select(col("cluster"), col("id"), col("v")),
+          "cluster", "id", "v", threshold)
+        .select(col("id_a"), col("id_b"), col("cluster"), round(col("sim"), 6).as("sim"))
+  }
+
+  object SemanticIndex extends IndexFamily[SemanticIndex]("semantic",
+      Seq("members" -> StructType(Seq(StructField("id", LongType),
+        StructField("cluster", IntegerType), StructField("v", ArrayType(FloatType))))),
+      "centroids",
+      StructType(Seq(StructField("idx", IntegerType),
+        StructField("ce", ArrayType(FloatType)))),
+      "sim") {
+    protected def assemble(fs: Seq[DataFrame], p: Array[Row],
+                           baseline: Option[DriftBaseline]): SemanticIndex =
+      SemanticIndex(fs(0), p.sortBy(_.getInt(0)).map(_.getSeq[Float](1).toArray),
+        baseline)
+    // only assignable (non-null) vectors become members
+    override private[graft] def indexed(batch: DataFrame, vecCol: String): DataFrame =
+      batch.where(col(vecCol).isNotNull)
+  }
 
   /** (id, cluster, v) under the pinned centroids — the same in-one-pass
     * argmin kernel as [[semanticDedupMarks]]' assignment stage. */
@@ -1475,26 +1794,6 @@ object Dedup {
                          centroids: Array[Array[Float]]): SemanticIndex =
     SemanticIndex(assignMembers(df, idCol, vecCol, centroids), centroids)
 
-  /** Persist: `dir/members` parquet + `dir/centroids` parquet (idx, ce). */
-  def saveSemanticIndex(ix: SemanticIndex, dir: String): Unit = {
-    val spark = ix.members.sparkSession
-    import spark.implicits._
-    val cents = ix.centroids.zipWithIndex.map { case (ce, i) => (i, ce.toSeq) }
-      .toSeq.toDF("idx", "ce").coalesce(1)
-    writeConcurrently(Seq(
-      ix.members -> s"$dir/members", cents -> s"$dir/centroids") ++
-      driftBaselineDf(ix.baseline, spark).map(_ -> s"$dir/drift"): _*)
-  }
-
-  def loadSemanticIndex(spark: org.apache.spark.sql.SparkSession,
-                        dir: String): SemanticIndex = {
-    val cents = spark.read.parquet(s"$dir/centroids")
-      .orderBy(col("idx")).collect()
-      .map(_.getSeq[Float](1).toArray)
-    SemanticIndex(spark.read.parquet(s"$dir/members"), cents,
-      loadDriftBaseline(spark, dir))
-  }
-
   /**
    * Incremental SemDeDup candidate pairs: assign a NEW embedding batch
    * to the index's pinned centroids and emit every WITHIN-cluster
@@ -1515,8 +1814,7 @@ object Dedup {
                          idCol: String, vecCol: String,
                          threshold: Double,
                          hotClusterPairCap: Long = SimilarityJoin.AutoCap): DataFrame = {
-    requireDeltaDisjoint(ix.members.select(col("id")), newDf, idCol,
-      "semanticDeltaPairs")
+    requireDeltaDisjoint(idsOf(ix), newDf, idCol, "semanticDeltaPairs")
     semanticDeltaPairsAssigned(ix,
       assignMembers(newDf, idCol, vecCol, ix.centroids), threshold,
       hotClusterPairCap)
@@ -1556,148 +1854,6 @@ object Dedup {
         hotGroupPairCap = hotClusterPairCap)
       .select(col("id_a"), col("id_b"), col("cluster"),
         round(col("sim"), 6).as("sim"))
-
-  /** Fold a NEW embedding batch into an existing [[SemanticIndex]] —
-    * the semantic twin of [[appendToMinhashIndex]] /
-    * [[appendToCosineIndex]], completing the third modality's
-    * daily-ingest loop: assignment is a pure function of vector +
-    * pinned centroids (double-math argmin, strict <, lowest index on
-    * ties), so append is an exact unionByName of assigned member rows
-    * at delta cost — day N's delta becomes part of day N+1's archive
-    * with no corpus re-assignment. Centroids stay PINNED (by design —
-    * recentering would change every historical assignment); a drifting
-    * corpus should watch [[semanticDriftProbe]] and rebuild when it
-    * fires. Same caller contract, enforced by the same guard. */
-  def appendToSemanticIndex(ix: SemanticIndex, newDf: DataFrame,
-                            idCol: String, vecCol: String): SemanticIndex = {
-    requireDeltaDisjoint(ix.members.select(col("id")), newDf, idCol,
-      "appendToSemanticIndex")
-    ix.copy(
-      members = ix.members.select(col("id"), col("cluster"), col("v"))
-        .unionByName(assignMembers(newDf, idCol, vecCol, ix.centroids)))
-  }
-
-  // =====================================================================
-  // Retraction — the right-to-be-forgotten / takedown operation on the
-  // incremental indexes. Every component row of every modality is keyed
-  // by its document's id (banding keys, shingle payloads, vectors,
-  // cluster members), so removing previously-indexed documents is an
-  // exact row filter: one anti-join per component, no recompute, no
-  // corpus access — `retract(append(ix, B), B.ids) ≡ ix` bit-for-bit.
-  // The pinned drift baseline stays pinned (seed-scoped, exactly as for
-  // appends — a baseline that tracked every retraction would
-  // under-report cumulative drift). `ids` needs only the id column;
-  // retracting an id the index never held refuses loudly via
-  // [[requireRetractCovered]] (a takedown that silently "removes"
-  // nothing is how the wrong index ships).
-  // =====================================================================
-
-  private def retractIds(ids: DataFrame, idCol: String): DataFrame =
-    ids.select(col(idCol).cast("long").as("id")).distinct()
-
-  /** Remove documents from a [[MinhashIndex]] at anti-join cost. */
-  def retractFromMinhashIndex(ix: MinhashIndex, ids: DataFrame,
-                              idCol: String): MinhashIndex = {
-    requireRetractCovered(ix.sets.select(col("id")), ids, idCol,
-      "retractFromMinhashIndex")
-    retractMinhashCovered(ix, retractIds(ids, idCol))
-  }
-
-  /** The anti-join body of [[retractFromMinhashIndex]] with coverage
-    * ALREADY proven by the caller (ArchiveDedup.forgetDocs classifies
-    * every victim against the live index in its ledger pass — a second
-    * full-component coverage scan here would be pure duplicate cost). */
-  private[graft] def retractMinhashCovered(ix: MinhashIndex,
-                                           rm: DataFrame): MinhashIndex =
-    ix.copy(
-      buckets = ix.buckets.select(col("bkt"), col("id"))
-        .join(rm, Seq("id"), "left_anti").select(col("bkt"), col("id")),
-      sets = ix.sets.select(col("id"), col("sh"))
-        .join(rm, Seq("id"), "left_anti").select(col("id"), col("sh")))
-
-  /** Remove embeddings from a [[CosineIndex]] at anti-join cost. */
-  def retractFromCosineIndex(ix: CosineIndex, ids: DataFrame,
-                             idCol: String): CosineIndex = {
-    requireRetractCovered(ix.vecs.select(col("id")), ids, idCol,
-      "retractFromCosineIndex")
-    retractCosineCovered(ix, retractIds(ids, idCol))
-  }
-
-  /** Coverage-proven body of [[retractFromCosineIndex]]. */
-  private[graft] def retractCosineCovered(ix: CosineIndex,
-                                          rm: DataFrame): CosineIndex =
-    ix.copy(
-      buckets = ix.buckets.select(col("bkt"), col("id"))
-        .join(rm, Seq("id"), "left_anti").select(col("bkt"), col("id")),
-      vecs = ix.vecs.select(col("id"), col("v"))
-        .join(rm, Seq("id"), "left_anti").select(col("id"), col("v")))
-
-  /** Remove members from a [[SemanticIndex]] at anti-join cost
-    * (centroids stay pinned — assignment of the remaining members is
-    * untouched by construction). */
-  def retractFromSemanticIndex(ix: SemanticIndex, ids: DataFrame,
-                               idCol: String): SemanticIndex = {
-    requireRetractCovered(ix.members.select(col("id")), ids, idCol,
-      "retractFromSemanticIndex")
-    retractSemanticCovered(ix, retractIds(ids, idCol))
-  }
-
-  /** Coverage-proven body of [[retractFromSemanticIndex]]. */
-  private[graft] def retractSemanticCovered(ix: SemanticIndex,
-                                            rm: DataFrame): SemanticIndex =
-    ix.copy(members = ix.members.select(col("id"), col("cluster"), col("v"))
-      .join(rm, Seq("id"), "left_anti")
-      .select(col("id"), col("cluster"), col("v")))
-
-  /** Modality-dispatching retraction — the [[deltaPairs]] facade's
-    * forget twin: one call site whatever the index family. */
-  def retract(ix: DeltaIndex, ids: DataFrame, idCol: String): DeltaIndex =
-    ix match {
-      case m: MinhashIndex => retractFromMinhashIndex(m, ids, idCol)
-      case c: CosineIndex => retractFromCosineIndex(c, ids, idCol)
-      case s: SemanticIndex => retractFromSemanticIndex(s, ids, idCol)
-    }
-
-  /**
-   * The unified incremental-dedup facade: route a delta batch against
-   * whichever index modality the archive was built with, normalizing
-   * the output to (id_a, id_b, score), id_a < id_b, score rounded to 6
-   * (Jaccard for the minhash tier, cosine for the other two).
-   *
-   * The modality is chosen ONCE, at index-build time — the measured
-   * decision rule (×100 rows in BENCH.md "Round 10/11"):
-   *
-   *  - raw text, no embeddings → [[MinhashIndex]] (the only text tier);
-   *    singleton-heavy banding prunes hardest, delta ≈ 0.4× rebuild.
-   *  - embeddings over a CLUSTERED corpus (most real embedding spaces)
-   *    → [[SemanticIndex]]: the same within-cluster pair set as the
-   *    LSH tier at ~¼ its delta cost (measured ×100: 2.7 s vs 10.6 s),
-   *    at the price of missing pairs split across clusters (SemDeDup's
-   *    documented approximation).
-   *  - embeddings where cross-cluster pairs must not be missed →
-   *    [[CosineIndex]]: exact tier below `exactLimit` total rows
-   *    (bit-identical to the batch scan), hyperplane-LSH above it
-   *    (precision 1.0, width-bounded recall, logged on switch); expect
-   *    the shuffle floor on clustered corpora (delta ≈ 0.6× rebuild).
-   *
-   * `payloadCol` is the text column for a minhash index and the vector
-   * column otherwise; `exactLimit` only affects the cosine tier.
-   */
-  def deltaPairs(ix: DeltaIndex, newDf: DataFrame, idCol: String,
-                 payloadCol: String, threshold: Double,
-                 exactLimit: Long = 10000L,
-                 hotPairCap: Long = SimilarityJoin.AutoCap): DataFrame = ix match {
-    case m: MinhashIndex =>
-      minhashDeltaPairs(m, newDf, idCol, payloadCol, threshold, hotPairCap)
-        .select(col("id_a"), col("id_b"), col("jaccard").as("score"))
-    case c: CosineIndex =>
-      cosineDeltaPairs(c, newDf, idCol, payloadCol, threshold, exactLimit,
-          hotPairCap)
-        .select(col("id_a"), col("id_b"), col("sim").as("score"))
-    case s: SemanticIndex =>
-      semanticDeltaPairs(s, newDf, idCol, payloadCol, threshold, hotPairCap)
-        .select(col("id_a"), col("id_b"), col("sim").as("score"))
-  }
 
   // =====================================================================
   // Index drift probes — all three incremental indexes PIN their
@@ -1774,40 +1930,16 @@ object Dedup {
   private def bucketBloomOf(keys: DataFrame, nKeys: Long) =
     keys.stat.bloomFilter("bkt", math.max(nKeys, 1L), 0.01)
 
-  /** Compute and pin the seed-time drift baseline (one-time jobs over
-    * the index frames: key count + occupancy share + Bloom build, plus
-    * the family statistic). Call at seed/build time, BEFORE appends —
-    * the baseline deliberately never moves afterwards. The index
-    * frames are lazy: pin on a persisted or save/loaded index so each
-    * stats job scans materialized data instead of re-running the
-    * build (the archive seeds pin from the saved parquet). */
-  def pinDriftBaseline(ix: MinhashIndex): MinhashIndex = {
-    // bucketStats' total IS the key count (one row per key), so the pin
-    // pays (stats -> bloom) plus the set-size mean — one wall, three
-    // jobs, no separate count round-trip (round 17 job diet; Par
-    // establishes happens-before at join, so the vars are safe)
-    var n = 0L; var top = Double.NaN; var mss = Double.NaN
-    var bloom: Option[org.apache.spark.util.sketch.BloomFilter] = None
-    graft.streaming.Par.run(Seq(
-      () => { val (mx, nn) = bucketStats(ix.buckets)
-              n = nn.toLong; top = if (nn == 0.0) 0.0 else mx / nn
-              bloom = Some(bucketBloomOf(ix.buckets, n)) },
-      () => { mss = ix.sets.select(avg(size(col("sh")))).head().getDouble(0) }))
-    ix.copy(baseline = Some(DriftBaseline(Double.NaN, top, mss, n, bloom)))
-  }
-
-  def pinDriftBaseline(ix: CosineIndex): CosineIndex = {
-    // stats -> bloom in sequence: two jobs total (see the minhash twin)
-    val (mx, nn) = bucketStats(ix.buckets)
+  /** (top-bucket share, key count, Bloom over occupied keys) of a
+    * (bkt, id) key frame — the bucket half of a pinned baseline. The
+    * stats total IS the key count (one row per key), so the pin pays
+    * stats then Bloom: two jobs, no separate count round-trip. */
+  private def bucketBaseline(keys: DataFrame)
+      : (Double, Long, Option[org.apache.spark.util.sketch.BloomFilter]) = {
+    val (mx, nn) = bucketStats(keys)
     val n = nn.toLong
-    val top = if (nn == 0.0) 0.0 else mx / nn
-    val bloom = Some(bucketBloomOf(ix.buckets, n))
-    ix.copy(baseline = Some(DriftBaseline(Double.NaN, top, Double.NaN, n, bloom)))
+    (if (nn == 0.0) 0.0 else mx / nn, n, Some(bucketBloomOf(keys, n)))
   }
-
-  def pinDriftBaseline(ix: SemanticIndex): SemanticIndex =
-    ix.copy(baseline = Some(DriftBaseline(
-      memberMeanDist(ix), Double.NaN, Double.NaN, 0L, None)))
 
   /** Mean euclidean distance of the archived members to their own
     * (pinned) centroid — the live-computed seed side of the semantic
@@ -1824,7 +1956,7 @@ object Dedup {
 
   /** The pinned baseline as a one-row local frame (the Bloom rides as
     * a binary column) — shared by [[saveDriftBaseline]] and the
-    * concurrent component batches of the save*Index functions. */
+    * concurrent component batch of [[save]]. */
   private def driftBaselineDf(b: Option[DriftBaseline],
                               spark: org.apache.spark.sql.SparkSession): Option[DataFrame] =
     b.map { bl =>
@@ -2034,9 +2166,11 @@ object Dedup {
         "delta_top_share", "rebuild_recommended")
   }
 
-  /** [[scanBlockPairJaccard]] with a new-batch flag: old×old pairs are
-    * skipped BEFORE any set work (their mining already happened when
-    * the index was built). */
+  /** All qualifying Jaccard pairs of one block pair (`bs == null` →
+    * within-block), sets as sorted hash arrays, with a new-batch flag:
+    * old×old pairs are skipped BEFORE any set work (their mining
+    * already happened when the index was built); all-true flags scan
+    * every pair. */
   private def scanBlockPairJaccardDelta(as: Array[(Long, Array[Long], Boolean)],
                                         bs: Array[(Long, Array[Long], Boolean)],
                                         threshold: Double): Iterator[(Long, Long, Double)] = {
@@ -2124,40 +2258,6 @@ object Dedup {
         }
       }
       if (bestId != Long.MaxValue) out += ((nid, bestId, bestJ))
-      i += 1
-    }
-    out.iterator
-  }
-
-  /** All qualifying Jaccard pairs of one block pair (`bs == null` →
-    * within-block), sets as sorted hash arrays. */
-  private def scanBlockPairJaccard(as: Array[(Long, Array[Long])],
-                                   bs: Array[(Long, Array[Long])],
-                                   threshold: Double): Iterator[(Long, Long, Double)] = {
-    val out = collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-    val B = if (bs == null) as else bs
-    var i = 0
-    while (i < as.length) {
-      val (ia, ha) = as(i)
-      var j = if (bs == null) i + 1 else 0
-      while (j < B.length) {
-        val (ib, hb) = B(j)
-        val sa = ha.length; val sb = hb.length
-        // size-ratio prune: |A∩B| ≤ min ⇒ J ≤ min/max
-        val mn = math.min(sa, sb); val mx = math.max(sa, sb)
-        if (mn > 0 && mn.toDouble / mx >= threshold) {
-          var x = 0; var y = 0; var inter = 0
-          while (x < sa && y < sb) {
-            val a = ha(x); val b = hb(y)
-            if (a < b) x += 1 else if (a > b) y += 1
-            else { inter += 1; x += 1; y += 1 }
-          }
-          val j2 = inter.toDouble / (sa + sb - inter)
-          if (j2 >= threshold)
-            out += (if (ia < ib) (ia, ib, j2) else (ib, ia, j2))
-        }
-        j += 1
-      }
       i += 1
     }
     out.iterator

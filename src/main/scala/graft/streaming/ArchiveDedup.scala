@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, SimilarityJoin}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -9,20 +9,21 @@ import org.apache.spark.sql.streaming.StreamingQuery
 /**
  * The q84/q86 daily-ingest loop as a STREAM: each micro-batch of
  * documents near-dup-dedups against the latest persisted
- * [[Dedup.MinhashIndex]] snapshot at delta cost (old×old never
+ * [[Dedup.DeltaIndex]] snapshot at delta cost (old×old never
  * re-scanned), emits its pairs, and folds itself into a NEW snapshot
  * version so the next batch sees it. The reference's incremental
  * ingestion surface (day_8/main/endpoints.py:13-49,168-208 incremental
  * inserts; day_10/embedders/embedding_pipeline.py:238-314 the
  * incremental-cache regime) composed with the archive-dedup operators.
- * Three modality twins share the machinery: minhash over text, cosine
- * LSH over embeddings, semantic (pinned-centroid) over embeddings.
+ * The lifecycle below is written once over a family descriptor
+ * ([[Dedup.IndexFamily]]: component names and schemas, params file);
+ * the three families — minhash over text, cosine LSH over embeddings,
+ * semantic (pinned-centroid) over embeddings — supply only kernels.
  *
  * == Snapshot layout ==
- * `archiveDir/base` is the seeded day-0 index ([[seedArchive]] /
- * [[seedCosineArchive]] / [[seedSemanticArchive]]); each processed
- * batch b commits `archiveDir/b<id>` containing ONLY that batch's keys
- * and payloads (a batch-sized sliver under the base's pinned
+ * `archiveDir/base` is the seeded day-0 index ([[seedArchive]]); each
+ * processed batch b commits `archiveDir/b<id>` containing ONLY that
+ * batch's keys and payloads (a batch-sized sliver under the base's pinned
  * parameters — banding/assignment is a pure per-row function, so the
  * live index is exactly base ∪ b0 ∪ … ∪ bN). Readers load ALL live
  * entry directories through ONE multi-path parquet relation per
@@ -75,9 +76,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
  * Readers flip to the newest generation; entries it supersedes
  * (including `base` and older generations) GC one compaction cycle
  * later; pairs already emitted remain valid — only FUTURE batches gain
- * the restored recall/cost model. The embedding sinks can trigger this
- * automatically (`autoReseedAfter = n`: n CONSECUTIVE persisted probe
- * trips since the last reseed — durable, replay-safe, re-fires after a
+ * the restored recall/cost model. An embedding archive's sink can
+ * trigger this automatically (`autoReseedAfter = n`: n CONSECUTIVE
+ * persisted probe trips since the last reseed — durable, replay-safe, re-fires after a
  * crash between fold and reseed). The minhash archive stores only
  * hashed shingles, so its reseed ([[reseedMinhashArchive]]) is
  * out-of-band and needs the raw corpus, verified against the archived
@@ -99,58 +100,14 @@ object ArchiveDedup {
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   // =====================================================================
-  // Shared archive mechanics (all three modality twins)
+  // Shared archive mechanics (every index family)
   // =====================================================================
 
-  /** Per-modality file layout: the parquet components a sliver carries,
-    * which of them holds the row ids (for replay verification), and the
-    * pinned-parameter file copied into compacted ranges. */
-  private final case class Layout(components: Seq[String],
-                                  idComponent: String, paramsFile: String)
-  private val MinhashLayout = Layout(Seq("buckets", "sets"), "sets", "params")
-  private val CosineLayout = Layout(Seq("buckets", "vecs"), "vecs", "params")
-  private val SemanticLayout = Layout(Seq("members"), "members", "centroids")
+  private type Family = Dedup.IndexFamily[_ <: Dedup.DeltaIndex]
 
-  // Pinned component schemas (round 17 job diet): a schema-less
-  // spark.read.parquet pays a footer-inference job per NEW path set
-  // before anything executes, and the lifecycle paths (load → forget →
-  // audit) traverse a fresh path set per generation — measured 15-20
-  // pure-inference jobs per q97/q98 run. The components' schemas are
-  // fixed by this file's own writers, so every hot read passes them
-  // explicitly (the sf-battery oracle re-proves byte-equality of the
-  // results).
   private val IdOnlySchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("id",
       org.apache.spark.sql.types.LongType)))
-  private val componentSchemas: Map[String, org.apache.spark.sql.types.StructType] = {
-    import org.apache.spark.sql.types._
-    Map(
-      "buckets" -> StructType(Seq(StructField("bkt", LongType),
-        StructField("id", LongType))),
-      "sets" -> StructType(Seq(StructField("id", LongType),
-        StructField("sh", ArrayType(LongType)))),
-      "vecs" -> StructType(Seq(StructField("id", LongType),
-        StructField("v", ArrayType(FloatType)))),
-      "members" -> StructType(Seq(StructField("id", LongType),
-        StructField("cluster", IntegerType),
-        StructField("v", ArrayType(FloatType)))))
-  }
-  private val MinhashParamsSchema = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(StructField("num_hashes", IntegerType),
-      StructField("bands", IntegerType), StructField("shingle_len", IntegerType)))
-  }
-  private val CosineParamsSchema = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(StructField("num_bits", IntegerType),
-      StructField("bands", IntegerType), StructField("dim", IntegerType),
-      StructField("seed", LongType)))
-  }
-  private val CentroidsSchema = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(StructField("idx", IntegerType),
-      StructField("ce", ArrayType(FloatType))))
-  }
 
   // Hadoop FS, not java.io.File: the archive lives wherever the corpus
   // does (HDFS/S3/local) — same convention as serving.DocStore
@@ -261,7 +218,7 @@ object ArchiveDedup {
   // notebooks) that deletes and re-creates an archive at the same path
   // — or another PROCESS that rewrites a recycled path — gets a fresh
   // key instead of a stale folded-id set (or a stale None) corrupting
-  // covered() / replay-skip decisions; seed*Archive additionally purges
+  // covered() / replay-skip decisions; seedArchive additionally purges
   // the path outright (belt and braces).
   private val manifestCache =
     new java.util.concurrent.ConcurrentHashMap[String, Option[Set[Long]]]()
@@ -305,9 +262,9 @@ object ArchiveDedup {
     while (itG.hasNext) if (itG.next().startsWith(s"$dir/")) itG.remove()
   }
 
-  // One-row generation metadata (params row, pinned drift baseline,
-  // semantic centroids) is immutable once its entry is committed (the
-  // rename is the commit point), so every loadLatest* after the first
+  // Generation metadata (the params file's rows, the pinned drift
+  // baseline) is immutable once its entry is committed (the
+  // rename is the commit point), so every loadLatest after the first
   // stops paying its two probe jobs. Keyed by (path, content token) —
   // one driver-side listStatus over the leaf part-files, no job — so
   // the two in-place writers (seed, compactArchive's dstDir) and
@@ -327,13 +284,6 @@ object ArchiveDedup {
     if (c != null) c.asInstanceOf[T]
     else { val v = f; genMetaCache.putIfAbsent(key, v); v }
   }
-  private def cachedParamsRow(spark: SparkSession, base: String,
-                              schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.Row =
-    genMemo(spark, s"$base/params")(
-      spark.read.schema(schema).parquet(s"$base/params").head())
-  private def cachedDrift(spark: SparkSession,
-                          base: String): Option[Dedup.DriftBaseline] =
-    genMemo(spark, s"$base/drift")(Dedup.loadDriftBaseline(spark, base))
   /** Drop one deleted entry's cached manifest and generation-check
     * memos — GC'd entries otherwise pin their Sets for the JVM's
     * lifetime in a long-lived driver. */
@@ -355,8 +305,8 @@ object ArchiveDedup {
   private val genVerified =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  private def paramRowsOf(spark: SparkSession, path: String): Seq[String] =
-    spark.read.parquet(path).collect().map(_.toString).toSeq.sorted
+  private def paramRowsOf(spark: SparkSession, dir: String, fam: Family): Seq[String] =
+    fam.readParams(spark, dir).map(_.toString).toSeq.sorted
 
   /** Detect the one bad state the reseed commit guard cannot see (its
     * window is the whole in-flight batch, not just check-to-rename): a
@@ -372,14 +322,14 @@ object ArchiveDedup {
     * JVM, so steady state re-reads nothing. */
   private def verifyGenerationConsistency(spark: SparkSession, dir: String,
                                           st: ArchiveState,
-                                          layout: Layout): Unit = {
+                                          fam: Family): Unit = {
     if (st.latestReseed.isEmpty) return
     val gen = baseDirOf(dir, st)
-    lazy val genParams = paramRowsOf(spark, s"$gen/${layout.paramsFile}")
+    lazy val genParams = paramRowsOf(spark, gen, fam)
     st.liveSlivers.foreach { b =>
       val key = s"$dir|b$b|${st.latestReseed.get._1}"
       if (!genVerified.contains(key)) {
-        val sp = paramRowsOf(spark, s"$dir/b$b/${layout.paramsFile}")
+        val sp = paramRowsOf(spark, s"$dir/b$b", fam)
         if (sp != genParams)
           throw new IllegalStateException(
             s"ArchiveDedup: live sliver b$b in $dir was built under " +
@@ -430,16 +380,6 @@ object ArchiveDedup {
       (st.liveRanges.map { case (lo, hi) => s"$dir/c$lo-$hi" } ++
         st.liveSlivers.map(b => s"$dir/b$b"))
 
-  /** One multi-path parquet relation over every live entry's copy of a
-    * component — O(1) plan nodes however old the stream is. Schemas are
-    * pinned (componentSchemas), so no inference job fires per path set. */
-  private def readComponent(spark: SparkSession, dirs: Seq[String],
-                            comp: String): DataFrame =
-    componentSchemas.get(comp)
-      .map(sc => spark.read.schema(sc))
-      .getOrElse(spark.read)
-      .parquet(dirs.map(d => s"$d/$comp"): _*)
-
   /** Write an entry to `.inprogress-<name>` via `write`, then rename
     * into place — the rename is the commit point (see class doc).
     * `beforeRename` runs after the write, immediately before the
@@ -477,12 +417,11 @@ object ArchiveDedup {
     * warning. */
   private def alreadyFolded(spark: SparkSession, archiveDir: String,
                             batchId: Long, batchIds: DataFrame,
-                            layout: Layout): Boolean = {
+                            fam: Family): Boolean = {
     val (fs, _) = hfs(spark, archiveDir)
     val sliver = new Path(s"$archiveDir/b$batchId")
     if (fs.exists(sliver)) {
-      val stored = spark.read.schema(componentSchemas(layout.idComponent))
-        .parquet(s"$archiveDir/b$batchId/${layout.idComponent}")
+      val stored = fam.readFrames(spark, Seq(s"$archiveDir/b$batchId")).head
         .select(col("id"))
       val mismatch = stored.except(batchIds)
         .unionByName(batchIds.except(stored)).limit(1)
@@ -527,7 +466,7 @@ object ArchiveDedup {
     * read a `compactArchive` copy instead — that path never deletes;
     * ArchiveDedupSpec demonstrates both.) */
   private[graft] def maybeCompact(spark: SparkSession, dir: String,
-                                  layout: Layout, compactEvery: Int,
+                                  fam: Family, compactEvery: Int,
                                   currentBatch: Long,
                                   retainCovered: Int = 1): Unit = {
     if (compactEvery <= 0) return
@@ -537,7 +476,7 @@ object ArchiveDedup {
     val live = st0.liveSlivers
     if (live.length >= compactEvery) {
       val oldest = live.take(compactEvery)
-      mergeEntries(spark, dir, layout,
+      mergeEntries(spark, dir, fam,
         oldest.map(b => (s"b$b", b, b)),
         // per-sliver coverage is the sliver's own id: contiguous ids
         // need no manifest (the [lo, hi] interval is exact)
@@ -554,7 +493,7 @@ object ArchiveDedup {
     if (ranges.length >= compactEvery) {
       val oldest = ranges.take(compactEvery)
       val ids = oldest.flatMap(st1.idsOfRange)
-      mergeEntries(spark, dir, layout,
+      mergeEntries(spark, dir, fam,
         oldest.map { case (lo, hi) => (s"c$lo-$hi", lo, hi) },
         if (isContiguous(ids)) None else Some(ids), currentBatch)
     }
@@ -638,7 +577,7 @@ object ArchiveDedup {
     * name). Sources are NOT deleted here — see the deferred-GC
     * contract on [[maybeCompact]]. Crash-safe: the range rename is the
     * commit; a crash beforehand leaves only the sources. */
-  private def mergeEntries(spark: SparkSession, dir: String, layout: Layout,
+  private def mergeEntries(spark: SparkSession, dir: String, fam: Family,
                            entries: Seq[(String, Long, Long)],
                            foldedIds: Option[Seq[Long]],
                            currentBatch: Long): Unit = {
@@ -649,20 +588,20 @@ object ArchiveDedup {
     commitEntry(spark, dir, s"c$lo-$hi") { tmp =>
       // component copies run CONCURRENTLY (independent frames to
       // independent paths — the same commit-wall rationale as
-      // Dedup.saveMinhashIndex's concurrent writes, via Par); the
-      // rename after this callback stays the single commit point
-      Par.run(layout.components.map { c =>
+      // Dedup.save's concurrent writes, via Par); the rename after this
+      // callback stays the single commit point
+      Par.run(fam.components.map { case (c, _) =>
         () =>
           spark.read.parquet(srcDirs.map(d => s"$d/$c"): _*)
             .write.mode("overwrite").parquet(s"$tmp/$c")
       })
       // copy the pinned params from the CURRENT generation so every
-      // entry dir is a self-contained index snapshot (loadMinhashIndex
-      // on a range works) — only live (post-reseed) slivers ever merge,
-      // so the generation's params are the ones they were built under
+      // entry dir is a self-contained index snapshot (Dedup.load on a
+      // range works) — only live (post-reseed) slivers ever merge, so
+      // the generation's params are the ones they were built under
       spark.read
-        .parquet(s"${baseDirOf(dir, stateOf(spark, dir))}/${layout.paramsFile}")
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/${layout.paramsFile}")
+        .parquet(s"${baseDirOf(dir, stateOf(spark, dir))}/${fam.paramsFile}")
+        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/${fam.paramsFile}")
       foldedIds.foreach(ids => ids.toDF("id")
         .coalesce(1).write.mode("overwrite").parquet(s"$tmp/folded"))
       Seq(currentBatch).toDF("id")
@@ -721,6 +660,37 @@ object ArchiveDedup {
     }.getOrElse(false)
   }
 
+  /** The takedown LEDGER of a dedup archive: every doc id ever
+    * forgotten, persisted as a `forgotten` sidecar inside the CURRENT
+    * generation and carried forward through every later generation
+    * commit (forgets union their victims in; reseeds copy it through)
+    * — the dedup twin of the stats archives' x-entry id records. It is
+    * what makes takedowns IDEMPOTENT across crash-retries: a retried
+    * forget whose victims are all on the ledger AND absent from the
+    * live index skips with a warning instead of refusing as "never
+    * archived"; a ledgered id still LIVE in the index was re-ingested
+    * after its takedown and is retracted again (round 15 — the ledger
+    * marks past takedowns, it is not an exemption for future copies),
+    * while genuinely unknown ids (wrong archive) still refuse.
+    * Takedown-sized by construction.
+    * Out-of-band `compactArchive` copies write a fresh `base` without
+    * the ledger — like the stats families, compaction into a fresh dir
+    * ends replay/retry protection (documented there too).
+    *
+    * Returns the ledger riding the current generation, or None when
+    * no takedown ever committed — presence is a DRIVER-SIDE fs check,
+    * so callers never pay an isEmpty job to learn there is no ledger
+    * (a present ledger file is non-empty by construction: commitReseed
+    * only ever writes a ledger that gained at least one victim). */
+  private def forgottenLedger(spark: SparkSession, dir: String,
+                              st: ArchiveState): Option[DataFrame] = {
+    val (fs, _) = hfs(spark, dir)
+    val p = s"${baseDirOf(dir, st)}/forgotten"
+    if (fs.exists(new Path(p)))
+      Some(spark.read.schema(IdOnlySchema).parquet(p).select(col("id")))
+    else None
+  }
+
   /** Commit a reseed generation `r<atBatch>`: `write` fills the temp
     * dir with a full self-contained index (components + params +
     * drift baseline), then the folded-batch manifest is added and the
@@ -744,36 +714,6 @@ object ArchiveDedup {
     * reseed was built from; on mismatch the temp dir is dropped and the
     * commit ABORTS loudly — stop the stream (or let the in-loop
     * auto-reseed do it, which runs inside the batch) and retry. */
-  /** The takedown LEDGER of a dedup archive: every doc id ever
-    * forgotten, persisted as a `forgotten` sidecar inside the CURRENT
-    * generation and carried forward through every later generation
-    * commit (forgets union their victims in; reseeds copy it through)
-    * — the dedup twin of the stats archives' x-entry id records. It is
-    * what makes takedowns IDEMPOTENT across crash-retries: a retried
-    * forget whose victims are all on the ledger AND absent from the
-    * live index skips with a warning instead of refusing as "never
-    * archived"; a ledgered id still LIVE in the index was re-ingested
-    * after its takedown and is retracted again (round 15 — the ledger
-    * marks past takedowns, it is not an exemption for future copies),
-    * while genuinely unknown ids (wrong archive) still refuse.
-    * Takedown-sized by construction.
-    * Out-of-band `compactArchive` copies write a fresh `base` without
-    * the ledger — like the stats families, compaction into a fresh dir
-    * ends replay/retry protection (documented there too). */
-  /** The takedown ledger riding the current generation, or None when
-    * no takedown ever committed — presence is a DRIVER-SIDE fs check,
-    * so callers never pay an isEmpty job to learn there is no ledger
-    * (a present ledger file is non-empty by construction: commitReseed
-    * only ever writes a ledger that gained at least one victim). */
-  private def forgottenLedger(spark: SparkSession, dir: String,
-                              st: ArchiveState): Option[DataFrame] = {
-    val (fs, _) = hfs(spark, dir)
-    val p = s"${baseDirOf(dir, st)}/forgotten"
-    if (fs.exists(new Path(p)))
-      Some(spark.read.schema(IdOnlySchema).parquet(p).select(col("id")))
-    else None
-  }
-
   private def commitReseed(spark: SparkSession, dir: String, atBatch: Long,
                            folded: Set[Long], family: String,
                            builtAtLastFolded: Long,
@@ -847,33 +787,28 @@ object ArchiveDedup {
   // Unified sink facade (streaming twin of Dedup.deltaPairs)
   // =====================================================================
 
-  /** Which modality an archive was built with — the archive is
-    * self-describing: a semantic generation carries `centroids`, the
-    * minhash/cosine families a `params` file whose schema names its
-    * family (read from the CURRENT generation — a reseed never changes
-    * modality), and the corpus-STATISTICS archives
-    * ([[graft.operators.CorpusStats]]) entries whose component layout
-    * names theirs (`df` = token-stats, `pairs` = ngram-stats). The
-    * stats probe inspects ANY committed entry, not just `seed` — the
-    * stats sinks support day-0 streams whose archives never get a
-    * seed entry, and those must still route through the facades. */
-  def modalityOf(spark: SparkSession, dir: String): String = {
-    val st = stateOf(spark, dir)
-    val base = baseDirOf(dir, st)
+  /** The dedup index family of the archive at `dir`, if it is one: the
+    * current generation holds that family's params file and id
+    * component (a reseed never changes family). */
+  private def dedupFamilyOf(spark: SparkSession, dir: String): Option[Family] = {
+    val base = baseDirOf(dir, stateOf(spark, dir))
     val (fs, _) = hfs(spark, dir)
-    if (fs.exists(new Path(s"$base/centroids"))) "semantic"
-    else if (fs.exists(new Path(s"$base/params"))) {
-      // component layout names the family without any job (round 17):
-      // minhash archives always carry sets, cosine always vecs; the
-      // params-columns probe stays as the fallback for exotic layouts
-      if (fs.exists(new Path(s"$base/sets"))) "minhash"
-      else if (fs.exists(new Path(s"$base/vecs"))) "cosine"
-      else {
-        val cols = spark.read.parquet(s"$base/params").columns.toSet
-        if (cols.contains("num_hashes")) "minhash" else "cosine"
-      }
-    }
-    else {
+    Dedup.IndexFamilies.find(f =>
+      Seq(f.paramsFile, f.idComponent).forall(c => fs.exists(new Path(s"$base/$c"))))
+  }
+
+  /** Which family an archive was built with — the archive is
+    * self-describing: a dedup generation carries its family's params
+    * file and id component (read from the CURRENT generation), and the
+    * corpus-STATISTICS archives ([[graft.operators.CorpusStats]])
+    * entries whose component layout names theirs (`df` = token-stats,
+    * `pairs` = ngram-stats). The stats probe inspects ANY committed
+    * entry, not just `seed` — the stats sinks support day-0 streams
+    * whose archives never get a seed entry, and those must still route
+    * through the facades. Driver-side file checks only, no job. */
+  def modalityOf(spark: SparkSession, dir: String): String =
+    dedupFamilyOf(spark, dir).map(_.name).getOrElse {
+      val (fs, _) = hfs(spark, dir)
       val entries =
         if (fs.exists(new Path(dir)))
           fs.listStatus(new Path(dir)).toSeq.map(_.getPath.getName)
@@ -884,22 +819,20 @@ object ArchiveDedup {
         case e if fs.exists(new Path(s"$dir/$e/pairs")) => "ngram-stats"
       }.getOrElse(throw new IllegalArgumentException(
         s"ArchiveDedup.modalityOf: $dir is not a committed archive (no " +
-          "base/{params,centroids} and no stats entry with df/pairs) — " +
-          "seed it with seedArchive / seedCosineArchive / " +
-          "seedSemanticArchive, or CorpusStats.seedTokenStatsArchive / " +
+          "dedup generation and no stats entry with df/pairs) — seed it " +
+          "with seedArchive, or CorpusStats.seedTokenStatsArchive / " +
           "seedNgramStatsArchive (or stream a first batch) first"))
     }
-  }
 
-  /** The STREAMING twin of [[Dedup.deltaPairs]]: one sink entry point
-    * that routes each micro-batch to whichever family the archive at
-    * `archiveDir` was seeded with — the three DEDUP modalities (minhash
+  /** The streaming sink: one entry point that runs each micro-batch
+    * through [[processBatch]] against whichever family the archive at
+    * `archiveDir` was seeded with — the three DEDUP families (minhash
     * with payloadCol = the text column; cosine / semantic with
-    * payloadCol = the vector column) and the two corpus-STATISTICS
-    * families ([[graft.operators.CorpusStats]]: token-stats /
-    * ngram-stats, payloadCol = the text column). The family was chosen
-    * ONCE, at seed time (see the facade's measured decision rule at
-    * [[Dedup.deltaPairs]]); the archive is self-describing, so
+    * payloadCol = the vector column) — or routes to the two
+    * corpus-STATISTICS families ([[graft.operators.CorpusStats]]:
+    * token-stats / ngram-stats, payloadCol = the text column). The
+    * family was chosen ONCE, at seed time (see the measured decision
+    * rule at [[Dedup.deltaPairs]]); the archive is self-describing, so
     * deployment code carries one sink call site whatever it maintains.
     * Mismatched options refuse loudly: a minhash archive REFUSES
     * `autoReseedAfter` (its reseed needs the raw corpus — out-of-band
@@ -907,7 +840,9 @@ object ArchiveDedup {
     * maintains counts, not pairs — REFUSES a pairs sink, a threshold,
     * and the drift/reseed knobs (pass `pairsDir = ""`, `threshold = 0`;
     * `compactEvery` / `retainCovered` / `checkpoint` apply to every
-    * family). */
+    * family). `autoReseedAfter = n > 0` (requires `driftDir`) re-fits
+    * an embedding archive's own parameters in-loop after n consecutive
+    * drift trips — see [[reseedArchive]]. */
   def archiveSink(rows: DataFrame, archiveDir: String, pairsDir: String,
                   idCol: String, payloadCol: String, threshold: Double,
                   exactLimit: Long = 10000L,
@@ -915,24 +850,26 @@ object ArchiveDedup {
                   compactEvery: Int = 8,
                   driftDir: Option[String] = None,
                   autoReseedAfter: Int = 0,
-                  retainCovered: Int = 1): StreamingQuery =
-    modalityOf(rows.sparkSession, archiveDir) match {
-      case "minhash" =>
-        require(autoReseedAfter <= 0,
-          "archiveSink: a minhash archive cannot auto-reseed (re-banding " +
-            "needs the raw corpus) — watch driftDir and call " +
-            "reseedMinhashArchive out-of-band with the stream stopped")
-        archiveDedupSink(rows, archiveDir, pairsDir, idCol, payloadCol,
-          threshold, checkpoint, compactEvery, driftDir, retainCovered)
-      case "cosine" =>
-        cosineArchiveDedupSink(rows, archiveDir, pairsDir, idCol, payloadCol,
-          threshold, exactLimit, checkpoint, compactEvery, driftDir,
-          autoReseedAfter, retainCovered)
-      case "semantic" =>
-        semanticArchiveDedupSink(rows, archiveDir, pairsDir, idCol, payloadCol,
-          threshold, checkpoint, compactEvery, driftDir, autoReseedAfter,
-          retainCovered)
-      case stats =>
+                  retainCovered: Int = 1): StreamingQuery = {
+    requireSaneCompactEvery(compactEvery)
+    dedupFamilyOf(rows.sparkSession, archiveDir) match {
+      case Some(fam) =>
+        require(autoReseedAfter <= 0 || driftDir.nonEmpty,
+          "archiveSink: autoReseedAfter needs driftDir — the trigger reads " +
+            "the persisted probe rows")
+        if (autoReseedAfter > 0) fam.requireInPlaceReseed("archiveSink")
+        warnIfNoCheckpoint(checkpoint, "archiveSink")
+        val w = rows.writeStream
+          .outputMode("append")
+          .foreachBatch { (batch: DataFrame, batchId: Long) =>
+            processBatch(batch, batchId, archiveDir, pairsDir, idCol, payloadCol,
+              threshold, exactLimit, compactEvery, driftDir, autoReseedAfter,
+              retainCovered)
+          }
+        checkpoint.foreach(c => w.option("checkpointLocation", c))
+        w.start()
+      case None =>
+        val stats = modalityOf(rows.sparkSession, archiveDir)
         require(pairsDir.isEmpty && threshold == 0.0,
           s"archiveSink: $archiveDir is a $stats archive — it maintains " +
             "partial COUNTS, not dedup pairs; pass pairsDir = \"\" and " +
@@ -949,44 +886,18 @@ object ArchiveDedup {
           graft.operators.CorpusStats.ngramStatsSink(rows, archiveDir,
             idCol, payloadCol, checkpoint, compactEvery, retainCovered)
     }
+  }
 
-  /** Forget documents IN PLACE from a streamed dedup archive — the
-    * right-to-be-forgotten / takedown operation at archive scale:
-    * rebuild the current generation MINUS `ids` from the archive's own
-    * payload (one anti-join per component via [[Dedup.retract]] —
-    * parameters and centroids unchanged, no corpus access) and commit
-    * it as a full generation entry through the reseed machinery.
-    * Readers flip atomically; superseded entries GC one compaction
-    * cycle later; the stream keeps running and every FUTURE batch
-    * dedups against an archive that no longer contains the forgotten
-    * documents. Pairs already emitted are history — purging them from
-    * the pairs store is the caller's downstream concern. IDEMPOTENT
-    * across crash-retries (round 14): every takedown records its
-    * victims on a `forgotten` ledger that rides through all later
-    * generations (see [[forgottenLedger]]), so re-running a takedown
-    * whose commit was durable skips cleanly and a MIXED batch retracts
-    * only its still-live part. The ledger skip applies ONLY to ids
-    * absent from the live index (round 15): a document forgotten once
-    * but RE-INGESTED in a later batch is both ledgered and live, and a
-    * takedown of it must remove the re-archived copy — classifying it
-    * as a crash-retry replay would report a compliance takedown as
-    * honored while the document stays live. Refuses ids on neither the
-    * ledger nor the live index (a takedown that silently removes
-    * nothing is how the wrong archive ships); a fold racing the commit
-    * aborts loudly exactly as for reseeds — prefer the stream stopped.
-    * A corpus-STATISTICS archive refuses: its entries hold aggregated
-    * counts, not per-document rows — subtracting a document needs its
-    * TEXT ([[graft.operators.CorpusStats.retractFromTokenStats]]), not
-    * just its id. */
   /** Over-cap-safe distinct-id collector (r20 job diet — r19 verdict
     * ask #3): ONE aggregate replaces the r17 probe-then-collect job
     * pair (and the localCheckpoint pin that kept the two consistent).
     * The buffer holds at most `cap` distinct ids; the first id that
     * would exceed the cap flips the overflow flag and CLEARS the
     * buffer, so an over-cap takedown costs O(cap) memory per partial
-    * on its way to a clean refusal — never an unbounded collect_set.
-    * Null inputs are ignored here (the sibling count columns catch
-    * them). Output: (over_cap, sorted distinct ids). */
+    * buffer on its way to a clean refusal — never an unbounded
+    * collect_set ([[forgetDocs]] feeds it one partition, so one
+    * partial). Null inputs are ignored here (the sibling count columns
+    * catch them). Output: (over_cap, sorted distinct ids). */
   private[graft] final case class BoundedIdSet(overCap: Boolean, ids: Array[Long])
 
   private[graft] final class BoundedIdSetBuf extends Serializable {
@@ -1035,6 +946,34 @@ object ArchiveDedup {
       : org.apache.spark.sql.expressions.UserDefinedFunction =
     udaf(new BoundedIdSetAgg(cap), org.apache.spark.sql.Encoders.LONG)
 
+  /** Forget documents IN PLACE from a streamed dedup archive — the
+    * right-to-be-forgotten / takedown operation at archive scale:
+    * rebuild the current generation MINUS `ids` from the archive's own
+    * payload (one anti-join per component via [[Dedup.retract]] —
+    * parameters and centroids unchanged, no corpus access) and commit
+    * it as a full generation entry through the reseed machinery.
+    * Readers flip atomically; superseded entries GC one compaction
+    * cycle later; the stream keeps running and every FUTURE batch
+    * dedups against an archive that no longer contains the forgotten
+    * documents. Pairs already emitted are history — purging them from
+    * the pairs store is the caller's downstream concern. IDEMPOTENT
+    * across crash-retries (round 14): every takedown records its
+    * victims on a `forgotten` ledger that rides through all later
+    * generations (see [[forgottenLedger]]), so re-running a takedown
+    * whose commit was durable skips cleanly and a MIXED batch retracts
+    * only its still-live part. The ledger skip applies ONLY to ids
+    * absent from the live index (round 15): a document forgotten once
+    * but RE-INGESTED in a later batch is both ledgered and live, and a
+    * takedown of it must remove the re-archived copy — classifying it
+    * as a crash-retry replay would report a compliance takedown as
+    * honored while the document stays live. Refuses ids on neither the
+    * ledger nor the live index (a takedown that silently removes
+    * nothing is how the wrong archive ships); a fold racing the commit
+    * aborts loudly exactly as for reseeds — prefer the stream stopped.
+    * A corpus-STATISTICS archive refuses: its entries hold aggregated
+    * counts, not per-document rows — subtracting a document needs its
+    * TEXT ([[graft.operators.CorpusStats.retractFromTokenStats]]), not
+    * just its id. */
   def forgetDocs(spark: SparkSession, dir: String, ids: DataFrame,
                  idCol: String = "id"): Unit =
     // "one maintainer per archive directory", made mechanical: a second
@@ -1044,21 +983,17 @@ object ArchiveDedup {
     // takes the lease — its race with a leased takedown stays handled
     // by commitReseed's abort, which is the forget-under-load contract.
     MaintenanceLease.withLease(spark, dir, "forgetDocs") {
-    val modality = modalityOf(spark, dir)
-    require(modality == "minhash" || modality == "cosine" || modality == "semantic",
-      s"forgetDocs: $dir is a $modality archive — stats archives hold " +
-        "aggregated counts, not per-document rows; subtracting a " +
-        "document needs its TEXT. Use CorpusStats.retractFrom" +
+    val famOpt = dedupFamilyOf(spark, dir)
+    require(famOpt.nonEmpty,
+      s"forgetDocs: $dir is a ${modalityOf(spark, dir)} archive — stats " +
+        "archives hold aggregated counts, not per-document rows; " +
+        "subtracting a document needs its TEXT. Use CorpusStats.retractFrom" +
         "{Token,Ngram}StatsArchive(spark, dir, docsWithText) — the " +
         "in-place stats twin of this operation.")
+    val fam = famOpt.get
     val st = stateOf(spark, dir)
     val (fs, _) = hfs(spark, dir)
-    val layout = modality match {
-      case "minhash" => MinhashLayout
-      case "cosine" => CosineLayout
-      case _ => SemanticLayout
-    }
-    verifyGenerationConsistency(spark, dir, st, layout)
+    verifyGenerationConsistency(spark, dir, st, fam)
     // IDEMPOTENT RETRY against the takedown ledger (round 14), refined
     // round 15: only ledgered ids ABSENT from the live index drop out
     // as crash-retry replays — a ledgered id still present in the
@@ -1069,10 +1004,10 @@ object ArchiveDedup {
     // ONE job — victims outer-joined against the ledger and the live
     // id component, collected takedown-sized — so a crash-retry replay
     // costs one probe, and the retraction's coverage is proven here
-    // (Dedup.retract*Covered skips the second full-component scan).
+    // (Dedup.retractCovered skips the second full-component scan).
     val ledger = forgottenLedger(spark, dir, st)
-    val liveIds = readComponent(spark, entryDirsOf(dir, st),
-      layout.idComponent).select(col("id"))
+    val liveIds = fam.readFrames(spark, entryDirsOf(dir, st)).head
+      .select(col("id"))
     import spark.implicits._
     val cap = Dedup.takedownCollectCap(spark)
     // classification in TWO bounded static-planned jobs (r20 job diet —
@@ -1090,9 +1025,12 @@ object ArchiveDedup {
     // cap/null/unknown refusals as before. The r17 localCheckpoint pin
     // (probe and collect_set had to see the same materialization of a
     // possibly non-deterministic ids source) is obsolete: the single
-    // job reads the ids exactly once.
+    // job reads the ids exactly once. The ids are coalesced to ONE
+    // partition first, so exactly one partial buffer exists and it
+    // never holds more than cap+1 ids (a narrow coalesce: no exchange,
+    // no extra job).
     val probe = Dedup.withoutAqe(spark,
-      ids.select(col(idCol).cast("long").as("id"))
+      ids.select(col(idCol).cast("long").as("id")).coalesce(1)
         .agg(count(lit(1)).as("n_rows"), count(col("id")).as("n_ids"),
           boundedIdSetUdaf(cap)(col("id")).as("vs"))).head
     require(probe.getLong(0) == probe.getLong(1),
@@ -1105,7 +1043,6 @@ object ArchiveDedup {
         "classification holds one driver-side entry per victim; split " +
         "the takedown into smaller batches (or raise the cap)")
     val victimIds = vs.getSeq[Long](1).toArray
-    import spark.implicits._
     val vdf = victimIds.toSeq.toDF("id")
     val membership = Dedup.withoutAqe(spark,
       ledger.map(_.select(col("id"), lit("L").as("k")))
@@ -1140,34 +1077,16 @@ object ArchiveDedup {
     // sliver names (b<id>) are a different namespace, so no collision
     val atBatch = Iterator.iterate(math.max(0L, st.lastFolded))(_ + 1L)
       .find(id => !fs.exists(new Path(s"$dir/r$id"))).get
-    // retract*Covered deliberately carries the PINNED drift baseline
+    // retractCovered deliberately carries the PINNED drift baseline
     // through (seed-scoped, exactly as for appends — a baseline that
     // re-snapshotted at every takedown would under-report cumulative
-    // drift and mute autoReseed), and save*Index persists it; no
+    // drift and mute autoReseed), and Dedup.save persists it; no
     // re-pin here, by contract and to skip the extra full-index scan
-    modality match {
-      case "minhash" =>
-        val ix = loadLatest(spark, dir)._1
-        commitReseed(spark, dir, atBatch, st.allFoldedIds,
-          "minhash forget", builtAtLastFolded = st.lastFolded,
-          forgotten = Some(newLedger))(
-          Dedup.saveMinhashIndex(
-            Dedup.retractMinhashCovered(ix, liveVictims), _))
-      case "cosine" =>
-        val ix = loadLatestCosine(spark, dir)._1
-        commitReseed(spark, dir, atBatch, st.allFoldedIds,
-          "cosine forget", builtAtLastFolded = st.lastFolded,
-          forgotten = Some(newLedger))(
-          Dedup.saveCosineIndex(
-            Dedup.retractCosineCovered(ix, liveVictims), _))
-      case _ =>
-        val ix = loadLatestSemantic(spark, dir)._1
-        commitReseed(spark, dir, atBatch, st.allFoldedIds,
-          "semantic forget", builtAtLastFolded = st.lastFolded,
-          forgotten = Some(newLedger))(
-          Dedup.saveSemanticIndex(
-            Dedup.retractSemanticCovered(ix, liveVictims), _))
-    }
+    val ix = loadLatest(spark, dir, fam)._1
+    commitReseed(spark, dir, atBatch, st.allFoldedIds,
+      s"${fam.name} forget", builtAtLastFolded = st.lastFolded,
+      forgotten = Some(newLedger))(
+      Dedup.save(Dedup.retractCovered(ix, liveVictims), _))
     }
 
   /** The TAKEDOWN twin of [[archiveSink]]: one call site that forgets
@@ -1203,163 +1122,73 @@ object ArchiveDedup {
     }
 
   // =====================================================================
-  // MinHash twin (text)
+  // The archive lifecycle, once for every index family
   // =====================================================================
 
-  /** Write the day-0 archive: mine `corpus` once, save as `dir/base`. */
-  def seedArchive(corpus: DataFrame, dir: String, idCol: String,
-                  textCol: String, numHashes: Int = 16, bands: Int = 4,
-                  shingleLen: Int = 3): Unit = {
-    val spark = corpus.sparkSession
+  /** Save `ix` under `dir` and pin its drift baseline from the SAVED
+    * frames — the stats jobs scan the written parquet instead of
+    * re-running the lazy build (the parameters are the ones just built;
+    * only the frames re-point, so no params re-read job). */
+  private def saveWithBaseline(ix: Dedup.DeltaIndex, dir: String): Unit = {
+    val spark = ix.frames.head.sparkSession
+    Dedup.save(ix, dir)
+    Dedup.saveDriftBaseline(dir, Dedup.pinDriftBaseline(
+      ix.withFrames(ix.family.readFrames(spark, Seq(dir)))).baseline, spark)
+  }
+
+  /** Write the day-0 archive: save the (lazily built) index `ix` as
+    * `dir/base` with its drift baseline pinned. Build it with the
+    * family's builder — [[Dedup.buildMinhashIndex]],
+    * [[Dedup.buildCosineIndex]] (widths auto-size at the seed corpus
+    * and stay PINNED for every later sliver — pass explicit widths if
+    * the stream will far outgrow the seed) or [[Dedup.buildSemanticIndex]]
+    * (centroids PINNED forever); watch the drift probes via `driftDir`
+    * for when the pinned parameters stop fitting. */
+  def seedArchive(ix: Dedup.DeltaIndex, dir: String): Unit = {
     purgeManifestCache(dir)
-    val built = Dedup.buildMinhashIndex(corpus, idCol, textCol,
-      numHashes, bands, shingleLen)
-    Dedup.saveMinhashIndex(built, s"$dir/base")
-    // pin the drift baseline from the SAVED frames — stats jobs scan
-    // the written parquet instead of re-running the lazy shingle pass
-    // (the widths are the ones just built; only the frames re-point,
-    // so no params re-read job)
-    Dedup.saveDriftBaseline(s"$dir/base",
-      Dedup.pinDriftBaseline(built.copy(
-        buckets = spark.read.schema(componentSchemas("buckets"))
-          .parquet(s"$dir/base/buckets"),
-        sets = spark.read.schema(componentSchemas("sets"))
-          .parquet(s"$dir/base/sets"))).baseline,
-      spark)
+    saveWithBaseline(ix, s"$dir/base")
   }
 
   /** (live index = current generation ∪ every live entry, last folded
-    * batchId or -1). */
-  private[graft] def loadLatest(spark: SparkSession, dir: String,
-                                withDrift: Boolean = true): (Dedup.MinhashIndex, Long) = {
+    * batchId or -1). The pinned parameters come from the generation
+    * dir — every LIVE sliver was built under them (a reseed rebuilds
+    * the whole corpus, so pre-reseed slivers never mix in). */
+  private[graft] def loadLatest[I <: Dedup.DeltaIndex](
+      spark: SparkSession, dir: String, fam: Dedup.IndexFamily[I],
+      withDrift: Boolean = true): (I, Long) = {
     val st = stateOf(spark, dir)
-    verifyGenerationConsistency(spark, dir, st, MinhashLayout)
+    verifyGenerationConsistency(spark, dir, st, fam)
     val base = baseDirOf(dir, st)
-    val p = cachedParamsRow(spark, base, MinhashParamsSchema)
-    val dirs = entryDirsOf(dir, st)
-    (Dedup.MinhashIndex(
-      readComponent(spark, dirs, "buckets").select(col("bkt"), col("id")),
-      readComponent(spark, dirs, "sets").select(col("id"), col("sh")),
-      p.getAs[Int]("num_hashes"), p.getAs[Int]("bands"),
-      p.getAs[Int]("shingle_len"),
-      if (withDrift) cachedDrift(spark, base) else None),
+    (fam.read(spark, entryDirsOf(dir, st),
+      genMemo(spark, s"$base/${fam.paramsFile}")(fam.readParams(spark, base)),
+      if (withDrift) genMemo(spark, s"$base/drift")(Dedup.loadDriftBaseline(spark, base))
+      else None),
       st.lastFolded)
   }
 
   /** AUDIT the live archive: near-duplicate pairs AMONG the archived
-    * corpus, mined from the archive's own stored components, dispatched
-    * on the archive's modality — so the takedown/retraction story is
+    * corpus, mined from the archive's own stored components by the
+    * family's audit kernel — so the takedown/retraction story is
     * INSPECTABLE without the raw corpus for all three dedup families:
     * after a [[forgetDocs]], this emits exactly the batch pair operator
     * over the SURVIVORS (banding/assignment is per-doc deterministic
     * and retraction is an exact row filter — the q96/q97/q98 oracles
-    * replay that equivalence in SQL).
-    *
-    *  - '''minhash''': banding keys give the LSH candidates
-    *    (bucket-equality self-join, singleton buckets pruned first:
-    *    they can never emit a pair and dominate real corpora), the
-    *    stored hashed shingle sets give the exact Jaccard — equals
-    *    [[Dedup.minhashLshPairs]] over the archived corpus. Output
-    *    (id_a, id_b, jaccard). Mass-duplicate corpora whose hot
-    *    buckets need the block-grid fan-out should mine pairs off the
-    *    raw corpus with minhashLshPairs instead — an audit favors the
-    *    declarative join.
-    *  - '''cosine''': two-tier like [[Dedup.cosineDeltaPairs]] — at or
-    *    under `exactLimit` stored vectors the EXACT blocked θ-scan
-    *    ([[graft.operators.SimilarityJoin.thresholdPairs]], the q15/q97
-    *    oracle shape); above it, LSH candidates off the stored banding
-    *    keys (singleton-pruned self-join) verified with exact cosine on
-    *    the stored vectors — precision 1.0, recall the pinned widths'.
-    *    Output (id_a, id_b, sim).
-    *  - '''semantic''': within-cluster θ-pairs over the stored member
-    *    assignments ([[graft.operators.SimilarityJoin.groupedThresholdPairs]]
-    *    — Σcᵢ² pair work, never n²), exactly the SemDeDup candidate
-    *    stage over the archived corpus. Output (id_a, id_b, cluster,
-    *    sim). */
+    * replay that equivalence in SQL). minhash: (id_a, id_b, jaccard),
+    * equal to [[Dedup.minhashLshPairs]] over the archived corpus;
+    * cosine: (id_a, id_b, sim), exact θ-scan at or under `exactLimit`
+    * stored vectors, stored-key LSH candidates above it; semantic:
+    * (id_a, id_b, cluster, sim), within-cluster θ-pairs. */
   def archivePairs(spark: SparkSession, dir: String, threshold: Double,
-                   exactLimit: Long = 10000L): DataFrame =
-    modalityOf(spark, dir) match {
-      case "minhash" => minhashArchivePairs(spark, dir, threshold)
-      case "cosine" => cosineArchivePairs(spark, dir, threshold, exactLimit)
-      case "semantic" => semanticArchivePairs(spark, dir, threshold)
-      case stats => throw new IllegalArgumentException(
-        s"archivePairs: $dir is a $stats archive — it holds aggregated " +
-          "counts, not per-document index rows; there are no pairs to audit")
-    }
-
-  private def minhashArchivePairs(spark: SparkSession, dir: String,
-                                  threshold: Double): DataFrame = {
-    // audits mine pairs from stored components and write nothing — the
-    // pinned drift baseline is dead weight here, so its read job is
+                   exactLimit: Long = 10000L): DataFrame = {
+    val fam = dedupFamilyOf(spark, dir)
+    require(fam.nonEmpty,
+      s"archivePairs: $dir is a ${modalityOf(spark, dir)} archive — it " +
+        "holds aggregated counts, not per-document index rows; there are " +
+        "no pairs to audit")
+    // audits write nothing, so the pinned drift baseline's read job is
     // skipped (round 17 job diet)
-    val (ix, _) = loadLatest(spark, dir, withDrift = false)
-    val b = ix.buckets.select(col("bkt"), col("id"))
-    val multi = b.groupBy(col("bkt")).agg(count(lit(1)).as("m"))
-      .where(col("m") >= 2).select(col("bkt"))
-    val hot = b.join(multi, Seq("bkt"))
-    val cand = hot.as("a").join(hot.as("b"),
-        col("a.bkt") === col("b.bkt") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-    cand
-      .join(ix.sets.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(ix.sets.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        (size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b")))).as("jaccard"))
-      .where(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
-  }
-
-  private def cosineArchivePairs(spark: SparkSession, dir: String,
-                                 threshold: Double,
-                                 exactLimit: Long): DataFrame = {
-    import graft.operators.SimilarityJoin
-    val (ix, _) = loadLatestCosine(spark, dir, withDrift = false)
-    // callers that pin exactLimit=Long.MaxValue (the q85/q97 oracle
-    // regime) have already chosen the exact tier — the row-count job
-    // that picks the tier would be a pure driver round-trip (r16 ADVICE)
-    val n = if (exactLimit == Long.MaxValue) 0L
-      else ix.vecs.select(col("id")).count()
-    val pairs =
-      if (n <= exactLimit)
-        SimilarityJoin.thresholdPairs(ix.vecs, "id", "v", threshold)
-      else {
-        log.warn(s"archivePairs: $n stored vectors > exactLimit=" +
-          s"$exactLimit — auditing via the stored LSH banding keys " +
-          s"(numBits=${ix.numBits}, bands=${ix.bands}): precision 1.0 " +
-          "(exact cosine verification), recall the pinned widths'")
-        val b = ix.buckets.select(col("bkt"), col("id"))
-        val multi = b.groupBy(col("bkt")).agg(count(lit(1)).as("m"))
-          .where(col("m") >= 2).select(col("bkt"))
-        val hot = b.join(multi, Seq("bkt"))
-        val cand = hot.as("a").join(hot.as("b"),
-            col("a.bkt") === col("b.bkt") && col("a.id") < col("b.id"))
-          .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-          .distinct()
-        // declarative hydrate-and-verify, as the minhash audit does with
-        // its shingle sets (mass-duplicate corpora should mine off the
-        // raw corpus with lshCosinePairs' block grid instead)
-        cand
-          .join(ix.vecs.select(col("id").as("id_a"), col("v").as("__va")), "id_a")
-          .join(ix.vecs.select(col("id").as("id_b"), col("v").as("__vb")), "id_b")
-          .select(col("id_a"), col("id_b"),
-            graft.functions.VectorFunctions
-              .cosineSimilarity(col("__va"), col("__vb")).as("sim"))
-          .where(col("sim") >= threshold)
-      }
-    pairs.select(col("id_a"), col("id_b"), round(col("sim"), 6).as("sim"))
-  }
-
-  private def semanticArchivePairs(spark: SparkSession, dir: String,
-                                   threshold: Double): DataFrame = {
-    import graft.operators.SimilarityJoin
-    val (ix, _) = loadLatestSemantic(spark, dir, withDrift = false)
-    SimilarityJoin.groupedThresholdPairs(
-        ix.members.select(col("cluster"), col("id"), col("v")),
-        "cluster", "id", "v", threshold)
-      .select(col("id_a"), col("id_b"), col("cluster"),
-        round(col("sim"), 6).as("sim"))
+    loadLatest(spark, dir, fam.get, withDrift = false)._1
+      .selfPairs(threshold, exactLimit)
   }
 
   /** Fold every entry into a fresh self-contained base at `dstDir`
@@ -1371,20 +1200,64 @@ object ArchiveDedup {
       // dstDir may have been READ by this JVM before (re-compacting
       // into a recycled dir): drop its memoized generation metadata so
       // the fresh base/params is what loaders see, same convention as
-      // the seeds' purge
+      // the seed's purge
       purgeManifestCache(dstDir)
-      val (live, _) = loadLatest(spark, dir)
-      Dedup.saveMinhashIndex(live, s"$dstDir/base")
+      Dedup.save(loadLatest(spark, dir, familyOf(spark, dir, "compactArchive"))._1,
+        s"$dstDir/base")
     }
 
-  /** Out-of-band minhash reseed under NEW widths: unlike the embedding
-    * twins, the archive stores only HASHED shingles — re-banding needs
-    * the RAW corpus, so the caller supplies the full current document
-    * set (VERIFIED against the archived id set: a partial corpus would
-    * silently shrink dedup coverage). Commits generation
-    * `r<lastFolded>` like [[reseedCosineArchive]]; the stream keeps
-    * running against the same dir and later slivers band under the new
-    * widths. */
+  private def familyOf(spark: SparkSession, dir: String, op: String): Family =
+    dedupFamilyOf(spark, dir).getOrElse(throw new IllegalArgumentException(
+      s"$op: $dir is a ${modalityOf(spark, dir)} archive, not a dedup archive"))
+
+  /** Commit `nix` — a full rebuild under re-fitted parameters — as
+    * generation `r<atBatch>` with a fresh pinned drift baseline. */
+  private def commitRefit(spark: SparkSession, dir: String, st: ArchiveState,
+                          atBatch: Long, nix: Dedup.DeltaIndex): Unit =
+    commitReseed(spark, dir, atBatch, st.allFoldedIds, nix.family.name,
+        builtAtLastFolded = st.lastFolded,
+        // the takedown ledger rides through parameter reseeds too —
+        // otherwise the superseded forget generation's GC would end
+        // crash-retry protection for past takedowns
+        forgotten = forgottenLedger(spark, dir, st))(saveWithBaseline(nix, _))
+
+  /** Reseed an embedding archive IN PLACE from its own payload: the
+    * family's re-fit kernel rebuilds the full index (cosine: widths
+    * re-auto-sized at the cumulative corpus and a rotated hyperplane
+    * seed; semantic: k centroids re-fitted with a fresh KMeans seed and
+    * every member re-assigned), a fresh drift baseline is pinned, and
+    * the result commits as generation `r<lastFolded>`. Readers and
+    * later batches flip atomically; superseded entries GC one
+    * compaction cycle later; pairs already written remain valid.
+    * Callable out-of-band, or automatic via the sink's
+    * `autoReseedAfter`. Cost ≈ one seed build over the cumulative
+    * corpus. A minhash archive refuses — it stores only hashed
+    * shingles; see [[reseedMinhashArchive]]. */
+  def reseedArchive(spark: SparkSession, dir: String): Unit =
+    // the OUT-OF-BAND entry point leases; the sink's in-loop auto-reseed
+    // calls reseedInPlace directly (serialized by the stream itself)
+    MaintenanceLease.withLease(spark, dir, "reseedArchive") {
+      val st = stateOf(spark, dir)
+      require(st.lastFolded >= 0L,
+        s"reseedArchive: no batches folded in $dir yet — nothing to reseed")
+      reseedInPlace(spark, dir, familyOf(spark, dir, "reseedArchive"), st,
+        st.lastFolded)
+    }
+
+  private[graft] def reseedInPlace(spark: SparkSession, dir: String, fam: Family,
+                                   st: ArchiveState, atBatch: Long): Unit = {
+    fam.requireInPlaceReseed("reseedArchive")
+    commitRefit(spark, dir, st, atBatch,
+      loadLatest(spark, dir, fam)._1.refit(atBatch))
+  }
+
+  /** Out-of-band minhash reseed under NEW widths: the archive stores
+    * only HASHED shingles, so re-banding needs the RAW corpus — the
+    * caller supplies the full current document set (VERIFIED against
+    * the archived id set: a partial corpus would silently shrink dedup
+    * coverage). Commits generation `r<lastFolded>` like
+    * [[reseedArchive]]; the stream keeps running against the same dir
+    * and later slivers band under the new widths. */
   def reseedMinhashArchive(corpus: DataFrame, dir: String, idCol: String,
                            textCol: String, numHashes: Int = 16,
                            bands: Int = 4, shingleLen: Int = 3): Unit = {
@@ -1394,7 +1267,7 @@ object ArchiveDedup {
     require(st.lastFolded >= 0L,
       s"reseedMinhashArchive: no batches folded in $dir yet — reseed the " +
         "base out-of-band with seedArchive into a fresh dir instead")
-    val (ix, _) = loadLatest(spark, dir)
+    val (ix, _) = loadLatest(spark, dir, Dedup.MinhashIndex)
     val ids = corpus.select(col(idCol).cast("long").as("id")).distinct()
     val archived = ix.sets.select(col("id"))
     val mismatch = archived.except(ids)
@@ -1403,19 +1276,8 @@ object ArchiveDedup {
       s"reseedMinhashArchive: the supplied corpus's ids differ from the " +
         s"archived id set of $dir — a reseed must cover EXACTLY the " +
         "archived documents (pass the full current document set)")
-    val nix = Dedup.buildMinhashIndex(corpus, idCol, textCol,
-      numHashes, bands, shingleLen)
-    commitReseed(spark, dir, st.lastFolded, st.allFoldedIds, "minhash",
-        builtAtLastFolded = st.lastFolded,
-        // the takedown ledger rides through parameter reseeds too —
-        // otherwise the superseded forget generation's GC would end
-        // crash-retry protection for past takedowns
-        forgotten = forgottenLedger(spark, dir, st)) { tmp =>
-      Dedup.saveMinhashIndex(nix, tmp)
-      Dedup.saveDriftBaseline(tmp,
-        Dedup.pinDriftBaseline(Dedup.loadMinhashIndex(spark, tmp)).baseline,
-        spark)
-    }
+    commitRefit(spark, dir, st, st.lastFolded,
+      Dedup.buildMinhashIndex(corpus, idCol, textCol, numHashes, bands, shingleLen))
     }
   }
 
@@ -1423,214 +1285,52 @@ object ArchiveDedup {
     * driving their own batch loop): dedup `batch` against the latest
     * snapshot, write its pairs under `pairsDir/batch_id=<id>`, fold it
     * into snapshot `b<id>`, auto-compact when `compactEvery` live
-    * slivers/ranges accumulate, and (when `driftDir` is set) emit a
-    * [[Dedup.minhashDriftProbe]] row under `driftDir/batch_id=<id>`.
-    * Replay-safe: an existing/covered `b<id>` means this batch already
-    * ran — both effects are skipped/overwritten, never doubled (with
-    * id verification against the stored sliver, see class doc). */
+    * slivers/ranges accumulate, and (when `driftDir` is set) emit the
+    * family's drift-probe row under `driftDir/batch_id=<id>`.
+    * `autoReseedAfter = n > 0` (requires `driftDir`) additionally runs
+    * the in-place reseed once n consecutive probes recommend a rebuild.
+    * `exactLimit` only affects the cosine family. Replay-safe: an
+    * existing/covered `b<id>` means this batch already ran — both
+    * effects are skipped/overwritten, never doubled (with id
+    * verification against the stored sliver, see class doc). */
   private[graft] def processBatch(batch: DataFrame, batchId: Long,
                                   archiveDir: String, pairsDir: String,
-                                  idCol: String, textCol: String,
+                                  idCol: String, payloadCol: String,
                                   threshold: Double,
+                                  exactLimit: Long = 10000L,
                                   compactEvery: Int = 8,
                                   driftDir: Option[String] = None,
+                                  autoReseedAfter: Int = 0,
                                   retainCovered: Int = 1,
-                                  hotBucketPairCap: Long = graft.operators.SimilarityJoin.AutoCap): Unit = {
+                                  hotPairCap: Long = SimilarityJoin.AutoCap): Unit = {
     val spark = batch.sparkSession
-    // one materialization of the batch feeds banding, sets, guard, and
-    // the fold — micro-batches are delta-sized by definition
-    val b = batch.select(col(idCol).cast("long").as(idCol), col(textCol))
+    val fam = familyOf(spark, archiveDir, "processBatch")
+    // one materialization of the batch feeds the guard, the pairs, the
+    // drift probe and the fold — micro-batches are delta-sized by
+    // definition
+    val b = batch.select(col(idCol).cast("long").as(idCol), col(payloadCol))
       .localCheckpoint()
+    // replay verification compares against the STORED sliver's ids, so
+    // the expected id set keeps only the rows the family indexes (a
+    // legitimate replay of a batch carrying null vectors must not read
+    // as a checkpoint reset)
     if (alreadyFolded(spark, archiveDir, batchId,
-        b.select(col(idCol).cast("long").as("id")).distinct(), MinhashLayout))
+        fam.indexed(b, payloadCol).select(col(idCol).cast("long").as("id")).distinct(),
+        fam))
       return
-    val (ix, _) = loadLatest(spark, archiveDir)
-    Dedup.minhashDeltaPairs(ix, b, idCol, textCol, threshold,
-        hotBucketPairCap)
-      .write.mode("overwrite").parquet(s"$pairsDir/batch_id=$batchId")
-    driftDir.foreach(d => emitDrift(d, batchId, "minhash",
-      Dedup.minhashDriftProbe(ix, b, idCol, textCol)))
+    val (ix, _) = loadLatest(spark, archiveDir, fam)
+    val fold = ix.fold(b, idCol, payloadCol, threshold, exactLimit, hotPairCap)
+    fold.pairs.write.mode("overwrite").parquet(s"$pairsDir/batch_id=$batchId")
+    val tripped = driftDir.exists(d => emitDrift(d, batchId, fam.name, fold.drift()))
     // fold = commit a BATCH-SIZED sliver under the archive's pinned
-    // widths; the union with base happens at load (appendToMinhashIndex
-    // is the same union for in-session callers — here the sliver IS
-    // the durable form of that append)
+    // parameters; the union with base happens at load (Dedup.append is
+    // the same union for in-session callers — here the sliver IS the
+    // durable form of that append)
     commitEntry(spark, archiveDir, s"b$batchId") { tmp =>
-      // Shared variant (default): the sliver's buckets and sets writes
-      // run concurrently, and each would otherwise re-run the batch's
-      // whole shingle+minhash pass — at production batch sizes that is
-      // the fold's dominant CPU, paid twice. A/B-able back to the
-      // recompute trade with -Dgraft.fold.sharedShingles=false (or
-      // GRAFT_FOLD_SHARED=false for forked harnesses).
-      // unparseable values keep the default ON (same fail-safe rule as
-      // spark.graft.checkDeltaDisjoint) — a typo'd env var must not
-      // kill every micro-batch of a streaming fold
-      if (sys.props.get("graft.fold.sharedShingles")
-          .orElse(sys.env.get("GRAFT_FOLD_SHARED"))
-          .flatMap(v => scala.util.Try(v.trim.toBoolean).toOption)
-          .getOrElse(true)) {
-        val (sliver, done) = Dedup.buildMinhashIndexShared(b, idCol, textCol,
-          ix.numHashes, ix.bands, ix.shingleLen)
-        try Dedup.saveMinhashIndex(sliver, tmp) finally done()
-      } else
-        Dedup.saveMinhashIndex(
-          Dedup.buildMinhashIndex(b, idCol, textCol,
-            ix.numHashes, ix.bands, ix.shingleLen), tmp)
+      val (sliver, release) = fold.sliver()
+      try Dedup.save(sliver, tmp) finally release()
     }
-    maybeCompact(spark, archiveDir, MinhashLayout, compactEvery, batchId,
-      retainCovered)
-  }
-
-  /** Start the stream: `docs` (a streaming DataFrame of (idCol,
-    * textCol, …)) → per-batch archive dedup + fold + auto-compaction. */
-  def archiveDedupSink(docs: DataFrame, archiveDir: String,
-                       pairsDir: String, idCol: String, textCol: String,
-                       threshold: Double = 0.5,
-                       checkpoint: Option[String] = None,
-                       compactEvery: Int = 8,
-                       driftDir: Option[String] = None,
-                       retainCovered: Int = 1,
-                       hotBucketPairCap: Long = graft.operators.SimilarityJoin.AutoCap): StreamingQuery = {
-    requireSaneCompactEvery(compactEvery)
-    warnIfNoCheckpoint(checkpoint, "archiveDedupSink")
-    val w = docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, archiveDir, pairsDir, idCol, textCol,
-          threshold, compactEvery, driftDir, retainCovered, hotBucketPairCap)
-      }
-    checkpoint.foreach(c => w.option("checkpointLocation", c))
-    w.start()
-  }
-
-  // =====================================================================
-  // Cosine twin (embeddings): streamed vectors vs a hyperplane-LSH
-  // archive (the reference's embedding-cache regime consumed as a
-  // stream, ref: day_10/embedders/embedding_pipeline.py:238-314) —
-  // same snapshot layout, same commit/replay contract,
-  // [[Dedup.CosineIndex]] underneath.
-  // =====================================================================
-
-  /** Day-0 embedding archive: widths auto-size at the seed corpus and
-    * are PINNED for every later sliver (pass explicit widths if the
-    * stream will far outgrow the seed; watch [[Dedup.cosineDriftProbe]]
-    * via `driftDir` for when pinned hyperplanes stop fitting). */
-  def seedCosineArchive(corpus: DataFrame, dir: String, idCol: String,
-                        vecCol: String, numBits: Int = -1, bands: Int = -1,
-                        dim: Int = -1, seed: Long = 42L): Unit = {
-    val spark = corpus.sparkSession
-    purgeManifestCache(dir)
-    val built = Dedup.buildCosineIndex(corpus, idCol, vecCol,
-      numBits, bands, dim, seed)
-    Dedup.saveCosineIndex(built, s"$dir/base")
-    // baseline from the saved frames (see seedArchive)
-    Dedup.saveDriftBaseline(s"$dir/base",
-      Dedup.pinDriftBaseline(built.copy(
-        buckets = spark.read.schema(componentSchemas("buckets"))
-          .parquet(s"$dir/base/buckets"),
-        vecs = spark.read.schema(componentSchemas("vecs"))
-          .parquet(s"$dir/base/vecs"))).baseline,
-      spark)
-  }
-
-  /** (live cosine index = current generation ∪ every live entry, last
-    * batchId or -1). */
-  private[graft] def loadLatestCosine(spark: SparkSession, dir: String,
-                                      withDrift: Boolean = true): (Dedup.CosineIndex, Long) = {
-    val st = stateOf(spark, dir)
-    verifyGenerationConsistency(spark, dir, st, CosineLayout)
-    val base = baseDirOf(dir, st)
-    val p = cachedParamsRow(spark, base, CosineParamsSchema)
-    val dirs = entryDirsOf(dir, st)
-    (Dedup.CosineIndex(
-      readComponent(spark, dirs, "buckets").select(col("bkt"), col("id")),
-      readComponent(spark, dirs, "vecs").select(col("id"), col("v")),
-      p.getAs[Int]("num_bits"), p.getAs[Int]("bands"),
-      p.getAs[Int]("dim"), p.getAs[Long]("seed"),
-      if (withDrift) cachedDrift(spark, base) else None),
-      st.lastFolded)
-  }
-
-  /** Reseed the cosine archive IN PLACE from its own payload: rebuild
-    * the full index from the archived vectors with widths re-auto-sized
-    * at the cumulative corpus and a rotated hyperplane seed, pin a
-    * fresh drift baseline, and commit as generation `r<lastFolded>`.
-    * Readers and later batches flip atomically; superseded entries GC
-    * one compaction cycle later; pairs already written remain valid.
-    * Callable out-of-band, or automatic via the sink's
-    * `autoReseedAfter`. Cost ≈ one seed build over the cumulative
-    * corpus — the price of restoring the bucket-cost model the drift
-    * probe saw decaying. */
-  def reseedCosineArchive(spark: SparkSession, dir: String): Unit =
-    // the OUT-OF-BAND entry point leases; the sink's in-loop auto-reseed
-    // calls reseedCosine directly (serialized by the stream itself)
-    MaintenanceLease.withLease(spark, dir, "reseedCosineArchive") {
-      val st = stateOf(spark, dir)
-      require(st.lastFolded >= 0L,
-        s"reseedCosineArchive: no batches folded in $dir yet — nothing to reseed")
-      reseedCosine(spark, dir, st, st.lastFolded)
-    }
-
-  private[graft] def reseedCosine(spark: SparkSession, dir: String,
-                           st: ArchiveState, atBatch: Long): Unit = {
-    val (ix, _) = loadLatestCosine(spark, dir)
-    // dim never drifts; widths re-auto-size at the CUMULATIVE corpus
-    // row count, and the rotated seed re-randomizes the hyperplanes
-    // against whatever orientation collapsed the old buckets
-    val nix = Dedup.buildCosineIndex(ix.vecs.select(col("id"), col("v")),
-      "id", "v", dim = ix.dim, seed = ix.seed + atBatch + 1L)
-    commitReseed(spark, dir, atBatch, st.allFoldedIds, "cosine",
-        builtAtLastFolded = st.lastFolded,
-        forgotten = forgottenLedger(spark, dir, st)) { tmp =>
-      Dedup.saveCosineIndex(nix, tmp)
-      // baseline from the SAVED frames, as at seed time
-      Dedup.saveDriftBaseline(tmp,
-        Dedup.pinDriftBaseline(Dedup.loadCosineIndex(spark, tmp)).baseline,
-        spark)
-    }
-  }
-
-  /** One embedding micro-batch: cosine-dedup against the live archive,
-    * write pairs under `batch_id=<id>`, commit the batch's sliver
-    * (signatures + vectors under the generation's pinned widths),
-    * auto-compact, optionally emit a drift probe. Replay-safe like
-    * [[processBatch]]. `autoReseedAfter = n > 0` (requires `driftDir`)
-    * additionally triggers [[reseedCosineArchive]] IN-LOOP once n
-    * consecutive probes recommend a rebuild — the archive re-fits its
-    * own parameters and the stream keeps running. */
-  private[graft] def processCosineBatch(batch: DataFrame, batchId: Long,
-                                        archiveDir: String, pairsDir: String,
-                                        idCol: String, vecCol: String,
-                                        threshold: Double,
-                                        exactLimit: Long = 10000L,
-                                        compactEvery: Int = 8,
-                                        driftDir: Option[String] = None,
-                                        autoReseedAfter: Int = 0,
-                                        retainCovered: Int = 1,
-                                        hotBucketPairCap: Long = graft.operators.SimilarityJoin.AutoCap): Unit = {
-    val spark = batch.sparkSession
-    val b = batch.select(col(idCol).cast("long").as(idCol), col(vecCol))
-      .localCheckpoint()
-    // replay verification compares against the STORED sliver's ids, and
-    // the index build drops null-vector rows — the expected id set must
-    // apply the same filter or a legitimate replay of a batch carrying
-    // null vectors would be misread as a checkpoint reset
-    if (alreadyFolded(spark, archiveDir, batchId,
-        b.where(col(vecCol).isNotNull)
-          .select(col(idCol).cast("long").as("id")).distinct(), CosineLayout))
-      return
-    val (ix, _) = loadLatestCosine(spark, archiveDir)
-    Dedup.cosineDeltaPairs(ix, b, idCol, vecCol, threshold, exactLimit,
-        hotBucketPairCap)
-      .write.mode("overwrite").parquet(s"$pairsDir/batch_id=$batchId")
-    val tripped = driftDir.exists(d => emitDrift(d, batchId, "cosine",
-      Dedup.cosineDriftProbe(ix, b, idCol, vecCol)))
-    commitEntry(spark, archiveDir, s"b$batchId") { tmp =>
-      Dedup.saveCosineIndex(
-        Dedup.buildCosineIndex(b, idCol, vecCol,
-          ix.numBits, ix.bands, ix.dim, ix.seed), tmp)
-    }
-    maybeCompact(spark, archiveDir, CosineLayout, compactEvery, batchId,
-      retainCovered)
+    maybeCompact(spark, archiveDir, fam, compactEvery, batchId, retainCovered)
     // reseed AFTER the sliver commit so the new generation folds this
     // batch too; the decision reads only persisted probe rows, so a
     // crash here re-fires on the next tripped batch (at-least-eventually)
@@ -1638,197 +1338,7 @@ object ArchiveDedup {
       val st = stateOf(spark, archiveDir)
       val lastR = st.reseeds.map(_._1).foldLeft(-1L)(math.max)
       if (shouldReseed(spark, driftDir.get, batchId, lastR, autoReseedAfter))
-        reseedCosine(spark, archiveDir, st, batchId)
+        reseedInPlace(spark, archiveDir, fam, st, batchId)
     }
-  }
-
-  /** Start the embedding stream: per-batch cosine archive dedup + fold.
-    * `autoReseedAfter = n > 0` (with `driftDir` set) re-fits the
-    * archive's own parameters in-loop after n consecutive drift trips —
-    * see [[reseedCosineArchive]]. */
-  def cosineArchiveDedupSink(vecs: DataFrame, archiveDir: String,
-                             pairsDir: String, idCol: String, vecCol: String,
-                             threshold: Double = 0.9,
-                             exactLimit: Long = 10000L,
-                             checkpoint: Option[String] = None,
-                             compactEvery: Int = 8,
-                             driftDir: Option[String] = None,
-                             autoReseedAfter: Int = 0,
-                             retainCovered: Int = 1,
-                             hotBucketPairCap: Long = graft.operators.SimilarityJoin.AutoCap): StreamingQuery = {
-    requireSaneCompactEvery(compactEvery)
-    warnIfNoCheckpoint(checkpoint, "cosineArchiveDedupSink")
-    require(autoReseedAfter <= 0 || driftDir.nonEmpty,
-      "cosineArchiveDedupSink: autoReseedAfter needs driftDir — the " +
-        "trigger reads the persisted probe rows")
-    val w = vecs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processCosineBatch(batch, batchId, archiveDir, pairsDir,
-          idCol, vecCol, threshold, exactLimit, compactEvery, driftDir,
-          autoReseedAfter, retainCovered, hotBucketPairCap)
-      }
-    checkpoint.foreach(c => w.option("checkpointLocation", c))
-    w.start()
-  }
-
-  // =====================================================================
-  // Semantic twin (embeddings, pinned centroids): the third modality —
-  // streamed vectors assign under the seed's pinned centroids and emit
-  // within-cluster pairs touching the batch ([[Dedup.SemanticIndex]] /
-  // [[Dedup.semanticDeltaPairs]]); the cheapest embedding tier on
-  // clustered corpora (the q88/q89 operator as a stream).
-  // =====================================================================
-
-  /** Day-0 semantic archive: assign `corpus` once under `centroids`
-    * (PINNED forever — assignment is a pure function of vector +
-    * centroids, so every later sliver assigns identically; watch
-    * [[Dedup.semanticDriftProbe]] via `driftDir` and reseed when the
-    * corpus outgrows them). */
-  def seedSemanticArchive(corpus: DataFrame, dir: String, idCol: String,
-                          vecCol: String,
-                          centroids: Array[Array[Float]]): Unit = {
-    val spark = corpus.sparkSession
-    purgeManifestCache(dir)
-    val built = Dedup.buildSemanticIndex(corpus, idCol, vecCol, centroids)
-    Dedup.saveSemanticIndex(built, s"$dir/base")
-    // baseline from the saved frames (see seedArchive)
-    Dedup.saveDriftBaseline(s"$dir/base",
-      Dedup.pinDriftBaseline(built.copy(
-        members = spark.read.parquet(s"$dir/base/members"))).baseline,
-      spark)
-  }
-
-  /** (live semantic index = current generation ∪ every live entry, last
-    * batchId or -1); centroids come from the generation dir — every
-    * LIVE sliver was assigned under them (a reseed re-assigns the whole
-    * corpus, so pre-reseed slivers never mix in). */
-  private[graft] def loadLatestSemantic(spark: SparkSession, dir: String,
-                                         withDrift: Boolean = true): (Dedup.SemanticIndex, Long) = {
-    val st = stateOf(spark, dir)
-    verifyGenerationConsistency(spark, dir, st, SemanticLayout)
-    val base = baseDirOf(dir, st)
-    val cents = genMemo(spark, s"$base/centroids")(
-      spark.read.schema(CentroidsSchema).parquet(s"$base/centroids")
-        .orderBy(col("idx")).collect()
-        .map(_.getSeq[Float](1).toArray))
-    val dirs = entryDirsOf(dir, st)
-    (Dedup.SemanticIndex(
-      readComponent(spark, dirs, "members")
-        .select(col("id"), col("cluster"), col("v")), cents,
-      if (withDrift) cachedDrift(spark, base) else None),
-      st.lastFolded)
-  }
-
-  /** Reseed the semantic archive IN PLACE from its own payload: re-fit
-    * k centroids (same k, fresh KMeans seed) on the cumulative member
-    * vectors, re-assign every member under them, pin a fresh baseline,
-    * and commit as generation `r<lastFolded>` — the semantic twin of
-    * [[reseedCosineArchive]]. This is exactly the rebuild the probe's
-    * Scaladoc prescribes (pinned centroids make in-place recentering
-    * impossible by design), run against the archive's own vectors.
-    * Cost ≈ one KMeans sample fit + one full-corpus assignment pass. */
-  def reseedSemanticArchive(spark: SparkSession, dir: String): Unit =
-    MaintenanceLease.withLease(spark, dir, "reseedSemanticArchive") {
-      val st = stateOf(spark, dir)
-      require(st.lastFolded >= 0L,
-        s"reseedSemanticArchive: no batches folded in $dir yet — nothing to reseed")
-      reseedSemantic(spark, dir, st, st.lastFolded)
-    }
-
-  private def reseedSemantic(spark: SparkSession, dir: String,
-                             st: ArchiveState, atBatch: Long): Unit = {
-    val (ix, _) = loadLatestSemantic(spark, dir)
-    val members = ix.members.select(col("id"), col("v"))
-    val cents = graft.operators.Clustering.fitCentroids(
-      members, "v", ix.centroids.length, seed = atBatch + 43L)
-    val nix = Dedup.buildSemanticIndex(members, "id", "v", cents)
-    commitReseed(spark, dir, atBatch, st.allFoldedIds, "semantic",
-        builtAtLastFolded = st.lastFolded,
-        forgotten = forgottenLedger(spark, dir, st)) { tmp =>
-      Dedup.saveSemanticIndex(nix, tmp)
-      Dedup.saveDriftBaseline(tmp,
-        Dedup.pinDriftBaseline(Dedup.loadSemanticIndex(spark, tmp)).baseline,
-        spark)
-    }
-  }
-
-  /** One embedding micro-batch against the semantic archive: assign
-    * under the pinned centroids, emit within-cluster pairs touching the
-    * batch under `batch_id=<id>`, commit the batch's member sliver,
-    * auto-compact, optionally emit a drift probe. Replay-safe like
-    * [[processBatch]]. `autoReseedAfter` as in [[processCosineBatch]]:
-    * n consecutive probe trips re-fit the centroids in-loop. */
-  private[graft] def processSemanticBatch(batch: DataFrame, batchId: Long,
-                                          archiveDir: String, pairsDir: String,
-                                          idCol: String, vecCol: String,
-                                          threshold: Double,
-                                          compactEvery: Int = 8,
-                                          driftDir: Option[String] = None,
-                                          autoReseedAfter: Int = 0,
-                                          retainCovered: Int = 1,
-                                          hotClusterPairCap: Long = graft.operators.SimilarityJoin.AutoCap): Unit = {
-    val spark = batch.sparkSession
-    val b = batch.select(col(idCol).cast("long").as(idCol), col(vecCol))
-      .localCheckpoint()
-    // same null-vector filter as the cosine twin: members stores only
-    // assignable rows
-    if (alreadyFolded(spark, archiveDir, batchId,
-        b.where(col(vecCol).isNotNull)
-          .select(col(idCol).cast("long").as("id")).distinct(), SemanticLayout))
-      return
-    val (ix, _) = loadLatestSemantic(spark, archiveDir)
-    // ONE argmin pass feeds pairs, drift probe, and the sliver fold —
-    // assignment is a pure function of vector + pinned centroids, so
-    // sharing the materialized frame is exact (and the guard runs on
-    // the raw batch exactly as the public operator would)
-    Dedup.requireDeltaDisjoint(ix.members.select(col("id")), b, idCol,
-      "processSemanticBatch")
-    val asg = Dedup.assignMembers(b, idCol, vecCol, ix.centroids)
-      .localCheckpoint()
-    Dedup.semanticDeltaPairsAssigned(ix, asg, threshold, hotClusterPairCap)
-      .write.mode("overwrite").parquet(s"$pairsDir/batch_id=$batchId")
-    val tripped = driftDir.exists(d => emitDrift(d, batchId, "semantic",
-      Dedup.semanticDriftProbeAssigned(ix, asg)))
-    commitEntry(spark, archiveDir, s"b$batchId") { tmp =>
-      Dedup.saveSemanticIndex(Dedup.SemanticIndex(asg, ix.centroids), tmp)
-    }
-    maybeCompact(spark, archiveDir, SemanticLayout, compactEvery, batchId,
-      retainCovered)
-    // see processCosineBatch: reseed after the fold, decision durable
-    if (tripped && autoReseedAfter > 0) {
-      val st = stateOf(spark, archiveDir)
-      val lastR = st.reseeds.map(_._1).foldLeft(-1L)(math.max)
-      if (shouldReseed(spark, driftDir.get, batchId, lastR, autoReseedAfter))
-        reseedSemantic(spark, archiveDir, st, batchId)
-    }
-  }
-
-  /** Start the semantic-dedup stream: per-batch pinned-centroid
-    * assignment + within-cluster delta pairs + fold. `autoReseedAfter`
-    * as in [[cosineArchiveDedupSink]]. */
-  def semanticArchiveDedupSink(vecs: DataFrame, archiveDir: String,
-                               pairsDir: String, idCol: String, vecCol: String,
-                               threshold: Double = 0.9,
-                               checkpoint: Option[String] = None,
-                               compactEvery: Int = 8,
-                               driftDir: Option[String] = None,
-                               autoReseedAfter: Int = 0,
-                               retainCovered: Int = 1,
-                               hotClusterPairCap: Long = graft.operators.SimilarityJoin.AutoCap): StreamingQuery = {
-    requireSaneCompactEvery(compactEvery)
-    warnIfNoCheckpoint(checkpoint, "semanticArchiveDedupSink")
-    require(autoReseedAfter <= 0 || driftDir.nonEmpty,
-      "semanticArchiveDedupSink: autoReseedAfter needs driftDir — the " +
-        "trigger reads the persisted probe rows")
-    val w = vecs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processSemanticBatch(batch, batchId, archiveDir, pairsDir,
-          idCol, vecCol, threshold, compactEvery, driftDir, autoReseedAfter,
-          retainCovered, hotClusterPairCap)
-      }
-    checkpoint.foreach(c => w.option("checkpointLocation", c))
-    w.start()
   }
 }

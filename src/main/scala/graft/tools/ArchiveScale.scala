@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.operators.Dedup
 import graft.streaming.ArchiveDedup
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -71,15 +72,18 @@ object ArchiveScale {
     timed(s"seed $mode archive (${oldSide.count()} rows, one-time)") {
       mode match {
         case "minhash" =>
-          ArchiveDedup.seedArchive(oldSide, archive, idCol, payloadCol)
+          ArchiveDedup.seedArchive(
+            Dedup.buildMinhashIndex(oldSide, idCol, payloadCol), archive)
         case "semantic" =>
           // 64 pinned centroids sampled deterministically from the seed
           val cents = oldSide.orderBy(col(idCol)).limit(64)
             .select(col(payloadCol).cast("array<float>"))
             .collect().map(_.getSeq[Float](0).toArray)
-          ArchiveDedup.seedSemanticArchive(oldSide, archive, idCol, payloadCol, cents)
+          ArchiveDedup.seedArchive(
+            Dedup.buildSemanticIndex(oldSide, idCol, payloadCol, cents), archive)
         case "cosine" =>
-          ArchiveDedup.seedCosineArchive(oldSide, archive, idCol, payloadCol)
+          ArchiveDedup.seedArchive(
+            Dedup.buildCosineIndex(oldSide, idCol, payloadCol), archive)
         case "token-stats" =>
           graft.operators.CorpusStats.seedTokenStatsArchive(
             oldSide, archive, idCol, payloadCol)
@@ -99,14 +103,6 @@ object ArchiveScale {
         .select(col(idCol), col(payloadCol))
       val t0 = System.nanoTime()
       mode match {
-        case "minhash" =>
-          ArchiveDedup.processBatch(batch, b.toLong, archive, pairsDir,
-            idCol, payloadCol, 0.5, compactEvery = compactEvery,
-            driftDir = driftDir)
-        case "semantic" =>
-          ArchiveDedup.processSemanticBatch(batch, b.toLong, archive, pairsDir,
-            idCol, payloadCol, 0.9, compactEvery = compactEvery,
-            driftDir = driftDir)
         case "token-stats" =>
           graft.operators.CorpusStats.processTokenStatsBatch(batch, b.toLong,
             archive, idCol, payloadCol, compactEvery = compactEvery)
@@ -114,9 +110,9 @@ object ArchiveScale {
           graft.operators.CorpusStats.processNgramStatsBatch(batch, b.toLong,
             archive, idCol, payloadCol, compactEvery = compactEvery)
         case _ =>
-          ArchiveDedup.processCosineBatch(batch, b.toLong, archive, pairsDir,
-            idCol, payloadCol, 0.9, compactEvery = compactEvery,
-            driftDir = driftDir)
+          ArchiveDedup.processBatch(batch, b.toLong, archive, pairsDir,
+            idCol, payloadCol, if (mode == "minhash") 0.5 else 0.9,
+            compactEvery = compactEvery, driftDir = driftDir)
       }
       val w = (System.nanoTime() - t0) / 1e9
       println(f"batch $b%3d ($batchRows rows vs growing archive) $w%8.2f s  " +

@@ -113,7 +113,7 @@ object DedupScale {
     // cost is materializing the delta's banding keys + set payloads
     // into the union (here: persist + count of the grown frames)
     timed(s"append delta into index (~${nd / 10} docs folded)") {
-      val grown = Dedup.appendToMinhashIndex(ix, newSide, "doc_id", "text")
+      val grown = Dedup.append(ix, newSide, "doc_id", "text")
       val b = grown.buckets.persist().count()
       val s2 = grown.sets.persist().count()
       println(s"  grown index: $b bucket keys, $s2 sets")
@@ -137,7 +137,7 @@ object DedupScale {
       println(s"  delta pairs: ${p.count()}")
     }
     timed(s"append delta into cosine index (~${n / 10} vecs folded)") {
-      val grown = Dedup.appendToCosineIndex(cix, eNew, "vec_id", "embedding")
+      val grown = Dedup.append(cix, eNew, "vec_id", "embedding")
       val b = grown.buckets.persist().count()
       val v = grown.vecs.persist().count()
       println(s"  grown index: $b signature keys, $v vectors")

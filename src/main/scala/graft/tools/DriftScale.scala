@@ -40,11 +40,11 @@ object DriftScale {
     val dNew = docs.where(col("doc_id") % 10 === 0)
     val mDir = java.nio.file.Files.createTempDirectory("graft-driftscale-m").toString
     Timing.report("minhash_seed_save_pin") {
-      Dedup.saveMinhashIndex(Dedup.buildMinhashIndex(dOld, "doc_id", "text"), mDir)
-      Dedup.saveDriftBaseline(mDir,
-        Dedup.pinDriftBaseline(Dedup.loadMinhashIndex(spark, mDir)).baseline, spark)
+      Dedup.save(Dedup.buildMinhashIndex(dOld, "doc_id", "text"), mDir)
+      Dedup.saveDriftBaseline(mDir, Dedup.pinDriftBaseline(
+        Dedup.load(spark, mDir, Dedup.MinhashIndex)).baseline, spark)
     }
-    val mIx = Dedup.loadMinhashIndex(spark, mDir)
+    val mIx = Dedup.load(spark, mDir, Dedup.MinhashIndex)
     println("minhash probe row: " +
       Dedup.minhashDriftProbe(mIx, dNew, "doc_id", "text").head())
     var fire = "?"
@@ -66,12 +66,11 @@ object DriftScale {
       .collect().map(_.getSeq[Float](0).toArray)
     val sDir = java.nio.file.Files.createTempDirectory("graft-driftscale-s").toString
     Timing.report("semantic_seed_save_pin") {
-      Dedup.saveSemanticIndex(
-        Dedup.buildSemanticIndex(eOld, "vec_id", "embedding", cents), sDir)
-      Dedup.saveDriftBaseline(sDir,
-        Dedup.pinDriftBaseline(Dedup.loadSemanticIndex(spark, sDir)).baseline, spark)
+      Dedup.save(Dedup.buildSemanticIndex(eOld, "vec_id", "embedding", cents), sDir)
+      Dedup.saveDriftBaseline(sDir, Dedup.pinDriftBaseline(
+        Dedup.load(spark, sDir, Dedup.SemanticIndex)).baseline, spark)
     }
-    val sIx = Dedup.loadSemanticIndex(spark, sDir)
+    val sIx = Dedup.load(spark, sDir, Dedup.SemanticIndex)
     Timing.report("semantic_probe_pinned", extra = () => s"fired=$fire") {
       fire = Dedup.semanticDriftProbe(sIx, eNew, "vec_id", "embedding")
         .head().getAs[Boolean]("rebuild_recommended").toString

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.operators.Dedup
 import graft.streaming.ArchiveDedup
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -45,18 +46,15 @@ object ForgetScale {
 
     val seedSide = rows.where(col(idCol) % 10 =!= 0)
     timed(s"seed $mode archive (${seedSide.count()} rows)") {
-      if (textMode) ArchiveDedup.seedArchive(seedSide, archive, idCol, payloadCol)
-      else ArchiveDedup.seedCosineArchive(seedSide, archive, idCol, payloadCol)
+      ArchiveDedup.seedArchive(
+        if (textMode) Dedup.buildMinhashIndex(seedSide, idCol, payloadCol)
+        else Dedup.buildCosineIndex(seedSide, idCol, payloadCol), archive)
     }
     val batch = rows.where(col(idCol) % 10 === 0)
       .select(col(idCol), col(payloadCol))
     timed(s"fold one batch (${batch.count()} rows)") {
-      if (textMode)
-        ArchiveDedup.processBatch(batch, 0L, archive, pairsDir,
-          idCol, payloadCol, 0.5)
-      else
-        ArchiveDedup.processCosineBatch(batch, 0L, archive, pairsDir,
-          idCol, payloadCol, 0.9)
+      ArchiveDedup.processBatch(batch, 0L, archive, pairsDir,
+        idCol, payloadCol, if (textMode) 0.5 else 0.9)
     }
     // takedown: 2% of the archived ids, half from each population —
     // % 100 == 7 lives seed-side (7 % 10 != 0), % 100 == 10 lives in
@@ -75,18 +73,14 @@ object ForgetScale {
       ArchiveDedup.forgetDocs(spark, archive, victims)
     }
     val remaining =
-      if (textMode) ArchiveDedup.loadLatest(spark, archive)._1.sets.count()
-      else ArchiveDedup.loadLatestCosine(spark, archive)._1.vecs.count()
+      if (textMode) ArchiveDedup.loadLatest(spark, archive, Dedup.MinhashIndex)._1.sets.count()
+      else ArchiveDedup.loadLatest(spark, archive, Dedup.CosineIndex)._1.vecs.count()
     println(s"archive rows after forget: $remaining")
     timed("delta-dedup a probe batch against the post-forget archive") {
       val probe = rows.where(col(idCol) % 10 === 3).limit(1000)
         .select(col(idCol) + lit(10000000L) as idCol, col(payloadCol))
-      if (textMode)
-        ArchiveDedup.processBatch(probe, 1L, archive, pairsDir,
-          idCol, payloadCol, 0.5)
-      else
-        ArchiveDedup.processCosineBatch(probe, 1L, archive, pairsDir,
-          idCol, payloadCol, 0.9)
+      ArchiveDedup.processBatch(probe, 1L, archive, pairsDir,
+        idCol, payloadCol, if (textMode) 0.5 else 0.9)
     }
     spark.stop()
   }

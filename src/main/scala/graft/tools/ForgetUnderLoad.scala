@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.operators.CorpusStats
+import graft.operators.{CorpusStats, Dedup}
 import graft.streaming.ArchiveDedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -140,7 +140,8 @@ object ForgetUnderLoad {
         org.apache.spark.sql.expressions.Window.orderBy(col("doc_id"))))
 
     def seed(): Unit = family match {
-      case "minhash" => ArchiveDedup.seedArchive(oldSide, archive, "doc_id", "text")
+      case "minhash" => ArchiveDedup.seedArchive(
+        Dedup.buildMinhashIndex(oldSide, "doc_id", "text"), archive)
       case "token" =>
         CorpusStats.seedTokenStatsArchive(oldSide, archive, "doc_id", "text")
       case "ngram" =>
@@ -148,25 +149,22 @@ object ForgetUnderLoad {
       case "semantic" =>
         // pinned centroids = the generator's own 16 lead centers — the
         // production shape (centroids fitted once at seed, pinned after)
-        ArchiveDedup.seedSemanticArchive(oldSide, archive, "doc_id",
-          "embedding", centers.take(16).map(_.map(_.toFloat)))
+        ArchiveDedup.seedArchive(Dedup.buildSemanticIndex(oldSide, "doc_id",
+          "embedding", centers.take(16).map(_.map(_.toFloat))), archive)
       case "cosine" =>
-        ArchiveDedup.seedCosineArchive(oldSide, archive, "doc_id", "embedding")
+        ArchiveDedup.seedArchive(
+          Dedup.buildCosineIndex(oldSide, "doc_id", "embedding"), archive)
     }
     def fold(batch: DataFrame, b: Long): Unit = family match {
       case "minhash" => ArchiveDedup.processBatch(batch, b, archive, pairsDir,
-        "doc_id", "text", 0.5, compactEvery = 8,
-        hotBucketPairCap = hotPairCap)
+        "doc_id", "text", 0.5, compactEvery = 8, hotPairCap = hotPairCap)
       case "token" => CorpusStats.processTokenStatsBatch(batch, b, archive,
         "doc_id", "text", compactEvery = 8)
       case "ngram" => CorpusStats.processNgramStatsBatch(batch, b, archive,
         "doc_id", "text", compactEvery = 8)
-      case "semantic" => ArchiveDedup.processSemanticBatch(batch, b, archive,
+      case _ => ArchiveDedup.processBatch(batch, b, archive,
         pairsDir, "doc_id", "embedding", 0.95, compactEvery = 8,
-        hotClusterPairCap = hotPairCap)
-      case "cosine" => ArchiveDedup.processCosineBatch(batch, b, archive,
-        pairsDir, "doc_id", "embedding", 0.95, compactEvery = 8,
-        hotBucketPairCap = hotPairCap)
+        hotPairCap = hotPairCap)
     }
 
     val t0 = System.nanoTime()
@@ -280,13 +278,13 @@ object ForgetUnderLoad {
     }
     val exitBad: Boolean = family match {
       case "minhash" =>
-        val (ix, _) = ArchiveDedup.loadLatest(spark, archive)
+        val (ix, _) = ArchiveDedup.loadLatest(spark, archive, Dedup.MinhashIndex)
         idSetCheck(ix.sets.select(col("id")))
       case "semantic" =>
-        val (ix, _) = ArchiveDedup.loadLatestSemantic(spark, archive)
+        val (ix, _) = ArchiveDedup.loadLatest(spark, archive, Dedup.SemanticIndex)
         idSetCheck(ix.members.select(col("id")))
       case "cosine" =>
-        val (ix, _) = ArchiveDedup.loadLatestCosine(spark, archive)
+        val (ix, _) = ArchiveDedup.loadLatest(spark, archive, Dedup.CosineIndex)
         idSetCheck(ix.vecs.select(col("id")))
       case _ =>
         // count-exactness under the race: the live archive's sums must

@@ -24,6 +24,7 @@ object LifecycleProfile {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
+    import graft.operators.Dedup
     import graft.streaming.ArchiveDedup
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val tasks = new java.util.concurrent.atomic.AtomicInteger
@@ -62,8 +63,8 @@ object LifecycleProfile {
         case "minhash" =>
           val docs = graft.Tables(spark, dir, "documents")
             .where(col("doc_id") < 2000)
-          t("seed") { ArchiveDedup.seedArchive(
-            docs.where(col("doc_id") < 400), arch, "doc_id", "text") }
+          t("seed") { ArchiveDedup.seedArchive(Dedup.buildMinhashIndex(
+            docs.where(col("doc_id") < 400), "doc_id", "text"), arch) }
           t("fold") { ArchiveDedup.processBatch(
             docs.where(col("doc_id") >= 400), 0L, arch, pairsDir,
             "doc_id", "text", 0.5, compactEvery = 0) }
@@ -76,10 +77,10 @@ object LifecycleProfile {
               .orderBy(col("id_a"), col("id_b")).collect().length }
         case "cosine" => // the q97 lifecycle, phase-split
           val e = graft.Tables(spark, dir, "embeddings")
-          t("seed") { ArchiveDedup.seedCosineArchive(
-            e.where(col("vec_id") < 400), arch, "vec_id", "embedding",
-            numBits = 8, bands = 8) }
-          t("fold") { ArchiveDedup.processCosineBatch(
+          t("seed") { ArchiveDedup.seedArchive(Dedup.buildCosineIndex(
+            e.where(col("vec_id") < 400), "vec_id", "embedding",
+            numBits = 8, bands = 8), arch) }
+          t("fold") { ArchiveDedup.processBatch(
             e.where(col("vec_id") >= 400), 0L, arch, pairsDir,
             "vec_id", "embedding", 0.4, compactEvery = 0) }
           val victims = e.where(col("vec_id") % 5 === 2)
@@ -95,9 +96,9 @@ object LifecycleProfile {
           val cents = e.orderBy(col("vec_id")).limit(4)
             .select(col("embedding").cast("array<float>"))
             .collect().map(_.getSeq[Float](0).toArray)
-          t("seed") { ArchiveDedup.seedSemanticArchive(
-            e.where(col("vec_id") < 400), arch, "vec_id", "embedding", cents) }
-          t("fold") { ArchiveDedup.processSemanticBatch(
+          t("seed") { ArchiveDedup.seedArchive(Dedup.buildSemanticIndex(
+            e.where(col("vec_id") < 400), "vec_id", "embedding", cents), arch) }
+          t("fold") { ArchiveDedup.processBatch(
             e.where(col("vec_id") >= 400), 0L, arch, pairsDir,
             "vec_id", "embedding", 0.4, compactEvery = 0) }
           val victims = e.where(col("vec_id") % 5 === 2)

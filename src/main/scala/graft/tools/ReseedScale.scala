@@ -98,7 +98,8 @@ object ReseedScale {
       val cents = graft.operators.Clustering.fitCentroids(
         seedDf.select(col("vec_id").as("id"), col("embedding").as("v")),
         "v", nSeedClusters, seed = 7L)
-      ArchiveDedup.seedSemanticArchive(seedDf, archive, "vec_id", "embedding", cents)
+      ArchiveDedup.seedArchive(
+        Dedup.buildSemanticIndex(seedDf, "vec_id", "embedding", cents), archive)
     }
     println(f"seed: $seedRows rows x $dim dims, $nSeedClusters fitted centroids  $seedWall%8.2f s")
     seedDf.unpersist()
@@ -118,13 +119,13 @@ object ReseedScale {
       val batch = gen(lo, batchRows, f).cache()
       batch.count()
       // exact oracle vs the PRE-batch archive (what the operator sees)
-      val (ix, _) = ArchiveDedup.loadLatestSemantic(spark, archive)
+      val (ix, _) = ArchiveDedup.loadLatest(spark, archive, Dedup.SemanticIndex)
       val archiveVecs = ix.members.select(lit(0).as("g"),
         col("id"), col("v"))
       val reseedsBefore = new java.io.File(archive).listFiles()
         .map(_.getName).count(_.startsWith("r"))
       val (_, wall) = timed {
-        ArchiveDedup.processSemanticBatch(batch, b.toLong, archive, pairsDir,
+        ArchiveDedup.processBatch(batch, b.toLong, archive, pairsDir,
           "vec_id", "embedding", theta, compactEvery = 8,
           driftDir = Some(driftDir), autoReseedAfter = 2)
       }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Dedup
 import graft.streaming.ArchiveDedup
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -31,7 +32,7 @@ class ArchiveDedupSpec extends AnyFunSuite {
     val archive = tmp("graft-arch")
     val pairsDir = tmp("graft-arch-pairs")
     val day0 = Seq((0L, tA), (1L, tA), (2L, tC)).toDF("doc_id", "text")
-    ArchiveDedup.seedArchive(day0, archive, "doc_id", "text")
+    ArchiveDedup.seedArchive(Dedup.buildMinhashIndex(day0, "doc_id", "text"), archive)
 
     val batch1 = Seq((10L, tA), (11L, tB)).toDF("doc_id", "text")
     ArchiveDedup.processBatch(batch1, 0L, archive, pairsDir, "doc_id", "text", 0.5)
@@ -55,14 +56,14 @@ class ArchiveDedupSpec extends AnyFunSuite {
     // replayed micro-batch (same batchId): both effects already durable
     ArchiveDedup.processBatch(batch1, 0L, archive, pairsDir, "doc_id", "text", 0.5)
     assert(pairsOf(pairsDir) === after2, "replay must be a no-op")
-    val (latest, v) = ArchiveDedup.loadLatest(spark, archive)
+    val (latest, v) = ArchiveDedup.loadLatest(spark, archive, Dedup.MinhashIndex)
     assert(v === 1L)
     assert(latest.sets.count() === 7L, "archive holds day 0 + both batches exactly once")
 
     // compaction folds slivers into a fresh base; reads are equivalent
     val compacted = tmp("graft-arch-c")
     ArchiveDedup.compactArchive(spark, archive, compacted)
-    val (cIx, cv) = ArchiveDedup.loadLatest(spark, compacted)
+    val (cIx, cv) = ArchiveDedup.loadLatest(spark, compacted, Dedup.MinhashIndex)
     assert(cv === -1L, "compacted archive has no slivers")
     def keySet(ix: graft.operators.Dedup.MinhashIndex) =
       ix.buckets.select(col("bkt"), col("id")).collect()
@@ -80,7 +81,7 @@ class ArchiveDedupSpec extends AnyFunSuite {
         (1L, tB), (2L, tC)).toDF("doc_id", "text"),
       archive, "doc_id", "text", numHashes = 32, bands = 8)
     ArchiveDedup.compactArchive(spark, archive, compacted)
-    val (cIx2, _) = ArchiveDedup.loadLatest(spark, compacted)
+    val (cIx2, _) = ArchiveDedup.loadLatest(spark, compacted, Dedup.MinhashIndex)
     assert(cIx2.numHashes === 32 && cIx2.bands === 8,
       "re-compaction into a previously-read dstDir must expose the " +
         "reseeded widths, not the memoized pre-reseed params")
@@ -94,27 +95,27 @@ class ArchiveDedupSpec extends AnyFunSuite {
     val a = vec(1); val b = vec(2); val c = vec(3)
     val archive = tmp("graft-carch")
     val pairsDir = tmp("graft-carch-pairs")
-    ArchiveDedup.seedCosineArchive(
+    ArchiveDedup.seedArchive(Dedup.buildCosineIndex(
       Seq((0L, a), (1L, a), (2L, c)).toDF("vec_id", "embedding"),
-      archive, "vec_id", "embedding", numBits = 4, bands = 4)
+      "vec_id", "embedding", numBits = 4, bands = 4), archive)
     // exactLimit = 0 exercises the LSH delta tier through the stream path
     val batch1 = Seq((10L, a), (11L, b)).toDF("vec_id", "embedding")
-    ArchiveDedup.processCosineBatch(batch1, 0L, archive, pairsDir,
+    ArchiveDedup.processBatch(batch1, 0L, archive, pairsDir,
       "vec_id", "embedding", 0.95, exactLimit = 0L)
     val after1 = pairsOf(pairsDir).map(p => (p._1, p._2))
     assert(after1.contains((0L, 10L)) && after1.contains((1L, 10L)),
       s"batch 1 vs seed: $after1")
     assert(!after1.contains((0L, 1L)), "old×old never re-emits")
     val batch2 = Seq((20L, b)).toDF("vec_id", "embedding")
-    ArchiveDedup.processCosineBatch(batch2, 1L, archive, pairsDir,
+    ArchiveDedup.processBatch(batch2, 1L, archive, pairsDir,
       "vec_id", "embedding", 0.95, exactLimit = 0L)
     val after2 = pairsOf(pairsDir).map(p => (p._1, p._2))
     assert(after2.contains((11L, 20L)), s"batch 2 must see folded batch 1: $after2")
     // replay is a no-op
-    ArchiveDedup.processCosineBatch(batch1, 0L, archive, pairsDir,
+    ArchiveDedup.processBatch(batch1, 0L, archive, pairsDir,
       "vec_id", "embedding", 0.95, exactLimit = 0L)
     assert(pairsOf(pairsDir).map(p => (p._1, p._2)) === after2)
-    val (live, v) = ArchiveDedup.loadLatestCosine(spark, archive)
+    val (live, v) = ArchiveDedup.loadLatest(spark, archive, Dedup.CosineIndex)
     assert(v === 1L && live.vecs.count() === 6L)
   }
 
@@ -122,7 +123,7 @@ class ArchiveDedupSpec extends AnyFunSuite {
     val archive = tmp("graft-arch-ac")
     val pairsDir = tmp("graft-arch-ac-pairs")
     val day0 = Seq((0L, tA), (1L, tC)).toDF("doc_id", "text")
-    ArchiveDedup.seedArchive(day0, archive, "doc_id", "text")
+    ArchiveDedup.seedArchive(Dedup.buildMinhashIndex(day0, "doc_id", "text"), archive)
     // 6 batches at compactEvery = 2: slivers merge pairwise into ranges
     // (c0-1, c2-3, …) and contiguous ranges merge again (c0-3) — tiered
     val texts = Seq(tA, tB, tC)
@@ -144,7 +145,7 @@ class ArchiveDedupSpec extends AnyFunSuite {
       s"contiguous ranges must have merged into a wider one: $names")
 
     // reads are equivalent: the live index holds exactly seed + all 6 batches
-    val (live, last) = ArchiveDedup.loadLatest(spark, archive)
+    val (live, last) = ArchiveDedup.loadLatest(spark, archive, Dedup.MinhashIndex)
     assert(last === 5L)
     assert(live.sets.count() === 8L, "seed 2 + 6 batch docs, exactly once")
     assert(live.sets.select(col("id")).distinct().count() === 8L)
@@ -167,7 +168,7 @@ class ArchiveDedupSpec extends AnyFunSuite {
     // replay of a COMPACTED batch (sliver gone, range covers it): skip, no double-fold
     ArchiveDedup.processBatch(Seq((100L, tA)).toDF("doc_id", "text"), 0L,
       archive, pairsDir, "doc_id", "text", 0.5, compactEvery = 2)
-    assert(ArchiveDedup.loadLatest(spark, archive)._1.sets.count() === 8L)
+    assert(ArchiveDedup.loadLatest(spark, archive, Dedup.MinhashIndex)._1.sets.count() === 8L)
 
     // restart WITHOUT checkpoint (same batchId, different ids, sliver
     // still live): must refuse loudly, not drop the batch silently
@@ -187,14 +188,15 @@ class ArchiveDedupSpec extends AnyFunSuite {
     val coveredLeft = after.count(n => n.startsWith("b") &&
       n.drop(1).forall(_.isDigit) && n.drop(1).toLong <= 5L)
     assert(coveredLeft === 0, s"covered slivers GC'd on the next cycle: $after")
-    assert(ArchiveDedup.loadLatest(spark, archive)._1.sets.count() === 9L)
+    assert(ArchiveDedup.loadLatest(spark, archive, Dedup.MinhashIndex)._1.sets.count() === 9L)
   }
 
   test("gapped batch ids still compact (manifest ranges) and replay exactly") {
     val archive = tmp("graft-arch-gap")
     val pairsDir = tmp("graft-arch-gap-pairs")
-    ArchiveDedup.seedArchive(Seq((0L, tA)).toDF("doc_id", "text"),
-      archive, "doc_id", "text")
+    ArchiveDedup.seedArchive(Dedup.buildMinhashIndex(
+      Seq((0L, tA)).toDF("doc_id", "text"),
+      "doc_id", "text"), archive)
     // timestamp-style sparse batch ids: 10, 20, ..., 60 — the
     // value-interval [10, 60] contains ids that were NEVER folded
     val texts = Seq(tA, tB, tC)
@@ -211,11 +213,11 @@ class ArchiveDedupSpec extends AnyFunSuite {
     // replaying a folded id (20) must SKIP
     ArchiveDedup.processBatch(Seq((300L, tB)).toDF("doc_id", "text"),
       15L, archive, pairsDir, "doc_id", "text", 0.5, compactEvery = 2)
-    val (live1, _) = ArchiveDedup.loadLatest(spark, archive)
+    val (live1, _) = ArchiveDedup.loadLatest(spark, archive, Dedup.MinhashIndex)
     assert(live1.sets.count() === 8L, "gap id 15 is NOT covered — it folds")
     ArchiveDedup.processBatch(Seq((999L, tC)).toDF("doc_id", "text"),
       20L, archive, pairsDir, "doc_id", "text", 0.5, compactEvery = 2)
-    val (live2, _) = ArchiveDedup.loadLatest(spark, archive)
+    val (live2, _) = ArchiveDedup.loadLatest(spark, archive, Dedup.MinhashIndex)
     assert(live2.sets.count() === 8L, "folded id 20 IS covered — replay skips")
     assert(live2.sets.select(col("id")).distinct().count() === 8L)
   }
@@ -233,33 +235,33 @@ class ArchiveDedupSpec extends AnyFunSuite {
     val archive = tmp("graft-sarch")
     val pairsDir = tmp("graft-sarch-pairs")
     // seed: one member near each centroid
-    ArchiveDedup.seedSemanticArchive(
+    ArchiveDedup.seedArchive(Dedup.buildSemanticIndex(
       Seq((0L, near(c0, 0.01f, 0)), (1L, near(c1, 0.01f, 1))).toDF("vec_id", "embedding"),
-      archive, "vec_id", "embedding", cents)
+      "vec_id", "embedding", cents), archive)
     // batch 0: near c0 — pairs with seed member 0 only (same cluster)
-    ArchiveDedup.processSemanticBatch(
+    ArchiveDedup.processBatch(
       Seq((10L, near(c0, 0.02f, 2))).toDF("vec_id", "embedding"),
       0L, archive, pairsDir, "vec_id", "embedding", 0.9)
     val after1 = pairsOf(pairsDir).map(p => (p._1, p._2))
     assert(after1 === Set((0L, 10L)), s"within-cluster delta pairs only: $after1")
     // batch 1: near c1 — sees seed member 1 AND nothing cross-cluster
-    ArchiveDedup.processSemanticBatch(
+    ArchiveDedup.processBatch(
       Seq((20L, near(c1, 0.02f, 3))).toDF("vec_id", "embedding"),
       1L, archive, pairsDir, "vec_id", "embedding", 0.9)
     val after2 = pairsOf(pairsDir).map(p => (p._1, p._2))
     assert(after2 === Set((0L, 10L), (1L, 20L)), s"$after2")
     // batch 2 near c0: sees BOTH seed 0 and folded batch-0 member 10
-    ArchiveDedup.processSemanticBatch(
+    ArchiveDedup.processBatch(
       Seq((30L, near(c0, 0.02f, 4))).toDF("vec_id", "embedding"),
       2L, archive, pairsDir, "vec_id", "embedding", 0.9)
     val after3 = pairsOf(pairsDir).map(p => (p._1, p._2))
     assert(after3.contains((0L, 30L)) && after3.contains((10L, 30L)),
       s"batch 2 must see seed AND folded batch 0: $after3")
     // replay is a no-op; live archive holds every member exactly once
-    ArchiveDedup.processSemanticBatch(
+    ArchiveDedup.processBatch(
       Seq((10L, near(c0, 0.02f, 2))).toDF("vec_id", "embedding"),
       0L, archive, pairsDir, "vec_id", "embedding", 0.9)
-    val (live, v) = ArchiveDedup.loadLatestSemantic(spark, archive)
+    val (live, v) = ArchiveDedup.loadLatest(spark, archive, Dedup.SemanticIndex)
     assert(v === 2L && live.members.count() === 5L)
     assert(live.centroids.map(_.toSeq) === cents.map(_.toSeq),
       "centroids stay pinned at the seed's")
@@ -268,8 +270,9 @@ class ArchiveDedupSpec extends AnyFunSuite {
   test("retention knob: covered entries survive retainCovered batches before GC") {
     val archive = tmp("graft-arch-ret")
     val pairsDir = tmp("graft-arch-ret-pairs")
-    ArchiveDedup.seedArchive(
-      Seq((0L, tA), (1L, tC)).toDF("doc_id", "text"), archive, "doc_id", "text")
+    ArchiveDedup.seedArchive(Dedup.buildMinhashIndex(
+      Seq((0L, tA), (1L, tC)).toDF("doc_id", "text"),
+      "doc_id", "text"), archive)
     def entries(): Set[String] =
       new java.io.File(archive).listFiles()
         .map(_.getName).filterNot(_.startsWith(".")).toSet
@@ -290,14 +293,15 @@ class ArchiveDedupSpec extends AnyFunSuite {
            !entries().contains("b2"),
       s"covered slivers GC after the retention window: ${entries()}")
     // reads stayed exact throughout (seed 2 + 5 batches)
-    assert(ArchiveDedup.loadLatest(spark, archive)._1.sets.count() === 7L)
+    assert(ArchiveDedup.loadLatest(spark, archive, Dedup.MinhashIndex)._1.sets.count() === 7L)
   }
 
   test("retention keys on the range's RECORDED commit batch, not its name (sparse ids / late merges)") {
     val archive = tmp("graft-arch-ret2")
     val pairsDir = tmp("graft-arch-ret2-pairs")
-    ArchiveDedup.seedArchive(
-      Seq((0L, tA), (1L, tC)).toDF("doc_id", "text"), archive, "doc_id", "text")
+    ArchiveDedup.seedArchive(Dedup.buildMinhashIndex(
+      Seq((0L, tA), (1L, tC)).toDF("doc_id", "text"),
+      "doc_id", "text"), archive)
     def entries(): Set[String] =
       new java.io.File(archive).listFiles()
         .map(_.getName).filterNot(_.startsWith(".")).toSet
@@ -320,14 +324,15 @@ class ArchiveDedupSpec extends AnyFunSuite {
     assert(!entries().contains("b0") && !entries().contains("b1"),
       s"retention window elapsed from the recorded commit: ${entries()}")
     // reads stayed exact throughout (seed 2 + 6 batches)
-    assert(ArchiveDedup.loadLatest(spark, archive)._1.sets.count() === 8L)
+    assert(ArchiveDedup.loadLatest(spark, archive, Dedup.MinhashIndex)._1.sets.count() === 8L)
   }
 
   test("slow reader escape hatch: a pinned compactArchive copy survives many GC cycles") {
     val archive = tmp("graft-arch-pin")
     val pairsDir = tmp("graft-arch-pin-pairs")
-    ArchiveDedup.seedArchive(
-      Seq((0L, tA), (1L, tC)).toDF("doc_id", "text"), archive, "doc_id", "text")
+    ArchiveDedup.seedArchive(Dedup.buildMinhashIndex(
+      Seq((0L, tA), (1L, tC)).toDF("doc_id", "text"),
+      "doc_id", "text"), archive)
     ArchiveDedup.processBatch(Seq((10L, tB)).toDF("doc_id", "text"), 0L,
       archive, pairsDir, "doc_id", "text", 0.5, compactEvery = 2)
     // the documented contract for readers slower than the retention
@@ -335,7 +340,7 @@ class ArchiveDedupSpec extends AnyFunSuite {
     // leisure while the live dir churns through merges and GC
     val pinned = tmp("graft-arch-pin-copy")
     ArchiveDedup.compactArchive(spark, archive, pinned)
-    val (pinnedIx, _) = ArchiveDedup.loadLatest(spark, pinned)
+    val (pinnedIx, _) = ArchiveDedup.loadLatest(spark, pinned, Dedup.MinhashIndex)
     val lazyCount = pinnedIx.sets // plan now, act after many cycles
     (1L to 12L).foreach { b =>
       ArchiveDedup.processBatch(
@@ -346,22 +351,22 @@ class ArchiveDedupSpec extends AnyFunSuite {
     // are untouched and the long-deferred action still reads exactly
     assert(lazyCount.count() === 3L,
       "pinned compactArchive copy must outlive live-dir GC cycles")
-    assert(ArchiveDedup.loadLatest(spark, archive)._1.sets.count() === 15L)
+    assert(ArchiveDedup.loadLatest(spark, archive, Dedup.MinhashIndex)._1.sets.count() === 15L)
   }
 
   test("forgetDocs removes documents from the live archive; future batches never pair with them") {
     import spark.implicits._
     val archive = tmp("graft-arch-forget")
     val pairsDir = tmp("graft-arch-forget-pairs")
-    ArchiveDedup.seedArchive(
+    ArchiveDedup.seedArchive(Dedup.buildMinhashIndex(
       Seq((0L, tA), (1L, tA), (2L, tC)).toDF("doc_id", "text"),
-      archive, "doc_id", "text")
+      "doc_id", "text"), archive)
     ArchiveDedup.processBatch(Seq((10L, tA)).toDF("doc_id", "text"), 0L,
       archive, pairsDir, "doc_id", "text", 0.5)
     // forget seed doc 1 and folded doc 10 in one takedown
     ArchiveDedup.forgetDocs(spark, archive,
       Seq(1L, 10L).toDF("id"))
-    val (ix, _) = ArchiveDedup.loadLatest(spark, archive)
+    val (ix, _) = ArchiveDedup.loadLatest(spark, archive, Dedup.MinhashIndex)
     assert(ix.sets.select("id").collect().map(_.getLong(0)).sorted.toSeq
       === Seq(0L, 2L), "forgotten docs must leave every component")
     // a future near-dup of tA pairs with the RETAINED copy only
@@ -372,7 +377,7 @@ class ArchiveDedupSpec extends AnyFunSuite {
     assert(after === Set((0L, 20L)),
       s"batch after the forget must pair with retained docs only: $after")
     // the stream keeps folding; the forget generation is the base
-    assert(ArchiveDedup.loadLatest(spark, archive)._1.sets.count() === 3L)
+    assert(ArchiveDedup.loadLatest(spark, archive, Dedup.MinhashIndex)._1.sets.count() === 3L)
     // unknown ids refuse loudly (a takedown that removes nothing)
     val e = intercept[IllegalArgumentException] {
       ArchiveDedup.forgetDocs(spark, archive, Seq(777L).toDF("id"))
@@ -397,16 +402,36 @@ class ArchiveDedupSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("TEXT"), e2.getMessage)
   }
 
+  test("a takedown over the collect cap refuses even when every input partition is under it") {
+    val archive = tmp("graft-arch-forget-parts")
+    ArchiveDedup.seedArchive(Dedup.buildMinhashIndex(
+      (0L until 8L).map(i => (i, s"$tA $i")).toDF("doc_id", "text"),
+      "doc_id", "text"), archive)
+    // 8 distinct ids in 4 partitions of 2: each partition is under the
+    // cap of 3, the takedown is over it
+    val ids = spark.range(0L, 8L, 1L, 4).toDF("id")
+    assert(ids.rdd.getNumPartitions === 4)
+    spark.conf.set("spark.graft.maxTakedownCollect", "3")
+    try {
+      val e = intercept[IllegalArgumentException] {
+        ArchiveDedup.forgetDocs(spark, archive, ids)
+      }
+      assert(e.getMessage.contains("maxTakedownCollect"), e.getMessage)
+    } finally spark.conf.unset("spark.graft.maxTakedownCollect")
+    assert(ArchiveDedup.loadLatest(spark, archive, Dedup.MinhashIndex)._1
+      .sets.count() === 8L, "a refused takedown commits nothing")
+  }
+
   test("a re-ingested forgotten doc is retracted again — the ledger never excuses a live copy") {
     import spark.implicits._
     val archive = tmp("graft-arch-reingest")
     val pairsDir = tmp("graft-arch-reingest-p")
-    ArchiveDedup.seedArchive(
+    ArchiveDedup.seedArchive(Dedup.buildMinhashIndex(
       Seq((0L, tA), (1L, tB), (2L, tC)).toDF("doc_id", "text"),
-      archive, "doc_id", "text")
+      "doc_id", "text"), archive)
     ArchiveDedup.processBatch(Seq((10L, tA)).toDF("doc_id", "text"), 0L,
       archive, pairsDir, "doc_id", "text", 0.5)
-    def ids(): Seq[Long] = ArchiveDedup.loadLatest(spark, archive)._1
+    def ids(): Seq[Long] = ArchiveDedup.loadLatest(spark, archive, Dedup.MinhashIndex)._1
       .sets.select("id").collect().map(_.getLong(0)).sorted.toSeq
     ArchiveDedup.forgetDocs(spark, archive, Seq(10L).toDF("id"))
     assert(ids() === Seq(0L, 1L, 2L))
@@ -441,16 +466,16 @@ class ArchiveDedupSpec extends AnyFunSuite {
     }
     val archive = tmp("graft-arch-fr")
     val pairsDir = tmp("graft-arch-fr-p")
-    ArchiveDedup.seedCosineArchive(
+    ArchiveDedup.seedArchive(Dedup.buildCosineIndex(
       (0 until 40).map(i => (i.toLong, vec(i))).toDF("vec_id", "embedding"),
-      archive, "vec_id", "embedding")
-    ArchiveDedup.processCosineBatch(
+      "vec_id", "embedding"), archive)
+    ArchiveDedup.processBatch(
       (40 until 50).map(i => (i.toLong, vec(i))).toDF("vec_id", "embedding"),
       0L, archive, pairsDir, "vec_id", "embedding", 0.95)
-    val before = ArchiveDedup.loadLatestCosine(spark, archive)._1.baseline
+    val before = ArchiveDedup.loadLatest(spark, archive, Dedup.CosineIndex)._1.baseline
     assert(before.nonEmpty, "seeding must pin a drift baseline")
     ArchiveDedup.forgetDocs(spark, archive, Seq(3L, 44L).toDF("id"))
-    val after = ArchiveDedup.loadLatestCosine(spark, archive)._1
+    val after = ArchiveDedup.loadLatest(spark, archive, Dedup.CosineIndex)._1
     assert(after.vecs.count() === 48L)
     // the takedown must NOT re-snapshot the baseline: retraction keeps
     // it pinned (a per-forget re-pin would reset measured drift to ~0
@@ -469,7 +494,7 @@ class ArchiveDedupSpec extends AnyFunSuite {
     assert(rdirs.sameElements(Array("r0")), rdirs.mkString(","))
     assert(new java.io.File(s"$archive/r0/_forget").exists(),
       "a forget generation must be marked")
-    ArchiveDedup.reseedCosineArchive(spark, archive)
+    ArchiveDedup.reseedArchive(spark, archive)
     val rdirs2 = new java.io.File(archive).listFiles().map(_.getName)
       .filter(_.matches("r\\d+")).sorted
     assert(rdirs2.sameElements(Array("r0", "r1")),
@@ -477,11 +502,11 @@ class ArchiveDedupSpec extends AnyFunSuite {
     assert(!new java.io.File(s"$archive/r1/_forget").exists(),
       "a real reseed is not a forget generation")
     // readers follow the newest generation: forgotten ids stay absent
-    val ix2 = ArchiveDedup.loadLatestCosine(spark, archive)._1
+    val ix2 = ArchiveDedup.loadLatest(spark, archive, Dedup.CosineIndex)._1
     assert(ix2.vecs.count() === 48L)
     assert(ix2.vecs.where(col("id").isin(3L, 44L)).isEmpty)
     // and a plain reseed replay still skips (idempotence preserved)
-    ArchiveDedup.reseedCosineArchive(spark, archive)
+    ArchiveDedup.reseedArchive(spark, archive)
     val rdirs3 = new java.io.File(archive).listFiles().map(_.getName)
       .filter(_.matches("r\\d+")).sorted
     assert(rdirs3.sameElements(Array("r0", "r1")),
@@ -523,12 +548,12 @@ class ArchiveDedupSpec extends AnyFunSuite {
       Array.fill(8)(r.nextGaussian().toFloat)
     }
     val cdir = tmp("graft-arch-fg-c")
-    ArchiveDedup.seedCosineArchive(
+    ArchiveDedup.seedArchive(Dedup.buildCosineIndex(
       (0 until 20).map(i => (i.toLong, vec(i))).toDF("vec_id", "embedding"),
-      cdir, "vec_id", "embedding")
+      "vec_id", "embedding"), cdir)
     ArchiveDedup.forget(spark, cdir,
       Seq((5L, "ignored")).toDF("vec_id", "note"), idCol = "vec_id")
-    val ix = ArchiveDedup.loadLatestCosine(spark, cdir)._1
+    val ix = ArchiveDedup.loadLatest(spark, cdir, Dedup.CosineIndex)._1
     assert(ix.vecs.count() === 19L)
     assert(ix.vecs.where(col("id") === 5L).isEmpty)
   }
@@ -536,8 +561,8 @@ class ArchiveDedupSpec extends AnyFunSuite {
   test("compactEvery = 1 refuses at sink construction (degenerate self-merge)") {
     val docs = Seq((0L, tA)).toDF("doc_id", "text")
     val e = intercept[IllegalArgumentException] {
-      ArchiveDedup.archiveDedupSink(docs, tmp("graft-arch-k1"),
-        tmp("graft-arch-k1p"), "doc_id", "text", compactEvery = 1)
+      ArchiveDedup.archiveSink(docs, tmp("graft-arch-k1"),
+        tmp("graft-arch-k1p"), "doc_id", "text", 0.5, compactEvery = 1)
     }
     assert(e.getMessage.contains("degenerate"), e.getMessage)
   }
@@ -549,21 +574,21 @@ class ArchiveDedupSpec extends AnyFunSuite {
     }
     val archive = tmp("graft-arch-race")
     val pairsDir = tmp("graft-arch-race-pairs")
-    ArchiveDedup.seedCosineArchive(
+    ArchiveDedup.seedArchive(Dedup.buildCosineIndex(
       Seq((0L, vec(1)), (1L, vec(2))).toDF("vec_id", "embedding"),
-      archive, "vec_id", "embedding", numBits = 4, bands = 4)
-    ArchiveDedup.processCosineBatch(
+      "vec_id", "embedding", numBits = 4, bands = 4), archive)
+    ArchiveDedup.processBatch(
       Seq((10L, vec(3))).toDF("vec_id", "embedding"), 0L, archive, pairsDir,
       "vec_id", "embedding", 0.95)
     // capture the state an out-of-band reseed would build from…
     val stale = ArchiveDedup.stateOf(spark, archive)
     assert(stale.lastFolded === 0L)
     // …then a running stream folds another batch mid-build
-    ArchiveDedup.processCosineBatch(
+    ArchiveDedup.processBatch(
       Seq((11L, vec(4))).toDF("vec_id", "embedding"), 1L, archive, pairsDir,
       "vec_id", "embedding", 0.95)
     val ex = intercept[IllegalStateException] {
-      ArchiveDedup.reseedCosine(spark, archive, stale, 0L)
+      ArchiveDedup.reseedInPlace(spark, archive, Dedup.CosineIndex, stale, 0L)
     }
     assert(ex.getMessage.contains("aborting reseed"),
       s"race must abort loudly: ${ex.getMessage}")
@@ -572,10 +597,10 @@ class ArchiveDedupSpec extends AnyFunSuite {
     assert(!names.exists(_.startsWith(".inprogress")),
       s"aborted reseed must clean its temp dir: $names")
     // the archive is untouched — a correctly-sequenced reseed still works
-    ArchiveDedup.reseedCosineArchive(spark, archive)
+    ArchiveDedup.reseedArchive(spark, archive)
     assert(new java.io.File(archive).listFiles().map(_.getName).toSet
       .contains("r1"))
-    assert(ArchiveDedup.loadLatestCosine(spark, archive)._1.vecs.count() === 4L)
+    assert(ArchiveDedup.loadLatest(spark, archive, Dedup.CosineIndex)._1.vecs.count() === 4L)
   }
 
   test("manifest cache: a re-created archive at the same path serves fresh manifests") {
@@ -584,7 +609,7 @@ class ArchiveDedupSpec extends AnyFunSuite {
     // OLD archive: gapped ids {0, 5} merge into c0-5 with manifest {0, 5};
     // read state so this JVM caches that manifest
     ArchiveDedup.seedArchive(
-      Seq((0L, tA)).toDF("doc_id", "text"), archive, "doc_id", "text")
+      Dedup.buildMinhashIndex(Seq((0L, tA)).toDF("doc_id", "text"), "doc_id", "text"), archive)
     ArchiveDedup.processBatch(Seq((10L, tB)).toDF("doc_id", "text"), 0L,
       archive, pairsDir, "doc_id", "text", 0.5, compactEvery = 2)
     ArchiveDedup.processBatch(Seq((11L, tB)).toDF("doc_id", "text"), 5L,
@@ -595,7 +620,7 @@ class ArchiveDedupSpec extends AnyFunSuite {
     // delete and RE-CREATE the archive at the same path in the same JVM
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(archive))
     ArchiveDedup.seedArchive(
-      Seq((0L, tA)).toDF("doc_id", "text"), archive, "doc_id", "text")
+      Dedup.buildMinhashIndex(Seq((0L, tA)).toDF("doc_id", "text"), "doc_id", "text"), archive)
     // new life: batches 0, 2, 5 merge into a NEW c0-5 with manifest {0,2,5}
     Seq(0L, 2L, 5L).foreach { b =>
       ArchiveDedup.processBatch(
@@ -609,11 +634,11 @@ class ArchiveDedupSpec extends AnyFunSuite {
     // batch 2 — only the (fresh) manifest can prove it folded
     ArchiveDedup.processBatch(Seq((30L, tB)).toDF("doc_id", "text"), 6L,
       archive, pairsDir, "doc_id", "text", 0.5, compactEvery = 3)
-    val before = ArchiveDedup.loadLatest(spark, archive)._1.sets.count()
+    val before = ArchiveDedup.loadLatest(spark, archive, Dedup.MinhashIndex)._1.sets.count()
     ArchiveDedup.processBatch(
       Seq((22L, tB)).toDF("doc_id", "text"), 2L, archive, pairsDir,
       "doc_id", "text", 0.5, compactEvery = 3)
-    assert(ArchiveDedup.loadLatest(spark, archive)._1.sets.count() === before,
+    assert(ArchiveDedup.loadLatest(spark, archive, Dedup.MinhashIndex)._1.sets.count() === before,
       "manifest-covered replay must skip, not double-fold")
   }
 
@@ -625,14 +650,15 @@ class ArchiveDedupSpec extends AnyFunSuite {
     // modality detection is read from the archive itself
     val mArch = tmp("graft-fac-m"); val cArch = tmp("graft-fac-c")
     val sArch = tmp("graft-fac-s")
-    ArchiveDedup.seedArchive(Seq((0L, tA)).toDF("doc_id", "text"),
-      mArch, "doc_id", "text")
-    ArchiveDedup.seedCosineArchive(
-      Seq((0L, vec(1))).toDF("vec_id", "embedding"), cArch,
-      "vec_id", "embedding", numBits = 4, bands = 4)
-    ArchiveDedup.seedSemanticArchive(
-      Seq((0L, vec(1))).toDF("vec_id", "embedding"), sArch,
-      "vec_id", "embedding", Array(vec(1)))
+    ArchiveDedup.seedArchive(Dedup.buildMinhashIndex(
+      Seq((0L, tA)).toDF("doc_id", "text"),
+      "doc_id", "text"), mArch)
+    ArchiveDedup.seedArchive(
+      Dedup.buildCosineIndex(Seq((0L, vec(1))).toDF("vec_id", "embedding"),
+      "vec_id", "embedding", numBits = 4, bands = 4), cArch)
+    ArchiveDedup.seedArchive(
+      Dedup.buildSemanticIndex(Seq((0L, vec(1))).toDF("vec_id", "embedding"),
+      "vec_id", "embedding", Array(vec(1))), sArch)
     assert(ArchiveDedup.modalityOf(spark, mArch) === "minhash")
     assert(ArchiveDedup.modalityOf(spark, cArch) === "cosine")
     assert(ArchiveDedup.modalityOf(spark, sArch) === "semantic")
@@ -670,11 +696,12 @@ class ArchiveDedupSpec extends AnyFunSuite {
   test("end-to-end through a MemoryStream foreachBatch sink") {
     val archive = tmp("graft-arch-s")
     val pairsDir = tmp("graft-arch-s-pairs")
-    ArchiveDedup.seedArchive(
-      Seq((0L, tA), (1L, tC)).toDF("doc_id", "text"), archive, "doc_id", "text")
+    ArchiveDedup.seedArchive(Dedup.buildMinhashIndex(
+      Seq((0L, tA), (1L, tC)).toDF("doc_id", "text"),
+      "doc_id", "text"), archive)
     implicit val sqlCtx = spark.sqlContext
     val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val q = ArchiveDedup.archiveDedupSink(
+    val q = ArchiveDedup.archiveSink(
       mem.toDS().toDF("doc_id", "text"), archive, pairsDir, "doc_id", "text", 0.5)
     try {
       mem.addData((10L, tA))
@@ -685,7 +712,7 @@ class ArchiveDedupSpec extends AnyFunSuite {
       assert(got.contains((0L, 10L)), s"stream batch 1 vs seed: $got")
       assert(got.contains((10L, 20L)) && got.contains((0L, 20L)),
         s"stream batch 2 vs seed + folded batch 1: $got")
-      val (_, v) = ArchiveDedup.loadLatest(spark, archive)
+      val (_, v) = ArchiveDedup.loadLatest(spark, archive, Dedup.MinhashIndex)
       assert(v >= 1L)
     } finally q.stop()
   }
@@ -702,10 +729,10 @@ class ArchiveDedupSpec extends AnyFunSuite {
     // blocked θ-scan over the SURVIVING stored vectors
     val cArch = tmp("graft-audit-c")
     val cPairs = tmp("graft-audit-cp")
-    ArchiveDedup.seedCosineArchive(
-      rows.take(6).toDF("vec_id", "embedding"), cArch, "vec_id", "embedding",
-      numBits = 4, bands = 4)
-    ArchiveDedup.processCosineBatch(
+    ArchiveDedup.seedArchive(
+      Dedup.buildCosineIndex(rows.take(6).toDF("vec_id", "embedding"), "vec_id", "embedding",
+      numBits = 4, bands = 4), cArch)
+    ArchiveDedup.processBatch(
       rows.drop(6).toDF("vec_id", "embedding"), 0L, cArch, cPairs,
       "vec_id", "embedding", 0.95)
     ArchiveDedup.forgetDocs(spark, cArch,
@@ -732,10 +759,10 @@ class ArchiveDedupSpec extends AnyFunSuite {
     val sPairs = tmp("graft-audit-sp")
     val members = Seq((0L, near(c0, 0.01f, 0)), (1L, near(c0, 0.02f, 1)),
       (2L, near(c1, 0.01f, 2)), (3L, near(c1, 0.02f, 3)))
-    ArchiveDedup.seedSemanticArchive(
-      members.take(3).toDF("vec_id", "embedding"), sArch,
-      "vec_id", "embedding", Array(c0, c1))
-    ArchiveDedup.processSemanticBatch(
+    ArchiveDedup.seedArchive(
+      Dedup.buildSemanticIndex(members.take(3).toDF("vec_id", "embedding"),
+      "vec_id", "embedding", Array(c0, c1)), sArch)
+    ArchiveDedup.processBatch(
       members.drop(3).toDF("vec_id", "embedding"), 0L, sArch, sPairs,
       "vec_id", "embedding", 0.9)
     ArchiveDedup.forgetDocs(spark, sArch, Seq(0L).toDF("id"))

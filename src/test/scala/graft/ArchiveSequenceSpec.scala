@@ -338,13 +338,13 @@ class ArchiveSequenceSpec extends AnyFunSuite {
       val ids = nextDoc until (nextDoc + n); nextDoc += n; ids
     }
     val m = new Model(freshIds(plan.seedN), plan.compactEvery)
-    ArchiveDedup.seedArchive(docsDf(m.seedIds), dir, "doc_id", "text")
+    ArchiveDedup.seedArchive(Dedup.buildMinhashIndex(docsDf(m.seedIds), "doc_id", "text"), dir)
 
     def obsOf(sets: DataFrame, buckets: DataFrame): Any =
       (sets.collect().map(r => r.getLong(0) -> r.getSeq[Any](1).toVector).toMap,
         buckets.collect().map(r => (r.get(0), r.get(1))).toSet)
     def check(where: String): Unit = {
-      val (ix, _) = ArchiveDedup.loadLatest(spark, dir)
+      val (ix, _) = ArchiveDedup.loadLatest(spark, dir, Dedup.MinhashIndex)
       val fresh = Dedup.buildMinhashIndex(docsDf(m.survivors), "doc_id", "text")
       assert(obsOf(ix.sets, ix.buckets) === obsOf(fresh.sets, fresh.buckets),
         s"minhash seq $seqIdx: archive != fresh build over survivors $where " +
@@ -357,7 +357,7 @@ class ArchiveSequenceSpec extends AnyFunSuite {
       if (pick < 4) { // fold
         val ids = freshIds(2 + d.a % 3)
         ArchiveDedup.processBatch(docsDf(ids), m.nextBatch, dir, pairsDir,
-          "doc_id", "text", 0.5, m.compactEvery)
+          "doc_id", "text", 0.5, compactEvery = m.compactEvery)
         m.onFold(m.nextBatch, ids); m.nextBatch += 1
       } else if (pick < 7) { // forget a live subset (never the last doc)
         val live = m.survivors
@@ -374,7 +374,7 @@ class ArchiveSequenceSpec extends AnyFunSuite {
         if (m.folded.nonEmpty) {
           val (bid, ids) = m.folded(d.a % m.folded.length)
           ArchiveDedup.processBatch(docsDf(ids), bid, dir, pairsDir,
-            "doc_id", "text", 0.5, m.compactEvery)
+            "doc_id", "text", 0.5, compactEvery = m.compactEvery)
         }
       } else if (pick == 8) { // reseed over the surviving corpus
         if (m.folded.nonEmpty)
@@ -416,10 +416,10 @@ class ArchiveSequenceSpec extends AnyFunSuite {
       val ids = nextDoc until (nextDoc + n); nextDoc += n; ids
     }
     val m = new Model(freshIds(plan.seedN), plan.compactEvery)
-    ArchiveDedup.seedCosineArchive(vecsDf(m.seedIds), dir, "vec_id", "v")
+    ArchiveDedup.seedArchive(Dedup.buildCosineIndex(vecsDf(m.seedIds), "vec_id", "v"), dir)
 
     def check(where: String): Unit = {
-      val (ix, _) = ArchiveDedup.loadLatestCosine(spark, dir)
+      val (ix, _) = ArchiveDedup.loadLatest(spark, dir, Dedup.CosineIndex)
       val got = ix.vecs.collect()
         .map(r => r.getLong(0) -> r.getSeq[Float](1).toVector).toMap
       val want = m.survivors.map(id => id -> vec(id).toVector).toMap
@@ -437,7 +437,7 @@ class ArchiveSequenceSpec extends AnyFunSuite {
       val pick = d.pick % 10
       if (pick < 4) { // fold
         val ids = freshIds(2 + d.a % 3)
-        ArchiveDedup.processCosineBatch(vecsDf(ids), m.nextBatch, dir,
+        ArchiveDedup.processBatch(vecsDf(ids), m.nextBatch, dir,
           pairsDir, "vec_id", "v", 0.9, compactEvery = m.compactEvery)
         m.onFold(m.nextBatch, ids); m.nextBatch += 1
       } else if (pick < 7) { // forget a live subset (never the last doc)
@@ -454,12 +454,12 @@ class ArchiveSequenceSpec extends AnyFunSuite {
       } else if (pick == 7) { // replay: must skip
         if (m.folded.nonEmpty) {
           val (bid, ids) = m.folded(d.a % m.folded.length)
-          ArchiveDedup.processCosineBatch(vecsDf(ids), bid, dir, pairsDir,
+          ArchiveDedup.processBatch(vecsDf(ids), bid, dir, pairsDir,
             "vec_id", "v", 0.9, compactEvery = m.compactEvery)
         }
       } else if (pick == 8) { // in-place reseed (re-randomized hyperplanes)
         if (m.folded.nonEmpty)
-          ArchiveDedup.reseedCosineArchive(spark, dir)
+          ArchiveDedup.reseedArchive(spark, dir)
       } else { // retry/invalid forget: ledgered ids SKIP, unknown ids refuse
         if (m.retracted.nonEmpty && d.a % 2 == 0)
           ArchiveDedup.forgetDocs(spark, dir, Seq(m.retracted.head).toDF("id"))
@@ -502,11 +502,11 @@ class ArchiveSequenceSpec extends AnyFunSuite {
     }
     val m = new Model(freshIds(plan.seedN), plan.compactEvery)
     val centroids = Array(vec(1L).toArray, vec(5L).toArray, vec(11L).toArray)
-    ArchiveDedup.seedSemanticArchive(vecsDf(m.seedIds), dir, "vec_id", "v",
-      centroids)
+    ArchiveDedup.seedArchive(Dedup.buildSemanticIndex(vecsDf(m.seedIds), "vec_id", "v",
+      centroids), dir)
 
     def check(where: String): Unit = {
-      val (ix, _) = ArchiveDedup.loadLatestSemantic(spark, dir)
+      val (ix, _) = ArchiveDedup.loadLatest(spark, dir, Dedup.SemanticIndex)
       val got = ix.members.select(col("id"), col("v")).collect()
         .map(r => r.getLong(0) -> r.getSeq[Float](1).toVector).toMap
       val want = m.survivors.map(id => id -> vec(id).toVector).toMap
@@ -520,7 +520,7 @@ class ArchiveSequenceSpec extends AnyFunSuite {
       val pick = d.pick % 10
       if (pick < 4) { // fold
         val ids = freshIds(2 + d.a % 3)
-        ArchiveDedup.processSemanticBatch(vecsDf(ids), m.nextBatch, dir,
+        ArchiveDedup.processBatch(vecsDf(ids), m.nextBatch, dir,
           pairsDir, "vec_id", "v", 0.9, compactEvery = m.compactEvery)
         m.onFold(m.nextBatch, ids); m.nextBatch += 1
       } else if (pick < 7) { // forget
@@ -537,13 +537,13 @@ class ArchiveSequenceSpec extends AnyFunSuite {
       } else if (pick == 7) { // replay: must skip
         if (m.folded.nonEmpty) {
           val (bid, ids) = m.folded(d.a % m.folded.length)
-          ArchiveDedup.processSemanticBatch(vecsDf(ids), bid, dir, pairsDir,
+          ArchiveDedup.processBatch(vecsDf(ids), bid, dir, pairsDir,
             "vec_id", "v", 0.9, compactEvery = m.compactEvery)
         }
       } else if (pick == 8) { // reseed: centroids re-fit to the survivors
         // k=3 refit needs at least k surviving members
         if (m.folded.nonEmpty && m.survivors.size >= 4)
-          ArchiveDedup.reseedSemanticArchive(spark, dir)
+          ArchiveDedup.reseedArchive(spark, dir)
       } else { // retry/invalid forget: ledgered ids SKIP, unknown ids refuse
         if (m.retracted.nonEmpty && d.a % 2 == 0)
           ArchiveDedup.forgetDocs(spark, dir, Seq(m.retracted.head).toDF("id"))

@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Dedup
 import graft.streaming.ArchiveDedup
 import graft.streaming.ArchiveDedup.ArchiveState
 import org.apache.spark.sql.functions._
@@ -124,11 +125,11 @@ class ArchiveStateSpec extends AnyFunSuite {
   test("reader plan is O(1) in stream age: one FileScan per component however many entries") {
     val archive = java.nio.file.Files.createTempDirectory("graft-arch-o1").toString
     val pairsDir = java.nio.file.Files.createTempDirectory("graft-arch-o1p").toString
-    ArchiveDedup.seedArchive(
+    ArchiveDedup.seedArchive(Dedup.buildMinhashIndex(
       Seq((0L, "alpha beta gamma delta epsilon zeta")).toDF("doc_id", "text"),
-      archive, "doc_id", "text")
+      "doc_id", "text"), archive)
     def scanCount(): Int = {
-      val (ix, _) = ArchiveDedup.loadLatest(spark, archive)
+      val (ix, _) = ArchiveDedup.loadLatest(spark, archive, Dedup.MinhashIndex)
       ix.buckets.queryExecution.executedPlan.toString
         .linesIterator.count(_.contains("FileScan"))
     }

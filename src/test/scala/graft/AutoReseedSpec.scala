@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Dedup
 import graft.streaming.ArchiveDedup
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -51,13 +52,13 @@ class AutoReseedSpec extends AnyFunSuite {
     val pairsDir = tmp("graft-rs-c-pairs")
     val driftDir = tmp("graft-rs-c-drift")
     val seedDf = (0L until 100L).map(i => (i, gauss(i, dim))).toDF("vec_id", "embedding")
-    ArchiveDedup.seedCosineArchive(seedDf, archive, "vec_id", "embedding",
-      numBits = 8, bands = 8, dim = dim)
+    ArchiveDedup.seedArchive(Dedup.buildCosineIndex(seedDf, "vec_id", "embedding",
+      numBits = 8, bands = 8, dim = dim), archive)
 
     def batch(ids: Range) = ids.map(i => (i.toLong, drifted(i.toLong, dim)))
       .toDF("vec_id", "embedding")
     def process(df: org.apache.spark.sql.DataFrame, id: Long): Unit =
-      ArchiveDedup.processCosineBatch(df, id, archive, pairsDir,
+      ArchiveDedup.processBatch(df, id, archive, pairsDir,
         "vec_id", "embedding", 0.95, compactEvery = 2,
         driftDir = Some(driftDir), autoReseedAfter = 2)
 
@@ -76,7 +77,7 @@ class AutoReseedSpec extends AnyFunSuite {
       "fresh baseline pinned inside the generation")
 
     // read equivalence: the generation flip loses no rows
-    val (live, last) = ArchiveDedup.loadLatestCosine(spark, archive)
+    val (live, last) = ArchiveDedup.loadLatest(spark, archive, Dedup.CosineIndex)
     assert(last === 1L && live.vecs.count() === 124L)
     assert(live.seed === newParams.getAs[Long]("seed"),
       "readers see the new generation's params")
@@ -117,12 +118,12 @@ class AutoReseedSpec extends AnyFunSuite {
     // replay of a pre-reseed batch: covered by r1's manifest — skips
     // without error, nothing double-folds
     process(batch(1000 until 1012), 0L)
-    assert(ArchiveDedup.loadLatestCosine(spark, archive)._1.vecs.count() === 148L)
+    assert(ArchiveDedup.loadLatest(spark, archive, Dedup.CosineIndex)._1.vecs.count() === 148L)
 
     // out-of-band reseed entry point works against the same dir
-    ArchiveDedup.reseedCosineArchive(spark, archive)
+    ArchiveDedup.reseedArchive(spark, archive)
     assert(names(archive).contains("r3"))
-    assert(ArchiveDedup.loadLatestCosine(spark, archive)._1.vecs.count() === 148L)
+    assert(ArchiveDedup.loadLatest(spark, archive, Dedup.CosineIndex)._1.vecs.count() === 148L)
   }
 
   test("cosine: non-consecutive trips do NOT reseed") {
@@ -130,11 +131,11 @@ class AutoReseedSpec extends AnyFunSuite {
     val archive = tmp("graft-rs-nc")
     val pairsDir = tmp("graft-rs-nc-pairs")
     val driftDir = tmp("graft-rs-nc-drift")
-    ArchiveDedup.seedCosineArchive(
+    ArchiveDedup.seedArchive(Dedup.buildCosineIndex(
       (0L until 100L).map(i => (i, gauss(i, dim))).toDF("vec_id", "embedding"),
-      archive, "vec_id", "embedding", numBits = 8, bands = 8, dim = dim)
+      "vec_id", "embedding", numBits = 8, bands = 8, dim = dim), archive)
     def process(df: org.apache.spark.sql.DataFrame, id: Long): Unit =
-      ArchiveDedup.processCosineBatch(df, id, archive, pairsDir,
+      ArchiveDedup.processBatch(df, id, archive, pairsDir,
         "vec_id", "embedding", 0.95, driftDir = Some(driftDir),
         autoReseedAfter = 2)
     // trip, quiet, trip: the trend broke — no reseed
@@ -173,13 +174,13 @@ class AutoReseedSpec extends AnyFunSuite {
     val archive = tmp("graft-rs-s")
     val pairsDir = tmp("graft-rs-s-pairs")
     val driftDir = tmp("graft-rs-s-drift")
-    ArchiveDedup.seedSemanticArchive(
+    ArchiveDedup.seedArchive(Dedup.buildSemanticIndex(
       ((0L until 8L).map(i => (i, near(c0, i))) ++
-        (8L until 16L).map(i => (i, near(c1, i)))).toDF("vec_id", "embedding"),
-      archive, "vec_id", "embedding", Array(c0, c1))
+      (8L until 16L).map(i => (i, near(c1, i)))).toDF("vec_id", "embedding"),
+      "vec_id", "embedding", Array(c0, c1)), archive)
 
     def process(rows: Seq[(Long, Array[Float])], id: Long): Unit =
-      ArchiveDedup.processSemanticBatch(rows.toDF("vec_id", "embedding"), id,
+      ArchiveDedup.processBatch(rows.toDF("vec_id", "embedding"), id,
         archive, pairsDir, "vec_id", "embedding", 0.95, compactEvery = 2,
         driftDir = Some(driftDir), autoReseedAfter = 2)
 
@@ -210,7 +211,7 @@ class AutoReseedSpec extends AnyFunSuite {
       "re-fitted centroids absorb the new region — probe quiet")
 
     // read equivalence + pinned-centroid flip
-    val (live, _) = ArchiveDedup.loadLatestSemantic(spark, archive)
+    val (live, _) = ArchiveDedup.loadLatest(spark, archive, Dedup.SemanticIndex)
     assert(live.members.count() === 30L)
     assert(live.centroids.length === 2)
     assert(!live.centroids.map(_.toSeq).toSet
@@ -223,28 +224,28 @@ class AutoReseedSpec extends AnyFunSuite {
     val dim = 16
     val archive = tmp("graft-rs-orphan")
     val pairsDir = tmp("graft-rs-orphan-pairs")
-    ArchiveDedup.seedCosineArchive(
+    ArchiveDedup.seedArchive(Dedup.buildCosineIndex(
       (0L until 40L).map(i => (i, gauss(i, dim))).toDF("vec_id", "embedding"),
-      archive, "vec_id", "embedding", numBits = 8, bands = 8, dim = dim)
-    ArchiveDedup.processCosineBatch(
+      "vec_id", "embedding", numBits = 8, bands = 8, dim = dim), archive)
+    ArchiveDedup.processBatch(
       (100L until 110L).map(i => (i, gauss(i, dim))).toDF("vec_id", "embedding"),
       0L, archive, pairsDir, "vec_id", "embedding", 0.95)
-    ArchiveDedup.reseedCosineArchive(spark, archive) // r0, rotated seed
+    ArchiveDedup.reseedArchive(spark, archive) // r0, rotated seed
     // the state commitReseed's guard cannot see: an in-flight batch that
     // loaded the OLD generation (seed 42) lands AFTER the reseed rename —
     // simulate by hand-committing its sliver under the superseded params
-    Dedup.saveCosineIndex(Dedup.buildCosineIndex(
+    Dedup.save(Dedup.buildCosineIndex(
       (200L until 204L).map(i => (i, gauss(i, dim))).toDF("vec_id", "embedding"),
       "vec_id", "embedding", numBits = 8, bands = 8, dim = dim, seed = 42L),
       s"$archive/b1")
     val ex = intercept[IllegalStateException] {
-      ArchiveDedup.loadLatestCosine(spark, archive)
+      ArchiveDedup.loadLatest(spark, archive, Dedup.CosineIndex)
     }
     assert(ex.getMessage.contains("superseded generation"),
       s"orphan sliver must refuse loudly: ${ex.getMessage}")
     // deleting the orphan restores reads (the message's remedy)
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$archive/b1"))
-    assert(ArchiveDedup.loadLatestCosine(spark, archive)._1.vecs.count() === 50L)
+    assert(ArchiveDedup.loadLatest(spark, archive, Dedup.CosineIndex)._1.vecs.count() === 50L)
   }
 
   test("minhash: out-of-band reseed needs the exact archived corpus and re-bands under new widths") {
@@ -253,7 +254,7 @@ class AutoReseedSpec extends AnyFunSuite {
     val archive = tmp("graft-rs-m")
     val pairsDir = tmp("graft-rs-m-pairs")
     val day0 = Seq((0L, tA), (1L, tB)).toDF("doc_id", "text")
-    ArchiveDedup.seedArchive(day0, archive, "doc_id", "text")
+    ArchiveDedup.seedArchive(Dedup.buildMinhashIndex(day0, "doc_id", "text"), archive)
     ArchiveDedup.processBatch(Seq((10L, tA)).toDF("doc_id", "text"), 0L,
       archive, pairsDir, "doc_id", "text", 0.5)
 
@@ -267,7 +268,7 @@ class AutoReseedSpec extends AnyFunSuite {
     ArchiveDedup.reseedMinhashArchive(full, archive, "doc_id", "text",
       numHashes = 32, bands = 8)
     assert(names(archive).contains("r0"))
-    val (live, _) = ArchiveDedup.loadLatest(spark, archive)
+    val (live, _) = ArchiveDedup.loadLatest(spark, archive, Dedup.MinhashIndex)
     assert(live.numHashes === 32 && live.bands === 8,
       "readers band under the reseeded widths")
     assert(live.sets.count() === 3L)

@@ -180,9 +180,9 @@ class CrashRecoverySpec extends AnyFunSuite {
   test("minhash sink: both crash windows — pre-rename retry commits, post-commit replay skips") {
     val dir = tmp("graft-crash-mh")
     val pairsDir = tmp("graft-crash-mh-p")
-    ArchiveDedup.seedArchive(docsDf(0L to 2L), dir, "doc_id", "text")
+    ArchiveDedup.seedArchive(Dedup.buildMinhashIndex(docsDf(0L to 2L), "doc_id", "text"), dir)
     def obs(): Any = {
-      val (ix, _) = ArchiveDedup.loadLatest(spark, dir)
+      val (ix, _) = ArchiveDedup.loadLatest(spark, dir, Dedup.MinhashIndex)
       (ix.sets.collect().map(r => r.getLong(0) -> r.getSeq[Any](1).toVector).toMap,
         ix.buckets.collect().map(r => (r.get(0), r.get(1))).toSet)
     }
@@ -310,12 +310,12 @@ class CrashRecoverySpec extends AnyFunSuite {
   test("minhash compaction merge crash: pre-rename keeps slivers live; post-commit replay never double-folds") {
     val dir = tmp("graft-crash-mh-m")
     val pairsDir = tmp("graft-crash-mh-m-p")
-    ArchiveDedup.seedArchive(docsDf(0L to 1L), dir, "doc_id", "text")
+    ArchiveDedup.seedArchive(Dedup.buildMinhashIndex(docsDf(0L to 1L), "doc_id", "text"), dir)
     def fold(b: Long, ids: Seq[Long]): Unit =
       ArchiveDedup.processBatch(docsDf(ids), b, dir, pairsDir,
         "doc_id", "text", 0.5, compactEvery = 2)
     def obs(): Any = {
-      val (ix, _) = ArchiveDedup.loadLatest(spark, dir)
+      val (ix, _) = ArchiveDedup.loadLatest(spark, dir, Dedup.MinhashIndex)
       ix.sets.collect().map(r => r.getLong(0) -> r.getSeq[Any](1).toVector).toMap
     }
     def fresh(ids: Seq[Long]): Any =
@@ -354,11 +354,11 @@ class CrashRecoverySpec extends AnyFunSuite {
   test("takedown crash-retry: a post-commit crash re-retries into a ledger SKIP; the ledger rides through reseeds") {
     val dir = tmp("graft-crash-ledger")
     val pairsDir = tmp("graft-crash-ledger-p")
-    ArchiveDedup.seedArchive(docsDf(0L to 3L), dir, "doc_id", "text")
+    ArchiveDedup.seedArchive(Dedup.buildMinhashIndex(docsDf(0L to 3L), "doc_id", "text"), dir)
     ArchiveDedup.processBatch(docsDf(10L to 12L), 0L, dir, pairsDir,
       "doc_id", "text", 0.5, compactEvery = 0)
     def archivedIds(): Set[Long] = {
-      val (ix, _) = ArchiveDedup.loadLatest(spark, dir)
+      val (ix, _) = ArchiveDedup.loadLatest(spark, dir, Dedup.MinhashIndex)
       ix.sets.collect().map(_.getLong(0)).toSet
     }
     // the takedown's generation commit is durable, then the process
@@ -400,7 +400,7 @@ class CrashRecoverySpec extends AnyFunSuite {
   test("forget-under-load abort path: a fold racing the generation commit aborts the takedown; retry wins") {
     val dir = tmp("graft-crash-race")
     val pairsDir = tmp("graft-crash-race-p")
-    ArchiveDedup.seedArchive(docsDf(0L to 3L), dir, "doc_id", "text")
+    ArchiveDedup.seedArchive(Dedup.buildMinhashIndex(docsDf(0L to 3L), "doc_id", "text"), dir)
     ArchiveDedup.processBatch(docsDf(10L to 12L), 0L, dir, pairsDir,
       "doc_id", "text", 0.5, compactEvery = 0)
     def fresh(ids: Seq[Long]): Any = {
@@ -408,7 +408,7 @@ class CrashRecoverySpec extends AnyFunSuite {
       ix.sets.collect().map(_.getLong(0)).toSet
     }
     def archivedIds(): Any = {
-      val (ix, _) = ArchiveDedup.loadLatest(spark, dir)
+      val (ix, _) = ArchiveDedup.loadLatest(spark, dir, Dedup.MinhashIndex)
       ix.sets.collect().map(_.getLong(0)).toSet
     }
     // inject the racing fold at the EXACT window commitReseed

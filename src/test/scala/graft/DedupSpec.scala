@@ -197,8 +197,8 @@ class DedupSpec extends AnyFunSuite {
     assert(delta === batchRestricted)
     assert(delta.nonEmpty, "vacuous parity would prove nothing")
     val dir = java.nio.file.Files.createTempDirectory("graft-ix").toString
-    Dedup.saveMinhashIndex(ix, dir)
-    val reloaded = Dedup.loadMinhashIndex(spark, dir)
+    Dedup.save(ix, dir)
+    val reloaded = Dedup.load(spark, dir, Dedup.MinhashIndex)
     assert(reloaded.numHashes === 16 && reloaded.bands === 4 && reloaded.shingleLen === 3)
     val delta2 = pairSet(Dedup.minhashDeltaPairs(reloaded,
       corpus.where(col("doc_id") >= split), "doc_id", "text", threshold = 0.5))
@@ -392,8 +392,8 @@ class DedupSpec extends AnyFunSuite {
     assert(delta === batchRestricted)
     assert(delta.nonEmpty, "vacuous parity would prove nothing")
     val dir = java.nio.file.Files.createTempDirectory("graft-cix").toString
-    Dedup.saveCosineIndex(ix, dir)
-    val reloaded = Dedup.loadCosineIndex(spark, dir)
+    Dedup.save(ix, dir)
+    val reloaded = Dedup.load(spark, dir, Dedup.CosineIndex)
     assert(reloaded.numBits === 8 && reloaded.bands === 8 &&
       reloaded.dim === 64 && reloaded.seed === 42L)
     val delta2 = pairSet(Dedup.cosineDeltaPairs(reloaded,
@@ -450,7 +450,7 @@ class DedupSpec extends AnyFunSuite {
     assert(pairs.contains((11L, 12L)), "new×new")
     assert(!pairs.contains((0L, 1L)), "old×old must not be re-emitted")
     // fold the first delta in; the next delta then sees it as "old"
-    val grown = Dedup.appendToCosineIndex(ix, df.where(col("vec_id") >= 10 && col("vec_id") < 13),
+    val grown = Dedup.append(ix, df.where(col("vec_id") >= 10 && col("vec_id") < 13),
       "vec_id", "embedding")
     val next = Seq((20L, b)).toDF("vec_id", "embedding")
     val pairs2 = Dedup.cosineDeltaPairs(grown, next, "vec_id", "embedding",
@@ -465,7 +465,7 @@ class DedupSpec extends AnyFunSuite {
     val corpus = graft.Tables(spark, TestSpark.sfDir, "documents")
     val ix0 = Dedup.buildMinhashIndex(corpus.where(col("doc_id") < 400),
       "doc_id", "text", numHashes = 16, bands = 4, shingleLen = 3)
-    val ix1 = Dedup.appendToMinhashIndex(ix0,
+    val ix1 = Dedup.append(ix0,
       corpus.where(col("doc_id") >= 400 && col("doc_id") < 450), "doc_id", "text")
     val delta2 = Dedup.minhashDeltaPairs(ix1,
         corpus.where(col("doc_id") >= 450), "doc_id", "text", threshold = 0.5)
@@ -501,8 +501,8 @@ class DedupSpec extends AnyFunSuite {
     assert(delta === batchRestricted)
     assert(delta.nonEmpty, "vacuous parity would prove nothing")
     val dir = java.nio.file.Files.createTempDirectory("graft-six").toString
-    Dedup.saveSemanticIndex(ix, dir)
-    val reloaded = Dedup.loadSemanticIndex(spark, dir)
+    Dedup.save(ix, dir)
+    val reloaded = Dedup.load(spark, dir, Dedup.SemanticIndex)
     assert(reloaded.centroids.length === 4 &&
       reloaded.centroids(0).toSeq === cents(0).toSeq)
     val delta2 = pairSet(Dedup.semanticDeltaPairs(reloaded,
@@ -538,14 +538,14 @@ class DedupSpec extends AnyFunSuite {
     val ix0 = Dedup.buildMinhashIndex(docs.where(col("doc_id") < 4),
       "doc_id", "text", numHashes = 16, bands = 4, shingleLen = 3)
     val batch = docs.where(col("doc_id") >= 4)
-    val ix1 = Dedup.appendToMinhashIndex(ix0, batch, "doc_id", "text")
-    val back = Dedup.retractFromMinhashIndex(ix1,
+    val ix1 = Dedup.append(ix0, batch, "doc_id", "text")
+    val back = Dedup.retract(ix1,
       batch.select(col("doc_id")), "doc_id")
     assert(rowsOf(back.buckets) === rowsOf(ix0.buckets))
     assert(rowsOf(back.sets) === rowsOf(ix0.sets))
     // a forgotten document never pairs again: retract doc 1 (exact dup
     // of 0), then a delta near-dup of 0 pairs with 0 but NOT with 1
-    val scrubbed = Dedup.retractFromMinhashIndex(ix0,
+    val scrubbed = Dedup.retract(ix0,
       docs.where(col("doc_id") === 1L).select(col("doc_id")), "doc_id")
     val pairs = Dedup.minhashDeltaPairs(scrubbed,
         Seq((50L, "the quick brown fox jumps over the lazy dog"))
@@ -563,19 +563,19 @@ class DedupSpec extends AnyFunSuite {
     val cix0 = Dedup.buildCosineIndex(vecs, "vec_id", "embedding",
       numBits = 4, bands = 2)
     val cback = Dedup.retract(
-      Dedup.appendToCosineIndex(cix0, vbatch, "vec_id", "embedding"),
+      Dedup.append(cix0, vbatch, "vec_id", "embedding"),
       vbatch.select(col("vec_id")), "vec_id").asInstanceOf[Dedup.CosineIndex]
     assert(rowsOf(cback.buckets) === rowsOf(cix0.buckets))
     assert(rowsOf(cback.vecs) === rowsOf(cix0.vecs))
     val six0 = Dedup.buildSemanticIndex(vecs, "vec_id", "embedding",
       Array(a, c))
     val sback = Dedup.retract(
-      Dedup.appendToSemanticIndex(six0, vbatch, "vec_id", "embedding"),
+      Dedup.append(six0, vbatch, "vec_id", "embedding"),
       vbatch.select(col("vec_id")), "vec_id").asInstanceOf[Dedup.SemanticIndex]
     assert(rowsOf(sback.members) === rowsOf(six0.members))
     // retracting an id the index never held refuses loudly
     val e = intercept[IllegalArgumentException] {
-      Dedup.retractFromMinhashIndex(ix0,
+      Dedup.retract(ix0,
         Seq(999L).toDF("doc_id"), "doc_id")
     }
     assert(e.getMessage.contains("never") && e.getMessage.contains("folded"),
@@ -599,7 +599,7 @@ class DedupSpec extends AnyFunSuite {
     }
     assert(e2.getMessage.contains("unique within the batch"), e2.getMessage)
     intercept[IllegalArgumentException] {
-      Dedup.appendToMinhashIndex(ix, docs.where(col("doc_id") < 1), "doc_id", "text")
+      Dedup.append(ix, docs.where(col("doc_id") < 1), "doc_id", "text")
     }
     // cosine side shares the guard
     val edf = Seq((0L, Array.fill(8)(1.0f)), (1L, Array.fill(8)(0.5f)))
@@ -668,7 +668,7 @@ class DedupSpec extends AnyFunSuite {
     val cents = Array(vec(1), vec(3))
     val day0 = Seq((0L, vec(1)), (1L, vec(2)), (2L, vec(3))).toDF("vec_id", "embedding")
     val day1 = Seq((10L, vec(1)), (11L, vec(4))).toDF("vec_id", "embedding")
-    val grown = Dedup.appendToSemanticIndex(
+    val grown = Dedup.append(
       Dedup.buildSemanticIndex(day0, "vec_id", "embedding", cents),
       day1, "vec_id", "embedding")
     val oneShot = Dedup.buildSemanticIndex(day0.unionByName(day1),
@@ -680,7 +680,7 @@ class DedupSpec extends AnyFunSuite {
     assert(grown.centroids.map(_.toSeq) === cents.map(_.toSeq), "centroids pinned")
     // guard shared: appending an already-indexed id is loud
     intercept[IllegalArgumentException] {
-      Dedup.appendToSemanticIndex(grown, day0.limit(1), "vec_id", "embedding")
+      Dedup.append(grown, day0.limit(1), "vec_id", "embedding")
     }
   }
 

@@ -105,8 +105,8 @@ class DriftProbeSpec extends AnyFunSuite {
     val live = Dedup.buildMinhashIndex(seedDocs, "doc_id", "text",
       numHashes = 16, bands = 4, shingleLen = 3)
     val dir = java.nio.file.Files.createTempDirectory("graft-baseline").toString
-    Dedup.saveMinhashIndex(Dedup.pinDriftBaseline(live), dir)
-    val pinned = Dedup.loadMinhashIndex(spark, dir)
+    Dedup.save(Dedup.pinDriftBaseline(live), dir)
+    val pinned = Dedup.load(spark, dir, Dedup.MinhashIndex)
     val bl = pinned.baseline.getOrElse(fail("baseline must survive save/load"))
     assert(bl.seedKeyCount === 400L) // 100 docs × 4 bands
     assert(!bl.meanSetSize.isNaN && bl.meanSetSize > 0)
@@ -136,16 +136,16 @@ class DriftProbeSpec extends AnyFunSuite {
         (id, v.zip(cents(1)).map { case (x, c) => c + 0.1f * x }) })
       .toDF("vec_id", "embedding")
     val dir = java.nio.file.Files.createTempDirectory("graft-frog").toString
-    Dedup.saveSemanticIndex(
+    Dedup.save(
       Dedup.buildSemanticIndex(seed, "vec_id", "embedding", cents), dir)
-    val ix0 = Dedup.pinDriftBaseline(Dedup.loadSemanticIndex(spark, dir))
+    val ix0 = Dedup.pinDriftBaseline(Dedup.load(spark, dir, Dedup.SemanticIndex))
 
     // two drifted waves, appended in sequence — the corpus walks away
     // from the centroids batch by batch
     val wave1 = gauss(22, 50, dim, shift = 10f).toDF("vec_id", "embedding")
     val wave2 = gauss(23, 50, dim, shift = 10f)
       .map { case (id, v) => (id + 500000L, v) }.toDF("vec_id", "embedding")
-    val grown = Dedup.appendToSemanticIndex(ix0, wave1, "vec_id", "embedding")
+    val grown = Dedup.append(ix0, wave1, "vec_id", "embedding")
     assert(grown.baseline === ix0.baseline, "append must carry the pinned baseline")
 
     val pinnedProbe = Dedup.semanticDriftProbe(grown, wave2, "vec_id", "embedding").head()
@@ -189,11 +189,11 @@ class DriftProbeSpec extends AnyFunSuite {
     val dim = 8
     val cents = Array(Array.fill(dim)(1f), Array.fill(dim)(-1f))
     val archive = java.nio.file.Files.createTempDirectory("graft-drift-b").toString
-    graft.streaming.ArchiveDedup.seedSemanticArchive(
-      Seq((0L, cents(0).map(_ + 0.02f)), (1L, cents(1).map(_ - 0.02f)))
-        .toDF("vec_id", "embedding"),
-      archive, "vec_id", "embedding", cents)
-    val (ix, _) = graft.streaming.ArchiveDedup.loadLatestSemantic(spark, archive)
+    graft.streaming.ArchiveDedup.seedArchive(
+      Dedup.buildSemanticIndex(Seq((0L, cents(0).map(_ + 0.02f)), (1L, cents(1).map(_ - 0.02f)))
+        .toDF("vec_id", "embedding"), "vec_id", "embedding", cents),
+      archive)
+    val (ix, _) = graft.streaming.ArchiveDedup.loadLatest(spark, archive, Dedup.SemanticIndex)
     assert(ix.baseline.isDefined, "seeded archive must carry a pinned baseline")
     assert(!ix.baseline.get.meanDist.isNaN && ix.baseline.get.meanDist > 0)
   }
@@ -206,11 +206,11 @@ class DriftProbeSpec extends AnyFunSuite {
     val driftDir = java.nio.file.Files.createTempDirectory("graft-drift-d").toString
     // seed members sit NEAR the centroids, not on them (a zero seed
     // mean-distance would make any nonzero delta an infinite ratio)
-    graft.streaming.ArchiveDedup.seedSemanticArchive(
-      Seq((0L, cents(0).map(_ + 0.02f)), (1L, cents(1).map(_ - 0.02f)))
-        .toDF("vec_id", "embedding"),
-      archive, "vec_id", "embedding", cents)
-    graft.streaming.ArchiveDedup.processSemanticBatch(
+    graft.streaming.ArchiveDedup.seedArchive(
+      Dedup.buildSemanticIndex(Seq((0L, cents(0).map(_ + 0.02f)), (1L, cents(1).map(_ - 0.02f)))
+        .toDF("vec_id", "embedding"), "vec_id", "embedding", cents),
+      archive)
+    graft.streaming.ArchiveDedup.processBatch(
       Seq((10L, cents(0).map(_ + 0.01f))).toDF("vec_id", "embedding"),
       0L, archive, pairsDir, "vec_id", "embedding", 0.9,
       driftDir = Some(driftDir))

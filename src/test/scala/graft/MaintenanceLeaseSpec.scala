@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.CorpusStats
+import graft.operators.{CorpusStats, Dedup}
 import graft.streaming.{ArchiveDedup, MaintenanceLease}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -106,7 +106,9 @@ class MaintenanceLeaseSpec extends AnyFunSuite {
 
   test("dedup archives: forgetDocs and reseed refuse under a held lease") {
     val dir = tmp("graft-lease-mh")
-    ArchiveDedup.seedArchive(docs.where(col("doc_id") < 4), dir, "doc_id", "text")
+    ArchiveDedup.seedArchive(Dedup.buildMinhashIndex(
+      docs.where(col("doc_id") < 4),
+      "doc_id", "text"), dir)
     val pairs = tmp("graft-lease-mh-p")
     ArchiveDedup.processBatch(docs.where(col("doc_id") >= 4), 0L, dir, pairs,
       "doc_id", "text", 0.5)
@@ -122,7 +124,7 @@ class MaintenanceLeaseSpec extends AnyFunSuite {
     }
     // released: the takedown proceeds and is real
     ArchiveDedup.forgetDocs(spark, dir, Seq(4L).toDF("id"))
-    val (ix, _) = graft.streaming.ArchiveDedup.loadLatest(spark, dir)
+    val (ix, _) = graft.streaming.ArchiveDedup.loadLatest(spark, dir, Dedup.MinhashIndex)
     assert(ix.sets.where(col("id") === 4L).isEmpty)
   }
 

@@ -202,10 +202,10 @@ class PlanInvariantsSpec extends AnyFunSuite {
     import graft.operators.Dedup
     val docs = Tables(spark, dir, "documents")
     val tmp = java.nio.file.Files.createTempDirectory("graft-plan-mix").toString
-    Dedup.saveMinhashIndex(Dedup.buildMinhashIndex(
+    Dedup.save(Dedup.buildMinhashIndex(
       docs.where(col("doc_id") < 400), "doc_id", "text",
       numHashes = 16, bands = 4, shingleLen = 3), tmp)
-    val ix = Dedup.loadMinhashIndex(spark, tmp)
+    val ix = Dedup.load(spark, tmp, Dedup.MinhashIndex)
     val plan = planOf(Dedup.minhashDeltaScanInput(ix,
       docs.where(col("doc_id") >= 400), "doc_id", "text"))
     assertNoCartesian("q84-scan", plan)
@@ -222,9 +222,9 @@ class PlanInvariantsSpec extends AnyFunSuite {
       .select(col("embedding").cast("array<float>"))
       .collect().map(_.getSeq[Float](0).toArray)
     val tmp = java.nio.file.Files.createTempDirectory("graft-plan-six").toString
-    Dedup.saveSemanticIndex(Dedup.buildSemanticIndex(
+    Dedup.save(Dedup.buildSemanticIndex(
       e.where(col("vec_id") < 300), "vec_id", "embedding", cents), tmp)
-    val ix0 = Dedup.loadSemanticIndex(spark, tmp)
+    val ix0 = Dedup.load(spark, tmp, Dedup.SemanticIndex)
     // q88's shape: archived members enter through the index parquet
     // (their scans carry no vec_id attribute); the only vec_id-bearing
     // scans are the delta's argmin side, pushed-filtered to >= 400
@@ -238,7 +238,7 @@ class PlanInvariantsSpec extends AnyFunSuite {
     // its only corpus scans are the day-1 fold's, each carrying a pushed
     // vec_id bound (an UNBOUNDED corpus re-scan here would re-assign the
     // archive on every append)
-    val ix1 = Dedup.appendToSemanticIndex(ix0,
+    val ix1 = Dedup.append(ix0,
       e.where(col("vec_id") >= 300 && col("vec_id") < 400),
       "vec_id", "embedding")
     val appendPlan = planOf(Dedup.semanticDeltaScanInput(ix1,
@@ -258,10 +258,10 @@ class PlanInvariantsSpec extends AnyFunSuite {
     import graft.operators.Dedup
     val docs = Tables(spark, dir, "documents")
     val tmp = java.nio.file.Files.createTempDirectory("graft-plan-fac").toString
-    Dedup.saveMinhashIndex(Dedup.buildMinhashIndex(
+    Dedup.save(Dedup.buildMinhashIndex(
       docs.where(col("doc_id") < 400), "doc_id", "text",
       numHashes = 16, bands = 4, shingleLen = 3), tmp)
-    val ix = Dedup.loadMinhashIndex(spark, tmp)
+    val ix = Dedup.load(spark, tmp, Dedup.MinhashIndex)
     val out = Dedup.deltaPairs(ix, docs.where(col("doc_id") >= 400),
       "doc_id", "text", threshold = 0.5)
     // the facade normalizes, never recomputes: output is exactly the
@@ -441,10 +441,10 @@ class PlanInvariantsSpec extends AnyFunSuite {
     import graft.operators.{Dedup, SimilarityJoin}
     val e = Tables(spark, dir, "embeddings")
     val tmp = java.nio.file.Files.createTempDirectory("graft-plan-cix").toString
-    Dedup.saveCosineIndex(Dedup.buildCosineIndex(
+    Dedup.save(Dedup.buildCosineIndex(
       e.where(col("vec_id") < 400), "vec_id", "embedding",
       numBits = 8, bands = 8), tmp)
-    val ix = Dedup.loadCosineIndex(spark, tmp)
+    val ix = Dedup.load(spark, tmp, Dedup.CosineIndex)
     val plan = planOf(SimilarityJoin.cosineDeltaScanInput(ix.buckets, ix.vecs,
       e.where(col("vec_id") >= 400), "vec_id", "embedding",
       ix.numBits, ix.bands, ix.dim, ix.seed))
