@@ -201,19 +201,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts is INT64 TIMESTAMP(NANOS) — read as raw nanos
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the dedup grids shuffle RDDs of primitive-array tuples — Kryo
-      // (see Graft.configure) halves their exchange bytes vs Java ser
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session()
     spark.sparkContext.setLogLevel("WARN")
 
     // session warmup: JVM + codegen + parquet footer caches

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
 object Demo {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = Graft.session("local[*]")
+    val spark = Graft.session()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

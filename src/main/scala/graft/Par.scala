@@ -1,8 +1,9 @@
-package graft.operators
+package graft
 
 import org.apache.spark.sql.DataFrame
 
-/** Parallelism guards for compute-bound stages. */
+/** Parallelism helpers: widen compute-bound scans to the session's
+  * parallelism, and run independent driver-side actions concurrently. */
 private[graft] object Par {
 
   /**
@@ -36,5 +37,38 @@ private[graft] object Par {
       else (bytes + maxPart - 1) / maxPart
     val est = BigInt(files).max(bySize)
     if (est < p) df.repartition(p) else df
+  }
+
+  /**
+   * Run independent Spark actions concurrently from the driver — the
+   * commit-wall optimization shared by every archive entry commit, index
+   * save, and compaction merge: an entry's 2–4 component frames are
+   * independent jobs to independent paths, and writing them sequentially
+   * pays one job-floor wall each on EVERY streamed micro-batch. Failure
+   * semantics preserved everywhere it's used: the first failure
+   * propagates UNWRAPPED (not the pool's ExecutionException), and
+   * in-flight siblings finish before it does — leaving one running in
+   * the background while the caller unwinds would race subsequent reads
+   * and cleanups.
+   */
+  def run(tasks: Seq[() => Unit], maxThreads: Int = Int.MaxValue): Unit = {
+    if (tasks.isEmpty) return
+    if (tasks.length == 1) { tasks.head(); return }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.min(tasks.length, maxThreads))
+    try {
+      tasks.map(t =>
+        pool.submit(new java.util.concurrent.Callable[Unit] {
+          def call(): Unit = t()
+        })
+      ).foreach(f =>
+        try f.get()
+        catch {
+          case e: java.util.concurrent.ExecutionException => throw e.getCause
+        })
+    } finally {
+      pool.shutdown()
+      pool.awaitTermination(10, java.util.concurrent.TimeUnit.MINUTES)
+    }
   }
 }

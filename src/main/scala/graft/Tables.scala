@@ -12,13 +12,13 @@ object Tables {
     spark.read.parquet(s"$dir/$name.parquet")
 
   /** Repair scan parallelism for map-heavy plans over small
-    * unsplittable inputs — delegates to [[graft.operators.Par.widen]]
+    * unsplittable inputs — delegates to [[graft.Par.widen]]
     * (file-metadata split estimate, no AQE materialization): a no-op
     * at production file counts, an exchange exactly where the input
     * layout starves the plan. Use only on integer/string-valued
     * chains: float AGGREGATES keep their scan partitioning so
     * accumulation order (and the oracle's bit-exact hash) stays put. */
-  def fanOut(df: DataFrame): DataFrame = graft.operators.Par.widen(df)
+  def fanOut(df: DataFrame): DataFrame = graft.Par.widen(df)
 
   /** Collect one embedding as the query vector for k-NN entries. */
   def queryVector(spark: SparkSession, dir: String, vecId: Long): Array[Float] =

@@ -232,7 +232,7 @@ object AnnIndex {
         // scheduling floors; results are per-cluster atomic either way;
         // Par finishes in-flight sibling swaps before a failure
         // propagates, so the caller never races a background swap)
-        graft.streaming.Par.run(
+        graft.Par.run(
           affected.map(c => () => swapCluster(c)), maxThreads = 8)
       }
       // ledger BEFORE sidecar delete: a crash between the two leaves the

@@ -509,7 +509,7 @@ object CorpusStats {
     // rename below is still the single commit point, and a failure in
     // any component write surfaces before it (unwrapped from the
     // pool's wrapper).
-    graft.streaming.Par.run(comps.map { case (c, df) =>
+    graft.Par.run(comps.map { case (c, df) =>
       () => df.write.mode("overwrite").parquet(s"$tmp/$c")
     })
     if (ucounts && comps.exists(_._1 == "unigrams"))
@@ -735,7 +735,7 @@ object CorpusStats {
     // per-component folds write CONCURRENTLY (same rationale as
     // commitComponents: independent frames, independent paths, the
     // rename below is still the single commit point)
-    graft.streaming.Par.run(comps.map { case (c, fold) =>
+    graft.Par.run(comps.map { case (c, fold) =>
       () => {
         // mergeSchema: the merge set may mix pre-r13 bare-`h` unigram
         // entries with new (h, u_part) ones — same discipline as the

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Par
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
@@ -887,9 +888,9 @@ object Dedup {
     * (and therefore every streamed sliver commit through it) otherwise
     * pays one sequential job wall per component. Failures surface
     * unwrapped; in-flight siblings finish before the error propagates
-    * (see [[graft.streaming.Par]]). */
+    * (see [[graft.Par.run]]). */
   private def writeConcurrently(writes: (DataFrame, String)*): Unit =
-    graft.streaming.Par.run(writes.map { case (df, path) =>
+    Par.run(writes.map { case (df, path) =>
       () => df.write.mode("overwrite").parquet(path)
     })
 
@@ -1031,7 +1032,7 @@ object Dedup {
     private[graft] def measureBaseline(): DriftBaseline = {
       var keys: (Double, Long, Option[org.apache.spark.util.sketch.BloomFilter]) = null
       var mss = Double.NaN
-      graft.streaming.Par.run(Seq(
+      Par.run(Seq(
         () => { keys = bucketBaseline(buckets) },
         () => { mss = sets.select(avg(size(col("sh")))).head().getDouble(0) }))
       DriftBaseline(Double.NaN, keys._1, mss, keys._2, keys._3)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Par
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._

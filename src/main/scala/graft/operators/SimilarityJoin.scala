@@ -34,19 +34,16 @@ object SimilarityJoin {
 
   /** The grouped exchange under EVERY block-grid scan (cosine, jaccard,
     * semantic, and their delta forms): group grid rows by cell key, hand
-    * each cell's rows to a scan kernel. Two physically different but
-    * output-identical strategies:
-    *
-    *  - sort-based (default): `repartitionAndSortWithinPartitions` +
-    *    streamed sorted runs. The shuffle READ side never builds a
-    *    per-key map of spillable CompactBuffers — rows arrive sorted and
-    *    each cell materializes exactly once, in the scan's own buffer.
-    *    Measured at ×100 (200k×384 uncached cosine pair build, same-JVM
-    *    trimmed-mean-of-5, BENCH.md "Round 11"): 6.2–7.4 s vs
-    *    groupByKey's 11.9–18.2 s — the grouped-exchange buffering that
-    *    round 10 attributed as the pair-build floor WAS the floor.
-    *  - `groupByKey` (`-Dgraft.grid.sortShuffle=false`): the legacy
-    *    form, kept A/B-able so the claim stays re-measurable.
+    * each cell's rows to a scan kernel. Sort-based:
+    * `repartitionAndSortWithinPartitions` + streamed sorted runs, so the
+    * shuffle READ side never builds a per-key map of spillable
+    * CompactBuffers — rows arrive sorted and each cell materializes
+    * exactly once, in the scan's own buffer. Measured at ×100 (200k×384
+    * uncached cosine pair build, same-JVM trimmed-mean-of-5, BENCH.md
+    * "Round 11"): 6.2–7.4 s vs a `groupByKey` exchange's 11.9–18.2 s —
+    * the grouped-exchange buffering that round 10 attributed as the
+    * pair-build floor WAS the floor. (DedupSpec keeps the `groupByKey`
+    * form as the pair-identity reference.)
     *
     * The scan callback may consume its iterator lazily — each run is
     * materialized (one cell at a time, the same buffer the kernels
@@ -55,29 +52,23 @@ object SimilarityJoin {
     * payload-width. */
   private[graft] def scanCells[K: ClassTag: Ordering, V: ClassTag, R: ClassTag](
       grid: RDD[(K, V)], partitions: Int)(
-      scan: (K, Iterator[V]) => Iterator[R]): RDD[R] = {
-    val sortShuffle = sys.props.get("graft.grid.sortShuffle")
-      .orElse(sys.env.get("GRAFT_GRID_SORT_SHUFFLE"))
-      .forall(v => scala.util.Try(v.trim.toBoolean).getOrElse(true))
-    if (sortShuffle)
-      grid.repartitionAndSortWithinPartitions(new HashPartitioner(partitions))
-        .mapPartitions { it0 =>
-          val it = it0.buffered
-          new Iterator[R] {
-            private var cur: Iterator[R] = Iterator.empty
-            private def advance(): Unit =
-              while (!cur.hasNext && it.hasNext) {
-                val key = it.head._1
-                val buf = collection.mutable.ArrayBuffer.empty[V]
-                while (it.hasNext && it.head._1 == key) buf += it.next()._2
-                cur = scan(key, buf.iterator)
-              }
-            def hasNext: Boolean = { advance(); cur.hasNext }
-            def next(): R = { advance(); cur.next() }
-          }
+      scan: (K, Iterator[V]) => Iterator[R]): RDD[R] =
+    grid.repartitionAndSortWithinPartitions(new HashPartitioner(partitions))
+      .mapPartitions { it0 =>
+        val it = it0.buffered
+        new Iterator[R] {
+          private var cur: Iterator[R] = Iterator.empty
+          private def advance(): Unit =
+            while (!cur.hasNext && it.hasNext) {
+              val key = it.head._1
+              val buf = collection.mutable.ArrayBuffer.empty[V]
+              while (it.hasNext && it.head._1 == key) buf += it.next()._2
+              cur = scan(key, buf.iterator)
+            }
+          def hasNext: Boolean = { advance(); cur.hasNext }
+          def next(): R = { advance(); cur.next() }
         }
-    else grid.groupByKey(partitions).flatMap { case (k, vs) => scan(k, vs.iterator) }
-  }
+      }
 
   /** Exact upper-triangle pair similarities (i<j). Broadcast-size inputs only. */
   def allPairs(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
@@ -463,11 +454,12 @@ object SimilarityJoin {
             val mn = if (bs) m else mNew
             (nb, cf && mn > 0 && m > capL / math.max(1L, mn))
           }
-        meta.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         // plan-shape decision (does the scan need the min-mate reduce?)
         // needs a driver answer — one tiny job over the #groups-row
-        // metadata, never over the rows (blocks are freed by the
-        // ContextCleaner once the returned RDD is dereferenced)
+        // metadata, never over the rows. meta is NOT persisted: the join
+        // below re-reads the reduceByKey shuffle output this job already
+        // wrote (the map stage is skipped), so caching it would only
+        // leave a #groups-sized block behind in the context
         val nHot =
           if (!capFinite) 0L
           else meta.aggregate(0L)(
@@ -744,13 +736,10 @@ object SimilarityJoin {
         (0 until 3).forall(bi => simd.signature(bi, v) == scalar.signature(bi, v))
       } catch { case _: Throwable => false }
 
-    /** SIMD when loadable + probe-verified; `-Dgraft.banding.simd=false`
-      * forces the scalar path (A/B measurement — results are identical
-      * either way by the bit-parity construction). */
+    /** SIMD when loadable + probe-verified, else the scalar loop (results
+      * are identical either way by the bit-parity construction). */
     def apply(ps: Array[Array[Array[Double]]]): PlaneProjector =
-      new PlaneProjector(ps, simdAvailable &&
-        sys.props.get("graft.banding.simd")
-          .forall(v => scala.util.Try(v.trim.toBoolean).getOrElse(true)))
+      new PlaneProjector(ps, simdAvailable)
   }
 
   /** (bucket, id) signature keys of a vector frame under pinned widths —
@@ -1532,10 +1521,7 @@ object SimilarityJoin {
     // math (round-10 A/B in BENCH.md). blockRows stays 2048: the probe
     // showed larger blocks only trade shuffle for worse task balance
     // (total candidate pairs are grid-invariant).
-    val blockRows = sys.props.get("graft.lsh.blockRows")
-      .orElse(sys.env.get("GRAFT_LSH_BLOCK_ROWS"))
-      .flatMap(v => scala.util.Try(v.toInt).toOption).filter(_ > 0)
-      .getOrElse(2048)
+    val blockRows = 2048
     val parallelism = math.max(1, spark.sparkContext.defaultParallelism)
     val cap = resolveHotPairCap(spark, hotBucketPairCap)
     val capFinite = cap != Long.MaxValue

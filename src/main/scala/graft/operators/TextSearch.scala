@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Par
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 

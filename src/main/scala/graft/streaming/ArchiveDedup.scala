@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Par
 import graft.operators.{Dedup, SimilarityJoin}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}

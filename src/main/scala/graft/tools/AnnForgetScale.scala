@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.operators.AnnIndex
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
@@ -22,12 +21,7 @@ object AnnForgetScale {
     val dir = args(0)
     val nlist = args.lift(1).map(_.toInt).getOrElse(100)
     val pctMod = args.lift(2).map(_.toInt).getOrElse(100) // victims: id % pctMod == 7
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("WARN")
 
     val vecs = spark.read.parquet(s"$dir/embeddings.parquet")

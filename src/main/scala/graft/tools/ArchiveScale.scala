@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.operators.Dedup
 import graft.streaming.ArchiveDedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
@@ -37,13 +36,7 @@ object ArchiveScale {
       if (args.lift(5).contains("drift"))
         Some(java.nio.file.Files.createTempDirectory("graft-archive-drift").toString)
       else None
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("WARN")
 
     val statsMode = mode == "token-stats" || mode == "ngram-stats"

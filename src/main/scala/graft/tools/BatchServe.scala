@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Serving-throughput probe (round 17, verdict ask #4): the distributed
  * slab tiers pay one ~15-20 ms job-scheduling floor per BATCH — at the
@@ -28,12 +26,7 @@ object BatchServe {
   def main(args: Array[String]): Unit = {
     val n = args.lift(0).map(_.toInt).getOrElse(50000)
     val dim = args.lift(1).map(_.toInt).getOrElse(384)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

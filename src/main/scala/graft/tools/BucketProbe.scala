@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-off diagnostic: LSH bucket occupancy at a given sf — how much of
@@ -11,12 +10,7 @@ object BucketProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val mode = if (args.length > 1) args(1) else "minhash"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     val t0 = System.nanoTime()

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.operators.Dedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Attribution probe for the uncached cosine pair build: Σ C(m,2) over
@@ -12,12 +11,7 @@ import org.apache.spark.sql.functions._
 object CandidateVolume {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("WARN")
     val e = spark.read.parquet(s"$dir/embeddings.parquet")
     val n = e.count()

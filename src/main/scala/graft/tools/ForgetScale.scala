@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.operators.Dedup
 import graft.streaming.ArchiveDedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
@@ -21,12 +20,7 @@ object ForgetScale {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val mode = args.lift(1).getOrElse("minhash")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("WARN")
 
     val textMode = mode == "minhash"

@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.operators.{CorpusStats, Dedup}
 import graft.streaming.ArchiveDedup
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -77,13 +77,7 @@ object ForgetUnderLoad {
     // cluster-mate pair space exactly like the σ1.0 embedding runs
     val denseText = familyArg == "minhash-dense"
     val family = if (denseText) "minhash" else familyArg
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("WARN")
 
     val embedFamily = family == "semantic" || family == "cosine"

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
@@ -9,54 +8,27 @@ import org.apache.spark.sql.functions._
  * effort lands on the phase that actually costs:
  * `runMain graft.tools.LifecycleProfile <sfDir> [reps] [family]`
  * (family: minhash = the q96 lifecycle (default), cosine = q97,
- * semantic = q98; GRAFT_PROF_SITES=1 prints each job's call site).
+ * semantic = q98); the last rep also prints one line per job.
  */
 object LifecycleProfile {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val reps = if (args.length > 1) args(1).toInt else 3
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("WARN")
 
     import graft.operators.Dedup
     import graft.streaming.ArchiveDedup
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val tasks = new java.util.concurrent.atomic.AtomicInteger
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet()
-          if (sys.env.contains("GRAFT_PROF_SITES")) {
-            // the deepest graft frame of the job's trigger site — the
-            // callSite property is not populated on forked local runs
-            val site = j.stageInfos.headOption
-              .map(_.details.linesIterator
-                .filter(l => l.contains("graft.") && !l.contains("LifecycleProfile"))
-                .take(2).mkString(" <- "))
-              .filter(_.nonEmpty).getOrElse("?")
-            println(s"      job: $site")
-          }
-        }
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          tasks.incrementAndGet()
-      })
+    val counter = new QueryJobs.Counter(spark)
     val family = if (args.length > 2) args(2) else "minhash"
     (1 to reps).foreach { r =>
       val arch = java.nio.file.Files.createTempDirectory("graft-prof").toString
       val pairsDir = java.nio.file.Files.createTempDirectory("graft-prof-p").toString
+      counter.trace = r == reps
       def t[A](name: String)(f: => A): A = {
-        val t0 = System.nanoTime(); val j0 = jobs.get(); val k0 = tasks.get()
-        val a = f
-        println(f"  [$r] $name%-14s ${(System.nanoTime() - t0) / 1e9}%.3f s  " +
-          s"jobs=${jobs.get() - j0} tasks=${tasks.get() - k0}")
+        val (a, s, c) = counter.profile(f)
+        println(f"  [$r] $name%-14s $s%.3f s  $c")
+        counter.drain().foreach(l => println(s"      $l"))
         a
       }
       val n = family match {

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import java.util.Locale
@@ -57,13 +56,7 @@ object LshRecall {
     val sampleN = args(2).toInt
     val targetN = args(3).toLong
     val nPlant = if (args.length > 4) args(4).toInt else 0
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     val base = spark.read.parquet(s"$dir/embeddings.parquet")

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.operators.{Dedup, SimilarityJoin}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
@@ -12,30 +11,17 @@ import org.apache.spark.sql.functions._
  * routed scan stage is sized by the probed cell count instead of the
  * fixed 4×parallelism width. The reduce is an RDD stage, invisible to
  * SQL explain, so the proof is `RDD.toDebugString` (ShuffledRDD count)
- * plus SparkListener job/task counts around one action:
+ * plus [[QueryJobs.Counter]]'s job/stage/task counts around one action:
  * `runMain graft.tools.ProbeRouteProof` (output goes to stdout;
  * committed under plans/r20/).
  */
 object ProbeRouteProof {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session("local[8]", 8)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val tasks = new java.util.concurrent.atomic.AtomicInteger
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-        override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          tasks.incrementAndGet()
-      })
+    val counter = new QueryJobs.Counter(spark)
 
     def word(r: java.util.Random): String =
       Iterator.continually(('a' + r.nextInt(26)).toChar).take(6).mkString
@@ -53,9 +39,8 @@ object ProbeRouteProof {
       println(s"\n===== $name =====")
       println(lineage)
       println(s"-- ShuffledRDD stages in lineage: $shuffles")
-      val j0 = jobs.get(); val k0 = tasks.get()
-      val n = df.count()
-      println(s"-- action: rows=$n jobs=${jobs.get() - j0} tasks=${tasks.get() - k0}")
+      val (n, _, c) = counter.profile(df.count())
+      println(s"-- action: rows=$n $c")
     }
 
     // ---------- minhash delta route ----------

@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.operators.{Dedup, SimilarityJoin}
 import graft.streaming.ArchiveDedup
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -45,12 +45,7 @@ object ReseedScale {
     val dim = args.lift(2).map(_.toInt).getOrElse(64)
     val sampleRows = 2000
     val theta = 0.8
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

@@ -25,13 +25,7 @@ import org.apache.spark.sql.functions._
 object ScaleUp {
   def main(args: Array[String]): Unit = {
     val Array(src, dst, copiesStr) = args.take(3)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("WARN")
     run(spark, src, dst, copiesStr.toInt)
     spark.stop()

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * SQ8 ADC-scan probe on the BENCH day_6 large workload (seed-42
  * clustered gaussians, 50k×384, 100 queries, k=10) — isolates the
@@ -16,12 +14,7 @@ object Sq8Probe {
   def main(args: Array[String]): Unit = {
     val n = args.lift(0).map(_.toInt).getOrElse(50000)
     val dim = args.lift(1).map(_.toInt).getOrElse(384)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
@@ -13,36 +12,18 @@ object StatsLifecycleProfile {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val reps = if (args.length > 1) args(1).toInt else 3
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("WARN")
     import graft.operators.CorpusStats
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val tasks = new java.util.concurrent.atomic.AtomicInteger
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          tasks.incrementAndGet()
-      })
+    val counter = new QueryJobs.Counter(spark)
     (1 to reps).foreach { r =>
       val planted = graft.Tables(spark, dir, "documents")
         .withColumn("t", concat(col("text"), lit(" uniq"),
           col("doc_id").cast("string")))
       val arch = java.nio.file.Files.createTempDirectory("graft-sprof").toString
       def t[A](name: String)(f: => A): A = {
-        val t0 = System.nanoTime(); val j0 = jobs.get(); val k0 = tasks.get()
-        val a = f
-        println(f"  [$r] $name%-14s ${(System.nanoTime() - t0) / 1e9}%.3f s  " +
-          s"jobs=${jobs.get() - j0} tasks=${tasks.get() - k0}")
+        val (a, s, c) = counter.profile(f)
+        println(f"  [$r] $name%-14s $s%.3f s  $c")
         a
       }
       t("seed") { CorpusStats.seedTokenStatsArchive(

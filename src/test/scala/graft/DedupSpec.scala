@@ -626,18 +626,51 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("sort-based grid shuffle (default) is pair-identical to the groupByKey form") {
+    // the groupByKey exchange scanCells replaced in round 11, kept here as
+    // the reference: same grid, same scan kernel, so the same pairs
+    import scala.reflect.ClassTag
+    def groupedCells[K: ClassTag, V: ClassTag, R: ClassTag](
+        grid: org.apache.spark.rdd.RDD[(K, V)], partitions: Int)(
+        scan: (K, Iterator[V]) => Iterator[R]): org.apache.spark.rdd.RDD[R] =
+      grid.groupByKey(partitions).flatMap { case (k, vs) => scan(k, vs.iterator) }
     val e = Tables(spark, TestSpark.sfDir, "embeddings")
-    def run(): Set[(Long, Long, Double)] =
-      SimilarityJoin.lshCosinePairs(e, "vec_id", "embedding", 0.4,
-          numBits = 8, bands = 8)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val sorted = run() // default path since round 11
-    System.setProperty("graft.grid.sortShuffle", "false")
-    try {
-      val grouped = run()
-      assert(sorted === grouped)
-      assert(sorted.nonEmpty, "vacuous parity would prove nothing")
-    } finally System.clearProperty("graft.grid.sortShuffle")
+      .select(col("vec_id").cast("long"), col("embedding").cast("array<float>"))
+      .as[(Long, Array[Float])].rdd
+    // cells keyed like the LSH grid: 8 random-hyperplane sign bits
+    val planes = {
+      val r = new java.util.Random(11L)
+      Array.fill(8)(Array.fill(512)(r.nextGaussian()))
+    }
+    val grid = e.map { case (id, v) =>
+      val sig = planes.indices.foldLeft(0) { (acc, b) =>
+        val dot = v.indices.iterator.map(i => planes(b)(i % 512) * v(i)).sum
+        if (dot > 0) acc | (1 << b) else acc
+      }
+      (sig, (id, v))
+    }
+    def cos(a: Array[Float], b: Array[Float]): Double = {
+      var dot, na, nb = 0.0
+      var i = 0
+      while (i < math.min(a.length, b.length)) {
+        dot += a(i).toDouble * b(i); na += a(i).toDouble * a(i)
+        nb += b(i).toDouble * b(i); i += 1
+      }
+      if (na == 0 || nb == 0) 0.0 else dot / math.sqrt(na * nb)
+    }
+    val scan: (Int, Iterator[(Long, Array[Float])]) => Iterator[(Long, Long, Double)] =
+      (_, it) => {
+        val rows = it.toArray.sortBy(_._1)
+        for {
+          i <- rows.indices.iterator
+          j <- (i + 1 until rows.length).iterator
+          s = cos(rows(i)._2, rows(j)._2)
+          if s >= 0.4
+        } yield (rows(i)._1, rows(j)._1, s)
+      }
+    val sorted = SimilarityJoin.scanCells(grid, 8)(scan).collect().toSet
+    val grouped = groupedCells(grid, 8)(scan).collect().toSet
+    assert(sorted === grouped)
+    assert(sorted.nonEmpty, "vacuous parity would prove nothing")
   }
 
   test("delta guard reports null ids with its own message, not an opaque NPE") {

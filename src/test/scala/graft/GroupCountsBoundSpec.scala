@@ -78,6 +78,24 @@ class GroupCountsBoundSpec extends AnyFunSuite {
     assert(expectCold.nonEmpty)
   }
 
+  test("count-join fallback leaves no persisted RDD behind once its pairs are collected") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val ix = members.where(col("id") < 4)
+    val delta = members.where(col("id") >= 4)
+    withBound(1) {
+      // finite caps: the fallback runs its hot-count job over the metadata
+      assert(collectPairs(SimilarityJoin.groupedThresholdPairs(
+        members, "grp", "id", "v", threshold = 0.9,
+        hotGroupPairCap = 4L)).nonEmpty)
+      assert(collectPairs(SimilarityJoin.groupedThresholdPairsDelta(
+        ix, delta, "grp", "id", "v", threshold = 0.9,
+        hotGroupPairCap = 2L)).nonEmpty)
+    }
+    val left = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
+    assert(left.isEmpty, s"persisted RDDs left behind: ${left.values.mkString(", ")}")
+  }
+
   test("grouped top pairs (replicateToBlocks): fallback is output-identical") {
     val expect = SimilarityJoin.groupedTopPairs(
         members, "grp", "id", "v", k = 2)
