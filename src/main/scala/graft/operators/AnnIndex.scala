@@ -4,6 +4,7 @@ import graft.functions.VectorFunctions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /**
  * IVF (inverted-file) approximate-nearest-neighbor index — the Spark-native
@@ -22,6 +23,15 @@ import org.apache.spark.sql.functions._
 object AnnIndex {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** The on-disk layout [[writeIndex]] fixes: `assignments` (partitioned
+    * by `cluster`), `centroids`, and the id-only takedown sidecar and
+    * ledger. Every read passes these, so none pays a footer-inference job. */
+  val AssignmentsSchema: StructType = StructType(Seq(StructField("id", LongType),
+    StructField("vec", ArrayType(FloatType)), StructField("cluster", IntegerType)))
+  val CentroidsSchema: StructType = StructType(Seq(
+    StructField("cluster", IntegerType), StructField("centroid", ArrayType(DoubleType))))
+  private val IdSchema = StructType(Seq(StructField("id", LongType)))
 
   /** Trained IVF index: driver-side centroids + cluster-keyed assignments. */
   case class IvfIndex(
@@ -124,7 +134,7 @@ object AnnIndex {
       val sidecar = new org.apache.hadoop.fs.Path(s"$path/.forget-inprogress")
       val resumed: Set[Long] =
         if (!fs.exists(sidecar)) Set.empty
-        else spark.read.parquet(sidecar.toString)
+        else spark.read.schema(IdSchema).parquet(sidecar.toString)
           .collect().map(_.getLong(0)).toSet
       if (resumed.nonEmpty) {
         val incoming = victims.collect().map(_.getLong(0)).toSet
@@ -135,7 +145,7 @@ object AnnIndex {
             "original ids; the sidecar clears on completion).")
       }
       // one column-pruned scan: which ids exist, in which clusters
-      val hit = spark.read.parquet(s"$path/assignments")
+      val hit = spark.read.schema(AssignmentsSchema).parquet(s"$path/assignments")
         .select(col("id"), col("cluster"))
         .join(broadcast(victims), Seq("id"))
         .collect().map(r => (r.getLong(0), r.getInt(1)))
@@ -177,7 +187,9 @@ object AnnIndex {
       val affected = hit.map(_._2).distinct.sorted
       def swapCluster(c: Int): Unit = {
         val cDir = new org.apache.hadoop.fs.Path(s"$path/assignments/cluster=$c")
-        val rewritten = spark.read.parquet(cDir.toString)
+        // a cluster directory holds the data columns only
+        val rewritten = spark.read.schema(StructType(AssignmentsSchema.dropRight(1)))
+          .parquet(cDir.toString)
           .join(broadcast(victims), Seq("id"), "left_anti")
           .localCheckpoint() // materialize BEFORE touching the source
         val tmp = new org.apache.hadoop.fs.Path(s"$path/assignments/.inprogress-cluster-$c")
@@ -210,7 +222,7 @@ object AnnIndex {
         val retiredA = new org.apache.hadoop.fs.Path(s"$path/.retired-assignments")
         val liveA = new org.apache.hadoop.fs.Path(s"$path/assignments")
         if (fs.exists(tmpA)) fs.delete(tmpA, true)
-        spark.read.parquet(liveA.toString)
+        spark.read.schema(AssignmentsSchema).parquet(liveA.toString)
           .join(broadcast(victims), Seq("id"), "left_anti")
           .withColumn("cluster", col("cluster").cast("int"))
           .repartition(col("cluster"))
@@ -275,7 +287,7 @@ object AnnIndex {
       // the ledger path is rewritten in place by swaps — invalidate the
       // session's file-status cache like the assignments dir
       spark.catalog.refreshByPath(live.toString)
-      spark.read.parquet(live.toString).select(col("id"))
+      spark.read.schema(IdSchema).parquet(live.toString)
     } else spark.range(0).select(col("id"))
   }
 
@@ -302,7 +314,7 @@ object AnnIndex {
 
   /** nlist of a persisted index, from its tiny centroids table. */
   private def centroidCountOf(spark: SparkSession, path: String): Int =
-    spark.read.parquet(s"$path/centroids").count().toInt
+    spark.read.schema(CentroidsSchema).parquet(s"$path/centroids").count().toInt
 
   /** Crash recovery for [[forgetFromIndex]]'s retire-swap: a
     * `.retired-cluster-<c>` left behind means a crash mid-swap — if the
@@ -348,11 +360,12 @@ object AnnIndex {
   /** Reopen a persisted index. Search through the reopened index prunes
     * parquet partitions: only the probed cluster directories are read. */
   def openIndex(spark: org.apache.spark.sql.SparkSession, path: String): IvfIndex = {
-    val centroids = spark.read.parquet(s"$path/centroids")
+    val centroids = spark.read.schema(CentroidsSchema).parquet(s"$path/centroids")
       .collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1)
-    IvfIndex(centroids, spark.read.parquet(s"$path/assignments"))
+    IvfIndex(centroids,
+      spark.read.schema(AssignmentsSchema).parquet(s"$path/assignments"))
   }
 
   /**

@@ -71,7 +71,8 @@ object CorpusStats {
   // lifecycles (load → retract → window) traverse fresh path sets per
   // entry; the writers in this file fix every component's schema, so
   // the readers pass them explicitly (oracle battery re-proves
-  // byte-equality).
+  // byte-equality). A pre-r13 bare-`h` unigram file reads with a null
+  // `u_part`, which withUnigramMarks fills with the historical mark 1.
   private val statsComponentSchemas: Map[String, org.apache.spark.sql.types.StructType] = {
     import org.apache.spark.sql.types._
     Map(
@@ -88,10 +89,7 @@ object CorpusStats {
   }
   private def readStatsComp(spark: SparkSession, comp: String,
                             paths: Seq[String]): DataFrame =
-    statsComponentSchemas.get(comp)
-      .map(sc => spark.read.schema(sc))
-      .getOrElse(spark.read)
-      .parquet(paths: _*)
+    spark.read.schema(statsComponentSchemas(comp)).parquet(paths: _*)
 
   // ===================================================================
   // Token document frequency (the q73 family)
@@ -315,9 +313,9 @@ object CorpusStats {
     * batch-distinct hash, a presence mark of 1. For LOADING (vocabulary
     * = hashes with positive sums) a mark of 1 is equivalent to the
     * occurrence count the current format stores, so `lit(1)` reads old
-    * entries exactly; mixed-schema multi-path reads (old seed + new
-    * slivers under mergeSchema) fill the old rows' null marks the same
-    * way. For in-place RETRACTION the two are NOT equivalent (counts
+    * entries exactly; pinned-schema reads of old entries (alone, or an
+    * old seed beside new slivers) fill the old rows' null marks the
+    * same way. For in-place RETRACTION the two are NOT equivalent (counts
     * subtract per-document; marks don't) — and the u_part COLUMN alone
     * cannot distinguish them (the round-12 format stored marks under
     * the same column name), so the count format is marked by an
@@ -422,7 +420,8 @@ object CorpusStats {
     val c1 = c2.groupBy(col("__h1"))
       .agg(sum(col("__c2")).as("__c1")).where(col("__c1") > 0)
     val vocab = ix.unigrams.groupBy(col("h"))
-      .agg(sum(col("u_part")).as("u")).where(col("u") > 0).count()
+      .agg(sum(col("u_part")).as("u")).where(col("u") > 0)
+      .agg(count(lit(1)).as("__vocab"))
     QualityFilters.bigramLmScoreFrom(c2, c1, vocab, target, idCol, textCol)
   }
 
@@ -460,11 +459,9 @@ object CorpusStats {
     "contexts" -> (df => df.groupBy(col("__h1"))
       .agg(sum(col("cc_part")).as("cc_part"))),
     // normalize marks first: a pre-r13 entry ships bare-`h` unigrams
-    // (u_part absent, or null under a mergeSchema read next to new
-    // slivers) — folding without the fill would crash on an all-old
-    // merge set and silently DROP old batches' vocabulary marks on a
-    // mixed one (sum() skips nulls), shrinking vocab for every
-    // subsequent perplexity score
+    // (u_part null under the pinned-schema read) — folding without the
+    // fill would silently DROP old batches' vocabulary marks (sum()
+    // skips nulls), shrinking vocab for every subsequent perplexity score
     "unigrams" -> (df => withUnigramMarks(df).groupBy(col("h"))
       .agg(sum(col("u_part")).as("u_part"))),
     "ids" -> identity)
@@ -737,11 +734,10 @@ object CorpusStats {
     // rename below is still the single commit point)
     graft.Par.run(comps.map { case (c, fold) =>
       () => {
-        // mergeSchema: the merge set may mix pre-r13 bare-`h` unigram
-        // entries with new (h, u_part) ones — same discipline as the
-        // load path; the fold normalizes the marks
-        fold(spark.read.option("mergeSchema", "true")
-            .parquet(entries.map(e => s"$dir/$e/$c"): _*))
+        // the merge set may mix pre-r13 bare-`h` unigram entries with
+        // new (h, u_part) ones — the pinned schema reads both, and the
+        // fold normalizes the marks
+        fold(readStatsComp(spark, c, entries.map(e => s"$dir/$e/$c")))
           .write.mode("overwrite").parquet(s"$tmp/$c")
         // the count-format sentinel propagates conjunctively: a fold
         // over any presence-mark-era input yields mark sums —
@@ -1327,11 +1323,9 @@ object CorpusStats {
     NgramStatsIndex(
       comp("pairs", Seq("__h1", "__h2", "pc_part")),
       comp("contexts", Seq("__h1", "cc_part")),
-      // mergeSchema: a pre-r13 seed ships bare-`h` unigrams next to
-      // new (h, u_part) slivers — withUnigramMarks fills the exact
-      // historical mark of 1
-      withUnigramMarks(spark.read.option("mergeSchema", "true")
-        .parquet(entries.map(e => s"$dir/$e/unigrams"): _*)),
+      // a pre-r13 seed ships bare-`h` unigrams next to new (h, u_part)
+      // slivers — withUnigramMarks fills the exact historical mark of 1
+      withUnigramMarks(comp("unigrams", Seq("h", "u_part"))),
       ids,
       ucounts = entries.forall(e => hasCountMarker(spark, s"$dir/$e")))
   }

@@ -599,7 +599,8 @@ object QualityFilters {
     // shares c2's exchange, dropping the reference corpus's third
     // tokenize pass (see bigramCounts)
     val c1 = c2.groupBy(col("__h1")).agg(sum(col("__c2")).as("__c1"))
-    val vocab = refToks.flatMap(_._2.iterator).distinct().count()
+    val vocab = refToks.flatMap(_._2.iterator).distinct()
+      .agg(count(lit(1)).as("__vocab"))
     bigramLmScoreFrom(c2, c1, vocab, target, idCol, textCol)
   }
 
@@ -607,11 +608,13 @@ object QualityFilters {
     * so the incremental-statistics path
     * ([[CorpusStats.bigramLmScoresAgainst]]) scores against ARCHIVED
     * counts through the identical DAG: `c2` = (__h1, __h2, __c2) pair
-    * counts, `c1` = (__h1, __c1) context counts, `vocab` = vocabulary
-    * size; target bigrams LEFT-join the model, unseen ones take the
-    * Laplace smoothing floor. */
+    * counts, `c1` = (__h1, __c1) context counts, `vocab` = one row
+    * holding the vocabulary size in `__vocab` (a broadcast aggregate that
+    * rides the scoring job, not an eager count when the frame is built);
+    * target bigrams LEFT-join the model, unseen ones take the Laplace
+    * smoothing floor. */
   private[operators] def bigramLmScoreFrom(c2: DataFrame, c1: DataFrame,
-                                           vocab: Long, target: DataFrame,
+                                           vocab: DataFrame, target: DataFrame,
                                            idCol: String,
                                            textCol: String): DataFrame = {
     val spark = target.sparkSession
@@ -623,9 +626,10 @@ object QualityFilters {
     val counted = tgtBigrams
       .join(c2, Seq("__h1", "__h2"), "left")
       .join(c1, Seq("__h1"), "left")
+      .crossJoin(broadcast(vocab))
       .withColumn("__term",
         log((coalesce(col("__c2"), lit(0L)) + lit(1.0)) /
-          (coalesce(col("__c1"), lit(0L)) + lit(vocab.toDouble))))
+          (coalesce(col("__c1"), lit(0L)) + col("__vocab").cast("double"))))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_terms"),
         sum(col("__term")).as("__sum"))

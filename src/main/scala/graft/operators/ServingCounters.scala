@@ -34,9 +34,15 @@ final class ServingCounters(sc: SparkContext, name: String = "serving") {
   val errorsTotal: LongAccumulator = sc.longAccumulator(s"${name}_errors_total")
 
   /** Σ wall nanos across ALL search calls, failures included (with
-    * requestsTotal it yields the mean; the full distribution belongs to
-    * a metrics sink, not an accumulator). */
+    * requestsTotal it yields the mean). */
   val latencyNanosTotal: LongAccumulator = sc.longAccumulator(s"${name}_latency_nanos_total")
+
+  /** Per-bucket request counts over [[ServingCounters.LatencyBuckets]]
+    * (last slot: above the largest bound) — the latency distribution
+    * `render` publishes as a Prometheus histogram. Driver-side: every
+    * observation happens in [[observe]], on the driver. */
+  private val latencyBuckets =
+    new java.util.concurrent.atomic.AtomicLongArray(ServingCounters.LatencyBuckets.length + 1)
 
   /** Run one serving request under the counters. */
   def observe[T](nQueries: Int)(body: => T): T = {
@@ -48,15 +54,28 @@ final class ServingCounters(sc: SparkContext, name: String = "serving") {
       case t: Throwable =>
         errorsTotal.add(1L)
         throw t
-    } finally latencyNanosTotal.add(System.nanoTime() - t0)
+    } finally {
+      val nanos = System.nanoTime() - t0
+      val b = ServingCounters.LatencyBuckets.indexWhere(nanos / 1e9 <= _)
+      latencyBuckets.incrementAndGet(if (b < 0) ServingCounters.LatencyBuckets.length else b)
+      latencyNanosTotal.add(nanos)
+    }
   }
 
   /** Prometheus-exposition-style snapshot (day_14 serves
-    * `generate_latest()`; this is the same contract minus the HTTP). */
+    * `generate_latest()`; this is the same contract minus the HTTP). The
+    * request-duration histogram has cumulative `_bucket{le=…}` lines, and
+    * its `_count` is the `+Inf` bucket, so the two always agree. */
   def render: String = {
     val avgSec =
       if (requestsTotal.value == 0L) 0.0
       else latencyNanosTotal.value.toDouble / requestsTotal.value / 1e9
+    val h = s"${name}_request_duration_seconds"
+    val les = ServingCounters.LatencyBuckets.map(_.toString) :+ "+Inf"
+    val cumulative = les.indices.scanLeft(0L)(_ + latencyBuckets.get(_)).tail
+    val histogram = les.zip(cumulative)
+      .map { case (le, n) => s"""${h}_bucket{le="$le"} $n""" } ++
+      Seq(s"${h}_sum ${latencyNanosTotal.value / 1e9}", s"${h}_count ${cumulative.last}")
     s"""# TYPE ${name}_requests_total counter
        |${name}_requests_total ${requestsTotal.value}
        |# TYPE ${name}_queries_total counter
@@ -64,6 +83,16 @@ final class ServingCounters(sc: SparkContext, name: String = "serving") {
        |# TYPE ${name}_errors_total counter
        |${name}_errors_total ${errorsTotal.value}
        |# TYPE ${name}_request_duration_seconds_avg gauge
-       |${name}_request_duration_seconds_avg $avgSec""".stripMargin
+       |${name}_request_duration_seconds_avg $avgSec
+       |# TYPE $h histogram
+       |${histogram.mkString("\n")}""".stripMargin
   }
+}
+
+object ServingCounters {
+  /** Upper bounds (seconds) of the request-duration histogram's buckets:
+    * the Prometheus client's default buckets, which the reference's
+    * `rag_request_duration_seconds` uses. */
+  val LatencyBuckets: Seq[Double] =
+    Seq(0.005, 0.01, 0.025, 0.05, 0.1, 0.25, 0.5, 1.0, 2.5, 5.0, 10.0)
 }

@@ -96,8 +96,8 @@ object IvfKnnRewrite extends Rule[LogicalPlan] {
                       exSelf: Boolean): LogicalPlan = {
     val qDf = GraftColumnBridge.ofRows(spark, queries)
       .toDF("query_id", "qvec")
-    val centroids = spark.read.parquet(s"${entry.indexPath}/centroids")
-      .toDF("cluster", "centroid")
+    val centroids = spark.read.schema(graft.operators.AnnIndex.CentroidsSchema)
+      .parquet(s"${entry.indexPath}/centroids")
     val probeW = Window.partitionBy(col("query_id"))
       .orderBy(col("__cdist").asc, col("cluster").asc)
     val probes = qDf.crossJoin(broadcast(centroids))
@@ -105,7 +105,8 @@ object IvfKnnRewrite extends Rule[LogicalPlan] {
       .withColumn("__crank", row_number().over(probeW))
       .where(col("__crank") <= entry.nprobe)
       .select(col("query_id"), col("cluster"), col("qvec"))
-    val assignments = spark.read.parquet(s"${entry.indexPath}/assignments")
+    val assignments = spark.read.schema(graft.operators.AnnIndex.AssignmentsSchema)
+      .parquet(s"${entry.indexPath}/assignments")
     val scored = assignments.join(broadcast(probes), Seq("cluster"))
       .select(col("query_id"), col("id").as("doc_id"),
         metric.column(col("qvec"), col("vec")).as("score"))

@@ -2,6 +2,7 @@ package graft.serving
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** One stored document (the serving surface's row type): the string key
   * the API speaks, the long id the vector index speaks, and the payload. */
@@ -74,11 +75,15 @@ final class HeapDocStore extends DocStore {
 
 /**
  * Parquet-backed store: base generation on disk, heap delta + tombstones,
- * LSM compaction. Base reads are pushed-filter point lookups — the base
- * is written SORTED by doc_id so parquet row-group min/max statistics
- * prune the scan (the local-disk stand-in for the id-bucketed layout a
- * cluster deployment would use). A Bloom filter over base doc_ids keeps
- * the common case (brand-new id) jobless on the put path.
+ * LSM compaction. Each base lookup is ONE Spark job: a pushed-filter
+ * scan of the generation's relation, which is built once per generation
+ * with the pinned [[ParquetDocStore.BaseSchema]] (no footer-inference
+ * job, no re-listing). The base is written SORTED by doc_id, so a
+ * `get`/`delete` by doc_id prunes row groups by their min/max statistics
+ * (the local-disk stand-in for the id-bucketed layout a cluster
+ * deployment would use); a hydrate by long_id has no such order to
+ * prune on and filters every row group. A Bloom filter over base doc_ids
+ * keeps the common case (brand-new id) jobless on the put path.
  *
  * Metadata rides as a JSON string column (the service's own [[Json]]
  * codec both ways), so the base schema is flat:
@@ -89,18 +94,27 @@ final class ParquetDocStore private (
 
   import ParquetDocStore._
 
-  private var gen = latestGen(spark, dir) // -1 = no base yet
+  private var gen = -1 // -1 = no base yet
+  // the base relation of `gen`, built once per generation: generation
+  // directories are immutable, so its schema and file listing hold until
+  // the next compaction swaps in a new generation
+  private var baseDf: Option[DataFrame] = None
   private val delta = new java.util.LinkedHashMap[String, DocRecord]
   private val tombstones = new java.util.HashSet[String]
   // base stats, refreshed per generation (one job each at open/compact)
   private var baseCount = 0L
   private var baseMaxLongId = -1L
   private var baseBloom: org.apache.spark.util.sketch.BloomFilter = null
-  refreshBaseStats()
+  openGen(latestGen(spark, dir))
 
-  private def basePath = s"$dir/gen=$gen"
-  private def baseDf: Option[DataFrame] =
-    if (gen < 0) None else Some(spark.read.parquet(basePath))
+  /** Point the store at generation `g` (-1 = none). */
+  private def openGen(g: Int): Unit = {
+    gen = g
+    baseDf =
+      if (g < 0) None
+      else Some(spark.read.schema(BaseSchema).parquet(s"$dir/gen=$g"))
+    refreshBaseStats()
+  }
 
   private def refreshBaseStats(): Unit = baseDf match {
     case None =>
@@ -152,14 +166,13 @@ final class ParquetDocStore private (
     while (dIt.hasNext) { val r = dIt.next(); fromDelta(r.longId) = r }
     val hit = ids.iterator.flatMap(id => fromDelta.get(id).map(id -> _)).toMap
     val missing = ids.filterNot(hit.contains)
-    if (missing.isEmpty || gen < 0) hit
-    else {
-      val rows = baseDf.get
-        .where(col("long_id").isin(missing: _*)).collect()
-        .map(fromRow)
-        .filterNot(r => tombstones.contains(r.docId)) // deleted/replaced
-        .map(r => r.longId -> r).toMap
-      hit ++ rows
+    baseDf match {
+      case Some(b) if missing.nonEmpty =>
+        hit ++ b.where(col("long_id").isin(missing: _*)).collect()
+          .map(fromRow)
+          .filterNot(r => tombstones.contains(r.docId)) // deleted/replaced
+          .map(r => r.longId -> r)
+      case _ => hit
     }
   }
 
@@ -224,16 +237,21 @@ final class ParquetDocStore private (
     survivors.sortWithinPartitions(col("doc_id"))
       .write.mode("overwrite").parquet(s"$dir/gen=$next")
     val old = gen
-    gen = next
     delta.clear()
     tombstones.clear()
-    refreshBaseStats()
+    openGen(next)
     // best-effort cleanup of the superseded generation
     if (old >= 0) deletePath(spark, s"$dir/gen=$old")
   }
 }
 
 object ParquetDocStore {
+
+  /** The base generation's schema, as [[bootstrap]] and `compact` write
+    * it; reads pass it, so a lookup runs no footer-inference job. */
+  val BaseSchema: StructType = StructType(Seq(
+    StructField("doc_id", StringType), StructField("long_id", LongType),
+    StructField("text", StringType), StructField("metadata", StringType)))
 
   /** Open (or create) a store rooted at `dir`. An existing `gen=N`
     * directory resumes from disk — serving restarts keep the corpus. */

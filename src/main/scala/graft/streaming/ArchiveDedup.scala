@@ -110,6 +110,14 @@ object ArchiveDedup {
     org.apache.spark.sql.types.StructField("id",
       org.apache.spark.sql.types.LongType)))
 
+  /** The columns every family's drift-probe row shares, plus the
+    * `batch_id=<id>` partition [[emitDrift]] writes it under. */
+  private val DriftFlagSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("rebuild_recommended",
+      org.apache.spark.sql.types.BooleanType),
+    org.apache.spark.sql.types.StructField("batch_id",
+      org.apache.spark.sql.types.LongType)))
+
   // Hadoop FS, not java.io.File: the archive lives wherever the corpus
   // does (HDFS/S3/local) — same convention as serving.DocStore
   private def hfs(spark: SparkSession, dir: String): (FileSystem, Path) = {
@@ -591,16 +599,15 @@ object ArchiveDedup {
       // independent paths — the same commit-wall rationale as
       // Dedup.save's concurrent writes, via Par); the rename after this
       // callback stays the single commit point
-      Par.run(fam.components.map { case (c, _) =>
-        () =>
-          spark.read.parquet(srcDirs.map(d => s"$d/$c"): _*)
-            .write.mode("overwrite").parquet(s"$tmp/$c")
+      Par.run(fam.components.zip(fam.readFrames(spark, srcDirs)).map {
+        case ((c, _), frame) =>
+          () => frame.write.mode("overwrite").parquet(s"$tmp/$c")
       })
       // copy the pinned params from the CURRENT generation so every
       // entry dir is a self-contained index snapshot (Dedup.load on a
       // range works) — only live (post-reseed) slivers ever merge, so
       // the generation's params are the ones they were built under
-      spark.read
+      spark.read.schema(fam.paramsSchema)
         .parquet(s"${baseDirOf(dir, stateOf(spark, dir))}/${fam.paramsFile}")
         .coalesce(1).write.mode("overwrite").parquet(s"$tmp/${fam.paramsFile}")
       foldedIds.foreach(ids => ids.toDF("id")
@@ -652,9 +659,10 @@ object ArchiveDedup {
     // are tiny, but a per-id head() loop launched after−1 separate
     // driver jobs on every tripped batch (latency grew with the knob)
     prior.length == after - 1 && scala.util.Try {
-      val flags = spark.read.option("basePath", driftDir).parquet(driftDir)
+      val flags = spark.read.schema(DriftFlagSchema)
+        .option("basePath", driftDir).parquet(driftDir)
         .where(col("batch_id").isin(prior: _*))
-        .select(col("batch_id").cast("long"), col("rebuild_recommended"))
+        .select(col("batch_id"), col("rebuild_recommended"))
         .collect()
         .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
       prior.forall(id => flags.getOrElse(id, false))

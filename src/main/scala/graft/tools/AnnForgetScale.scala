@@ -24,7 +24,7 @@ object AnnForgetScale {
     val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("WARN")
 
-    val vecs = spark.read.parquet(s"$dir/embeddings.parquet")
+    val vecs = graft.Tables(spark, dir, "embeddings")
     val path = java.nio.file.Files.createTempDirectory("graft-annforget").toString
 
     def timed[T](name: String)(fn: => T): T = {
@@ -59,9 +59,10 @@ object AnnForgetScale {
       (if (rewritten > before.size / 4)
         "(full-sweep path: one anti-join job, writeIndex-shaped cost)"
       else "(per-cluster path: cost follows the victims' clusters)"))
-    val left = spark.read.parquet(s"$path/assignments")
-      .join(victims, Seq("id")).count()
-    val rows = spark.read.parquet(s"$path/assignments").count()
+    val assignments = spark.read.schema(AnnIndex.AssignmentsSchema)
+      .parquet(s"$path/assignments")
+    val left = assignments.join(victims, Seq("id")).count()
+    val rows = assignments.count()
     println(s"victims still indexed: $left (must be 0); rows $rows " +
       s"(expected ${n - nV})")
     spark.stop()

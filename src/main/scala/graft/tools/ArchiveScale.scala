@@ -44,7 +44,7 @@ object ArchiveScale {
     val (table, idCol, payloadCol) =
       if (textMode) ("documents", "doc_id", "text")
       else ("embeddings", "vec_id", "embedding")
-    val rows = spark.read.parquet(s"$dir/$table.parquet")
+    val rows = graft.Tables(spark, dir, table)
     val archive = java.nio.file.Files.createTempDirectory("graft-archive").toString
     val pairsDir = java.nio.file.Files.createTempDirectory("graft-archive-pairs").toString
     val oldSide = rows.where(col(idCol) % 10 =!= 0)
@@ -125,7 +125,8 @@ object ArchiveScale {
             rows, idCol, payloadCol).count()}")
       }
     } else {
-      val pairs = spark.read.option("basePath", pairsDir).parquet(pairsDir)
+      val pairs = spark.read.schema("id_a BIGINT, id_b BIGINT")
+        .option("basePath", pairsDir).parquet(pairsDir)
       println(s"total pairs: ${pairs.count()} across $nBatches batches")
     }
     if (nBatches >= 10) {

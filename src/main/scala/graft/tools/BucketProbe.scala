@@ -15,7 +15,7 @@ object BucketProbe {
     import spark.implicits._
     val t0 = System.nanoTime()
     val banded: org.apache.spark.sql.DataFrame = if (mode == "cosine") {
-      val e = spark.read.parquet(s"$dir/embeddings.parquet")
+      val e = graft.Tables(spark, dir, "embeddings")
       val n = e.count()
       val bits = graft.operators.Dedup.autoLshBits(n)
       val bands = graft.operators.Dedup.autoLshBands(bits)
@@ -45,7 +45,7 @@ object BucketProbe {
           }
         }.toDF("band", "bucket", "nsh")
     } else {
-      val docs = spark.read.parquet(s"$dir/documents.parquet")
+      val docs = graft.Tables(spark, dir, "documents")
       docs.select(col("doc_id").cast("long"), col("text"))
         .as[(Long, String)]
         .mapPartitions { it =>

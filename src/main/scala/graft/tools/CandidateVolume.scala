@@ -13,7 +13,7 @@ object CandidateVolume {
     val dir = args(0)
     val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("WARN")
-    val e = spark.read.parquet(s"$dir/embeddings.parquet")
+    val e = graft.Tables(spark, dir, "embeddings")
     val n = e.count()
     val bits = Dedup.autoLshBits(n)
     val bands = Dedup.autoLshBands(bits)

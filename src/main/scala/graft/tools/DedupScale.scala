@@ -27,7 +27,7 @@ object DedupScale {
       r
     }
 
-    val e = spark.read.parquet(s"$dir/embeddings.parquet")
+    val e = graft.Tables(spark, dir, "embeddings")
     val n = e.count()
     println(s"embeddings: $n")
 
@@ -72,7 +72,7 @@ object DedupScale {
     // mined once into the index (one-time, amortized across every
     // delta), today's 10% deduped against it — the cost a daily-ingest
     // pipeline actually pays per batch
-    val docsAll = spark.read.parquet(s"$dir/documents.parquet")
+    val docsAll = graft.Tables(spark, dir, "documents")
     val nd = docsAll.count()
     // id-distribution-independent 90/10 split (ScaleUp ids are strided)
     val oldSide = docsAll.where(col("doc_id") % 10 =!= 0)
@@ -158,7 +158,7 @@ object DedupScale {
     // operator-only scrub (q74's bench number includes its test-harness
     // line reshape, which the oracle also pays — this isolates the
     // operator: blocklist → PII redaction → line strip on raw docs)
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = graft.Tables(spark, dir, "documents")
     timed("scrub (operator only)") {
       val out = graft.operators.CurationPipeline.scrub(
         docs, "doc_id", "text", Seq("badphrase"), lineMinDocs = 2)
@@ -171,8 +171,8 @@ object DedupScale {
     // pipeline does; this isolates corpus-side scaling at a FIXED
     // benchmark)
     args.drop(1).headOption.foreach { benchDir =>
-      val train = spark.read.parquet(s"$dir/documents.parquet")
-      val bench = spark.read.parquet(s"$benchDir/documents.parquet")
+      val train = graft.Tables(spark, dir, "documents")
+      val bench = graft.Tables(spark, benchDir, "documents")
       println(s"decontaminate: train=${train.count()} benchmark=${bench.count()}")
       timed("decontaminate (fixed benchmark)") {
         val kept = graft.operators.Decontaminate.decontaminate(

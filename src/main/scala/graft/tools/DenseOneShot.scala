@@ -40,7 +40,7 @@ object DenseOneShot {
     val nClusters = 100
     val dim = 64
     val ids = {
-      val base = spark.read.parquet(s"$dir/documents.parquet")
+      val base = graft.Tables(spark, dir, "documents")
         .select(col("doc_id").cast("long")).as[Long]
       args.lift(1).map(_.toLong).fold(base)(n => base.filter(_ < n))
     }

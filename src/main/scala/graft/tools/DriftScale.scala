@@ -28,7 +28,7 @@ object DriftScale {
     spark.sparkContext.setLogLevel("WARN")
 
     // minhash over documents
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = graft.Tables(spark, dir, "documents")
     val dOld = docs.where(col("doc_id") % 10 =!= 0)
     val dNew = docs.where(col("doc_id") % 10 === 0)
     val mDir = java.nio.file.Files.createTempDirectory("graft-driftscale-m").toString
@@ -51,7 +51,7 @@ object DriftScale {
     }
 
     // semantic over embeddings
-    val e = spark.read.parquet(s"$dir/embeddings.parquet")
+    val e = graft.Tables(spark, dir, "embeddings")
     val eOld = e.where(col("vec_id") % 10 =!= 0)
     val eNew = e.where(col("vec_id") % 10 === 0)
     val cents = eOld.orderBy(col("vec_id")).limit(64)

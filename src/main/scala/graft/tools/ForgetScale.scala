@@ -27,7 +27,7 @@ object ForgetScale {
     val (table, idCol, payloadCol) =
       if (textMode) ("documents", "doc_id", "text")
       else ("embeddings", "vec_id", "embedding")
-    val rows = spark.read.parquet(s"$dir/$table.parquet")
+    val rows = graft.Tables(spark, dir, table)
     val archive = java.nio.file.Files.createTempDirectory("graft-forget").toString
     val pairsDir = java.nio.file.Files.createTempDirectory("graft-forget-p").toString
 

@@ -81,7 +81,7 @@ object ForgetUnderLoad {
     spark.sparkContext.setLogLevel("WARN")
 
     val embedFamily = family == "semantic" || family == "cosine"
-    val docsRaw = spark.read.parquet(s"$dir/documents.parquet")
+    val docsRaw = graft.Tables(spark, dir, "documents")
     // embedding families: synthesize clustered gaussian vectors keyed by
     // doc_id (deterministic — id picks a cluster center, per-id RNG adds
     // noise; the day_6 generator's shape). The archive machinery only

@@ -27,7 +27,7 @@ object JaccardScaleGate {
     val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("WARN")
 
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = graft.Tables(spark, sfDir, "documents")
       .select(col("doc_id"), col("text"))
     val t0 = System.nanoTime()
     // the PRODUCTION q25 surface over the FULL corpus — postings,
@@ -39,7 +39,8 @@ object JaccardScaleGate {
              pmod(col("id_b"), lit(mod)) === band)
       .orderBy(col("id_a"), col("id_b"))
     banded.write.mode("overwrite").parquet(s"$outDir/q25_jaccard_band")
-    val rows = spark.read.parquet(s"$outDir/q25_jaccard_band").count()
+    val rows = spark.read.schema(banded.schema)
+      .parquet(s"$outDir/q25_jaccard_band").count()
     println(f"q25 band gate: full-corpus operator + band filter in " +
       f"${(System.nanoTime() - t0) / 1e9}%.2f s, $rows band pairs " +
       s"(mod $mod, band $band)")

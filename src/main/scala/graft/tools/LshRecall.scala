@@ -59,7 +59,7 @@ object LshRecall {
     val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
-    val base = spark.read.parquet(s"$dir/embeddings.parquet")
+    val base = graft.Tables(spark, dir, "embeddings")
       .where(col("vec_id") < sampleN)
       .select(col("vec_id").cast("long"), col("embedding").cast("array<float>"))
       .as[(Long, Array[Float])]

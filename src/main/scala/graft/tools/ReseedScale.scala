@@ -127,7 +127,11 @@ object ReseedScale {
       val reseeded = new java.io.File(archive).listFiles()
         .map(_.getName).count(_.startsWith("r")) > reseedsBefore
       if (reseeded) reseedBatches ::= b
-      val probe = spark.read.parquet(s"$driftDir/batch_id=$b").head()
+      // the semantic family's drift-probe row
+      val probe = spark.read
+        .schema("seed_mean_dist DOUBLE, delta_mean_dist DOUBLE, ratio DOUBLE, " +
+          "rebuild_recommended BOOLEAN")
+        .parquet(s"$driftDir/batch_id=$b").head()
       val tripped = probe.getAs[Boolean]("rebuild_recommended")
       if (b < 8 && tripped) phaseATrips += 1
       // recall over pairs touching a fixed batch sample
@@ -148,7 +152,8 @@ object ReseedScale {
       val exact = SimilarityJoin.groupedThresholdPairsDelta(
         archiveVecs.unionByName(nonSample), sample, "g", "id", "v", theta,
         hotGroupPairCap = Long.MaxValue).count()
-      val emitted = spark.read.parquet(s"$pairsDir/batch_id=$b")
+      val emitted = spark.read.schema("id_a BIGINT, id_b BIGINT")
+        .parquet(s"$pairsDir/batch_id=$b")
         .where(col("id_a").isin(sampleIds.toSeq.map(Long.box): _*) ||
           col("id_b").isin(sampleIds.toSeq.map(Long.box): _*))
         .count()

@@ -34,7 +34,7 @@ object ScaleUp {
   /** Session-borrowing form (the CLI `main` owns its session; tests pass
     * the shared one — `run` never stops it). */
   def run(spark: SparkSession, src: String, dst: String, copies: Int): Unit = {
-    def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
+    def read(t: String): DataFrame = graft.Tables(spark, src, t)
     def stride(df: DataFrame, key: String): Long =
       df.agg(max(col(key))).head().getLong(0) + 1L
 

@@ -25,7 +25,7 @@ object StatsScale {
     val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = graft.Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
     val seed = docs.where(col("doc_id") % 10 =!= 0)
     val delta = docs.where(col("doc_id") % 10 === 0)
