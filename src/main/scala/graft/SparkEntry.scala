@@ -1052,8 +1052,9 @@ object SparkEntry {
     import graft.streaming.ArchiveDedup
     // < 2000 bounds the LIFECYCLE corpus (the whole 500-doc small-SF
     // corpora; 2000 of sf0.1's 5000 — the fold's delta pair-mining is
-    // the query's cost and scale for it is ForgetScale's job, not the
-    // battery's): seed < 400, fold the rest as one batch
+    // the query's cost, and its ×100 walls are BENCH.md round 13's
+    // takedown record, not the battery's): seed < 400, fold the rest as
+    // one batch
     val docs = Tables(s, dir, "documents").where(col("doc_id") < 2000)
     val arch = java.nio.file.Files.createTempDirectory("graft-q96").toString
     val pairsDir = java.nio.file.Files.createTempDirectory("graft-q96-p").toString

@@ -35,13 +35,6 @@ import org.apache.spark.sql.functions._
  */
 object Components {
 
-  /** Star rounds the most recent DISTRIBUTED run in this JVM took to
-    * converge (−1 before any run; unchanged by the local union-find
-    * route). Diagnostic surface for the convergence benchmarks — the
-    * O(log² n) claim is measured, not argued (ComponentsScale tool /
-    * BENCH.md). */
-  val lastDistributedRounds = new java.util.concurrent.atomic.AtomicInteger(-1)
-
   /**
    * Connected components of the undirected graph given by `edges`.
    * Returns one row per distinct node appearing in either endpoint
@@ -64,7 +57,9 @@ object Components {
    * `localEdgeLimit` accordingly, don't treat it as payload-only.
    * Both routes are exact and return identical output (ComponentsSpec
    * parity-tests the pair); `localEdgeLimit = 0` forces the
-   * distributed path.
+   * distributed path. Its O(log² n) rounds on adversarial shapes are
+   * measured at 1M nodes in BENCH.md round 9 ("Components convergence,
+   * adversarial 1M-node mix"); ComponentsSpec pins the same shapes.
    */
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
                           maxIter: Int = 64,
@@ -177,7 +172,6 @@ object Components {
       e = next
       iter += 1
     }
-    lastDistributedRounds.set(iter)
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds " +

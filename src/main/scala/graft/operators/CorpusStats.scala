@@ -43,7 +43,8 @@ import org.apache.spark.sql.functions._
  * ids) without stopping the stream, the stats twin of
  * [[graft.streaming.ArchiveDedup.forgetDocs]].
  *
- * Measured decision rule (tools.StatsScale, BENCH.md "Round 12"):
+ * Measured decision rule (BENCH.md "Round 12", "Incremental corpus
+ * statistics"):
  * at ×100 (500k docs, 10% delta) the incremental path scores the
  * delta at 0.40× the full token-df recompute (2.27 s vs 5.70 s) and
  * 0.56× the full bigram recompute (2.96 s vs 5.25 s) — the gap is the

@@ -287,7 +287,8 @@ object HnswIndex {
     // cluster face; skipped candidates refill up to the cap to keep the
     // graph connected. Versus naive closest-m this is what lifts
     // recall-at-ef on clustered corpora (the r16 verdict's accuracy-end
-    // ask): measured on the day_6 large workload (tools/HnswEfSweep),
+    // ask): measured on the day_6 large workload (BENCH.md round 17,
+    // "HNSW: diversity neighbor selection"),
     // recall@10 rose 0.748→0.995 at ef=6 and 0.844→1.000 at ef=64 at
     // unchanged beam cost — naive selection had crowded every neighbor
     // list onto one cluster face. `cands` must arrive closest-first

@@ -66,6 +66,4 @@ object SimdSupport {
 
   /** Best available kernels for serving scans. */
   val ops: F32Ops = simd.getOrElse(ScalarOps)
-
-  def simdEnabled: Boolean = simd.isDefined
 }

@@ -783,8 +783,9 @@ object SimilarityJoin {
    * new row emits at most ONE covering edge, to its minimum-id verified
    * mate in the bucket (exact cosine ≥ threshold, the same widened-double
    * kernel). A boilerplate-heavy corpus (intra-cluster cosine above the
-   * threshold — the ForgetUnderLoad σ1.0 regime that emitted ~20M
-   * pairs/batch and OOMed the grid shuffle) then emits O(batch) edges
+   * threshold — the σ1.0 forget-under-load regime of BENCH.md rounds
+   * 16–17 that emitted ~20M pairs/batch and OOMed the grid shuffle)
+   * then emits O(batch) edges
    * per batch while the KEEP/DROP verdict under
    * [[graft.operators.Components]] closure is unchanged on dense
    * clusters: edges stay a SUBSET of the true pair set (never

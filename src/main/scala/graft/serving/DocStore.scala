@@ -261,27 +261,37 @@ object ParquetDocStore {
   /** Bootstrap a base generation straight from a corpus frame —
     * `(doc_id string-castable, long_id long, text string, metadata
     * json-string or absent)` — without the rows ever visiting the
-    * driver. The frame is sorted by doc_id for row-group pruning. */
+    * driver. The frame is sorted by doc_id for row-group pruning.
+    * The corpus replaces whatever `dir` held: it is written as the
+    * generation after the latest one (`gen=0` in a fresh directory),
+    * and the superseded generations are deleted only once it is open —
+    * `compact`'s swap, so a failed bootstrap loses nothing. */
   def bootstrap(spark: SparkSession, dir: String, corpus: DataFrame,
                 maxDelta: Int = 4096): ParquetDocStore = {
     val md =
       if (corpus.columns.contains("metadata")) col("metadata").cast("string")
       else lit(null).cast("string")
+    val prior = generations(spark, dir)
+    val next = prior.foldLeft(-1)(math.max) + 1
     corpus.select(col("doc_id").cast("string"), col("long_id").cast("long"),
         col("text").cast("string"), md.as("metadata"))
       .sortWithinPartitions(col("doc_id"))
-      .write.mode("overwrite").parquet(s"$dir/gen=0")
-    open(spark, dir, maxDelta)
+      .write.mode("overwrite").parquet(s"$dir/gen=$next")
+    val store = open(spark, dir, maxDelta)
+    prior.foreach(g => deletePath(spark, s"$dir/gen=$g"))
+    store
   }
 
-  private def latestGen(spark: SparkSession, dir: String): Int = {
+  private def latestGen(spark: SparkSession, dir: String): Int =
+    generations(spark, dir).foldLeft(-1)(math.max)
+
+  private def generations(spark: SparkSession, dir: String): Seq[Int] = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) -1
-    else fs.listStatus(p).iterator
+    if (!fs.exists(p)) Nil
+    else fs.listStatus(p).toSeq
       .map(_.getPath.getName)
       .collect { case n if n.startsWith("gen=") => n.stripPrefix("gen=").toInt }
-      .foldLeft(-1)(math.max)
   }
 
   private def deletePath(spark: SparkSession, path: String): Unit = {

@@ -9,8 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
  * The dense-duplicate regime of the streaming fold (round 17, verdict
  * ask #1): a boilerplate-heavy corpus whose intra-cluster cosine sits
  * ABOVE the dedup threshold makes every batch's delta pair space
- * cluster-quadratic (the ForgetUnderLoad σ1.0 run emitted ~20M
- * pairs/batch and OOMed the grid shuffle). The capped routes
+ * cluster-quadratic (BENCH.md round 16: the σ1.0 forget-under-load run
+ * emitted ~20M pairs/batch and OOMed the grid shuffle). The capped routes
  * (`hotBucketPairCap` / `hotClusterPairCap`) must:
  *
  *  1. emit a SUBSET of the unbounded path's verified pairs (bit-exact
@@ -319,5 +319,76 @@ class CappedEmissionSpec extends AnyFunSuite {
       .select(col("id")).as[Long].collect().toSet
     assert(kept === Set(0L, 1L),
       s"KEEP/DROP verdict must keep exactly the per-group min ids, got $kept")
+  }
+
+  // ---- the cold-path probe (round 19): under a FINITE cap the banded
+  // delta routes first ask one tiny aggregate whether any bucket is
+  // actually hot. When none is, the scan must take the unbounded plan
+  // shape; a hot corpus under the same cap adds exactly the min-mate
+  // reduce. That reduce is an RDD stage, invisible to SQL explain, so
+  // the shape is read off the lineage's ShuffledRDD count.
+
+  private def rddShuffles(df: DataFrame): Int =
+    "ShuffledRDD".r.findAllIn(df.rdd.toDebugString).size
+
+  /** Cold: no more shuffles than unbounded, and real pairs come out (a
+    * cold route, not an empty-plan collapse). Hot: one more shuffle. */
+  private def checkProbedShape(route: String, cold: Long => DataFrame,
+                               hot: Long => DataFrame, cap: Long): Unit = {
+    val coldCapped = cold(cap)
+    assert(rddShuffles(coldCapped) <= rddShuffles(cold(Long.MaxValue)),
+      s"$route: a finite cap on a cold corpus must take the unbounded " +
+        s"plan shape (no min-mate reduce):\n${coldCapped.rdd.toDebugString}")
+    assert(coldCapped.count() > 0L, s"$route: the cold fixture must emit pairs")
+    assert(rddShuffles(hot(cap)) === rddShuffles(hot(Long.MaxValue)) + 1,
+      s"$route: a hot corpus under the same cap adds the min-mate reduce")
+  }
+
+  test("cold-path probe: a finite cap takes the unbounded plan shape unless a bucket is hot") {
+    def word(r: java.util.Random): String =
+      Iterator.continually(('a' + r.nextInt(26)).toChar).take(6).mkString
+    def uniqueText(id: Long): String = {
+      val r = new java.util.Random(7L + id)
+      Iterator.continually(word(r)).take(30).mkString(" ")
+    }
+    // hot: every doc shares one boilerplate body, so one bucket holds all
+    val boiler = uniqueText(-1L)
+    def texts(ids: Range.Inclusive, body: Long => String): DataFrame =
+      ids.map(i => (i.toLong, body(i.toLong))).toDF("id", "text")
+    // cold but non-empty: each delta doc duplicates ONE archived doc, so
+    // its buckets hold m = 2 (work 2, far under the cap) and pairs exist
+    val ix = Dedup.buildMinhashIndex(texts(0 to 399, uniqueText), "id", "text")
+    val hotIx = Dedup.buildMinhashIndex(
+      texts(0 to 399, i => boiler + s" tail$i"), "id", "text")
+    checkProbedShape("minhashDeltaPairs",
+      cap => Dedup.minhashDeltaPairs(ix, texts(400 to 499, i => uniqueText(i - 400L)),
+        "id", "text", 0.5, hotBucketPairCap = cap),
+      cap => Dedup.minhashDeltaPairs(hotIx, texts(400 to 499, i => boiler + s" tail$i"),
+        "id", "text", 0.5, hotBucketPairCap = cap),
+      cap = 64L)
+
+    def vec(r: java.util.Random): Array[Float] =
+      Array.tabulate(16)(_ => r.nextGaussian().toFloat)
+    def vecs(ids: Range.Inclusive, v: Long => Array[Float]): DataFrame =
+      ids.map(i => (i.toLong, v(i.toLong))).toDF("id", "v")
+    val seeded = (i: Long) => vec(new java.util.Random(100L + i))
+    // hot: every vector sits near one archived direction
+    val dir = seeded(0L)
+    val nearDir = (i: Long) => {
+      val r = new java.util.Random(900L + i)
+      dir.map(x => x + 0.001f * r.nextGaussian().toFloat)
+    }
+    val cIx = Dedup.buildCosineIndex(vecs(0 to 399, seeded), "id", "v")
+    val hotCIx = Dedup.buildCosineIndex(vecs(0 to 399, nearDir), "id", "v")
+    def cosine(ix: Dedup.CosineIndex, delta: DataFrame)(cap: Long): DataFrame =
+      SimilarityJoin.lshCosineDeltaPairs(ix.buckets, ix.vecs, delta, "id", "v",
+        0.9, ix.numBits, ix.bands, ix.dim, ix.seed, hotBucketPairCap = cap)
+    // 500 random vectors in the 8-bit signature space share buckets of
+    // ~tens, so a cap of 64 would call the incidental collisions hot;
+    // 20k separates them from the dense cluster (work ≈ 100 × 500)
+    checkProbedShape("lshCosineDeltaPairs",
+      cosine(cIx, vecs(400 to 499, i => seeded(i - 400L))),
+      cosine(hotCIx, vecs(400 to 499, nearDir)),
+      cap = 20000L)
   }
 }

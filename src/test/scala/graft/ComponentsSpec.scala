@@ -92,6 +92,26 @@ class ComponentsSpec extends AnyFunSuite {
       org.apache.spark.sql.functions.min(org.apache.spark.sql.functions.col("component"))).head()
     assert(agg.getLong(0) === n)
     assert(agg.getLong(1) === 0L && agg.getLong(2) === 0L) // one component, rooted at 0
+
+    // the same path with labels scrambled by a bijection on Long (odd
+    // multiplier), so the component minimum sits at an arbitrary interior
+    // position and min-propagation cannot shortcut along monotone ids;
+    // beside it a star whose hub label is LARGER than every leaf, so
+    // large-star must move the whole neighborhood off the hub
+    val mix = 0x9E3779B97F4A7C15L
+    val starLeaves = 5000L
+    val path = (0L until n - 1).map(i => (i * mix, (i + 1) * mix))
+    val star = (0L until starLeaves).map(i => (Long.MaxValue, i * mix + 7L))
+    val pathMin = (0L until n).map(_ * mix).min
+    val starMin = (0L until starLeaves).map(_ * mix + 7L).min
+    assert(star.forall(_._2 < Long.MaxValue), "fixture: the hub must be the largest label")
+    val planted = Components.connectedComponents((path ++ star).toDF("a", "b"), "a", "b",
+        localEdgeLimit = 0L)
+      .groupBy(col("component"))
+      .agg(count(lit(1)), min(col("node")))
+      .as[(Long, Long, Long)].collect().toSet
+    assert(planted === Set((pathMin, n, pathMin), (starMin, starLeaves + 1, starMin)),
+      "scrambled path and max-hub star: two components, each rooted at its minimum")
   }
 
   test("duplicateClusters marks sizes and the canonical min; extra nodes ride as singletons") {

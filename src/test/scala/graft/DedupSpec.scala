@@ -358,7 +358,7 @@ class DedupSpec extends AnyFunSuite {
     val base = Array.tabulate(2000) { i =>
       (i.toLong, Array.fill(64)(rng.nextGaussian().toFloat))
     }
-    val plants = graft.tools.LshRecall.planted(base, 300, 1000000L)
+    val plants = PlantedNearDups.planted(base, 300, 1000000L)
     val df = (base ++ plants).toSeq.toDF("vec_id", "embedding")
     for (targetN <- Seq(50000L, 500000L)) {
       val bits = Dedup.autoLshBits(targetN)
@@ -411,7 +411,7 @@ class DedupSpec extends AnyFunSuite {
     val base = Array.tabulate(800) { i =>
       (i.toLong, Array.fill(64)(rng.nextGaussian().toFloat))
     }
-    val plants = graft.tools.LshRecall.planted(base, 200, 100000L)
+    val plants = PlantedNearDups.planted(base, 200, 100000L)
     val corpus = (base ++ plants).toSeq.toDF("vec_id", "embedding")
     val split = 100000L // plants are the delta batch
     val ix = Dedup.buildCosineIndex(corpus.where(col("vec_id") < split),

@@ -143,4 +143,23 @@ class GraftFacadeSpec extends AnyFunSuite {
     // the allow-list names live sites only
     assert(inferred.map(_.site).toSet === callerLayout)
   }
+
+  test("the mains in src/main are exactly the entry points and the shared harness") {
+    // one-off measurement mains do not come back: a scale number lives in
+    // BENCH.md, a bound in a spec, a measuring path in perfbench/ or Bench
+    val allowed = Set("Verify", "Bench", "Demo", "tools.QueryJobs",
+      "tools.PlanDumpFmt", "tools.ScaleUp", "tools.JaccardScaleGate")
+    val mains = sources.flatMap { case (_, text) =>
+      val pkg = """\bpackage\s+([\w.]+)""".r.findFirstMatchIn(text)
+        .map(_.group(1).stripPrefix("graft").stripPrefix(".")).getOrElse("")
+      """\bdef\s+main\s*\(|\bextends\s+App\b""".r.findAllMatchIn(text).map { m =>
+        val obj = """\bobject\s+(\w+)""".r.findAllMatchIn(text.substring(0, m.start))
+          .map(_.group(1)).toSeq.lastOption.getOrElse("?")
+        if (pkg.isEmpty) obj else s"$pkg.$obj"
+      }
+    }
+    assert(mains.size === mains.toSet.size, s"a main is defined twice: $mains")
+    assert(mains.toSet === allowed,
+      s"unexpected mains: ${mains.toSet -- allowed}; missing: ${allowed -- mains.toSet}")
+  }
 }

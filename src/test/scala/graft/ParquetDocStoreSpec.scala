@@ -59,4 +59,24 @@ class ParquetDocStoreSpec extends AnyFunSuite {
     assert(store.size === 40L)
     assert(store.maxLongId === 100L)
   }
+
+  test("bootstrap into a directory that holds a compacted store replaces its corpus") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-docstore-reboot").toString
+    def corpus(ids: String*) = ids.zipWithIndex
+      .map { case (d, i) => (d, i.toLong, s"text of $d") }
+      .toDF("doc_id", "long_id", "text")
+    val first = ParquetDocStore.bootstrap(spark, dir, corpus("a"))
+    first.put(DocRecord("b", 1L, "text of b", None))
+    first.compact()
+    val second = ParquetDocStore.bootstrap(spark, dir, corpus("z"))
+    assert(second.size === 1L)
+    assert(second.get("z").map(_.text) === Some("text of z"))
+    assert(second.get("a").isEmpty && second.get("b").isEmpty)
+    // a reopen serves the bootstrapped corpus too: the superseded
+    // generations are gone, not merely shadowed
+    val gens = new java.io.File(dir).list().filter(_.startsWith("gen=")).toSeq
+    assert(gens === Seq("gen=2"))
+    assert(ParquetDocStore.open(spark, dir).get("z").isDefined)
+  }
 }

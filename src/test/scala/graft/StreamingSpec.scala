@@ -116,6 +116,42 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("streaming exact dedup state stays horizon-bounded under a continuous feed") {
+    // 16 batches of distinct docs, event time advancing horizon/2 per
+    // batch: a fingerprint leaves the state once the watermark (max event
+    // − horizon) passes it, ~3 batches after arrival. Without eviction
+    // the state would hold every fingerprint of the feed.
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val docsPerBatch = 100
+    val horizonS = 1000L
+    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String, Long)]
+    val src = mem.toDS().toDF("doc_id", "text", "ts_ms")
+      .withColumn("event_time", timestamp_millis(col("ts_ms")))
+    val q = EventStream.dedupStream(src, "text", "event_time",
+        watermarkDelay = s"$horizonS seconds")
+      .writeStream.outputMode("append").format("noop").start()
+    val stateRows = scala.collection.mutable.ArrayBuffer.empty[Long]
+    try {
+      (0 until 16).foreach { b =>
+        val ts = 1000000000L + b * horizonS * 1000L / 2
+        mem.addData((0 until docsPerBatch).map { i =>
+          val id = b * 1000L + i
+          (id, s"distinct document $id", ts)
+        })
+        q.processAllAvailable()
+        Option(q.lastProgress).filter(_.stateOperators.nonEmpty)
+          .foreach(p => stateRows += p.stateOperators(0).numRowsTotal)
+      }
+    } finally q.stop()
+    assert(stateRows.size === 16, s"no state readings: $stateRows")
+    val steady = stateRows.takeRight(4)
+    assert(steady.max <= docsPerBatch * 5L,
+      s"fingerprints outlive the horizon: $stateRows")
+    assert(stateRows.last <= stateRows.slice(6, 12).max,
+      s"state still climbing at end of feed: $stateRows")
+  }
+
   test("streaming quality gate equals the batch battery, batch by batch") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
