@@ -609,10 +609,9 @@ object Bench {
     // (parquet doc store base + RDD-slab Mutable index) driven over a
     // real HTTP socket. Reported: bootstrap wall time, then per-request
     // latency (median of 30 sequential /api/v1/search calls, n=5) —
-    // each request pays one distributed index job plus one pushed
-    // point-lookup job for hydration, so this key makes the
-    // scale-path's job floor visible instead of hiding it behind the
-    // heap-resident tiers.
+    // each request pays one distributed index job and hydrates on the
+    // driver with no job, so this key makes the scale-path's job floor
+    // visible instead of hiding it behind the heap-resident tiers.
     val servingDist: Seq[(String, Double)] = try {
       val tmp = java.nio.file.Files.createTempDirectory("graft-bench-store")
       val docs = Tables(spark, sfDir, "documents")

@@ -1,5 +1,10 @@
 package graft.serving
 
+import scala.jdk.CollectionConverters._
+
+import graft.sources.DriverParquet
+import org.apache.parquet.filter2.predicate.FilterApi
+import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -17,8 +22,8 @@ final case class DocRecord(docId: String, longId: Long, text: String,
  *    Chroma keeps documents beside the HNSW store in process). Right for
  *    collections that fit serving RAM; zero per-request latency.
  *  - [[ParquetDocStore]]: the beyond-driver-RAM route. Base generation
- *    lives in parquet (reads are pushed-down point lookups — Spark jobs,
- *    paid per request), mutations land in a bounded heap delta +
+ *    lives in parquet (reads are driver-side point lookups under a pushed
+ *    predicate — no Spark job), mutations land in a bounded heap delta +
  *    tombstone set that compacts back into parquet — the same
  *    LSM base+delta+tombstone shape [[graft.operators.ServingIndex.Mutable]]
  *    uses for the vectors, so the serving surface holds O(delta) driver
@@ -35,7 +40,8 @@ trait DocStore {
   /** Lookup by API key. */
   def get(docId: String): Option[DocRecord]
   /** Batch hydrate by vector-index id — ONE lookup per search round, so
-    * a parquet-backed store pays one job per round, not one per hit. */
+    * a parquet-backed store reads its base once per round, not once per
+    * hit. */
   def getByLongIds(ids: Seq[Long]): Map[Long, DocRecord]
   /** Remove; returns the stored record when the doc existed (the HTTP
     * 404 contract needs the distinction, and the service needs the
@@ -75,15 +81,20 @@ final class HeapDocStore extends DocStore {
 
 /**
  * Parquet-backed store: base generation on disk, heap delta + tombstones,
- * LSM compaction. Each base lookup is ONE Spark job: a pushed-filter
- * scan of the generation's relation, which is built once per generation
- * with the pinned [[ParquetDocStore.BaseSchema]] (no footer-inference
- * job, no re-listing). The base is written SORTED by doc_id, so a
- * `get`/`delete` by doc_id prunes row groups by their min/max statistics
- * (the local-disk stand-in for the id-bucketed layout a cluster
- * deployment would use); a hydrate by long_id has no such order to
- * prune on and filters every row group. A Bloom filter over base doc_ids
- * keeps the common case (brand-new id) jobless on the put path.
+ * LSM compaction. Every base lookup is a driver-side parquet-mr read
+ * ([[graft.sources.DriverParquet]]) under a pushed predicate, so a
+ * hydrate, `get` or `delete` runs no Spark job; the only jobs the store
+ * runs are the writes and the Bloom build of `bootstrap`, `compact` and
+ * `open`. A generation's files and footers are listed and read once, when
+ * it opens (state O(row groups)); the footers also give the exact base
+ * count and the largest long_id.
+ *
+ * Each base file is written SORTED by long_id, the key a search round
+ * hydrates by, so its row-group and page statistics prune an
+ * `in(long_id, …)` lookup; a parquet Bloom filter on doc_id prunes row
+ * groups for an `eq(doc_id, …)` lookup. A driver-resident Bloom filter
+ * over base doc_ids keeps the common put (brand-new id) from reading the
+ * base at all.
  *
  * Metadata rides as a JSON string column (the service's own [[Json]]
  * codec both ways), so the base schema is flat:
@@ -95,13 +106,17 @@ final class ParquetDocStore private (
   import ParquetDocStore._
 
   private var gen = -1 // -1 = no base yet
-  // the base relation of `gen`, built once per generation: generation
-  // directories are immutable, so its schema and file listing hold until
-  // the next compaction swaps in a new generation
+  // generation directories are immutable, so both views of `gen` hold
+  // until the next compaction swaps in a new generation: the files with
+  // their footers for driver-side lookups, and the Spark relation that
+  // compaction rewrites and the Bloom build scans
+  private var baseFiles: Option[DriverParquet.Files] = None
   private var baseDf: Option[DataFrame] = None
   private val delta = new java.util.LinkedHashMap[String, DocRecord]
+  // the delta keyed by long_id, for hydration; kept in step with `delta`
+  private val deltaByLong = collection.mutable.HashMap.empty[Long, DocRecord]
   private val tombstones = new java.util.HashSet[String]
-  // base stats, refreshed per generation (one job each at open/compact)
+  // base stats, refreshed per generation
   private var baseCount = 0L
   private var baseMaxLongId = -1L
   private var baseBloom: org.apache.spark.util.sketch.BloomFilter = null
@@ -110,23 +125,21 @@ final class ParquetDocStore private (
   /** Point the store at generation `g` (-1 = none). */
   private def openGen(g: Int): Unit = {
     gen = g
-    baseDf =
-      if (g < 0) None
-      else Some(spark.read.schema(BaseSchema).parquet(s"$dir/gen=$g"))
-    refreshBaseStats()
-  }
-
-  private def refreshBaseStats(): Unit = baseDf match {
-    case None =>
+    if (g < 0) {
+      baseFiles = None; baseDf = None
       baseCount = 0L; baseMaxLongId = -1L
       baseBloom = org.apache.spark.util.sketch.BloomFilter.create(64, 0.01)
-    case Some(b) =>
-      val row = b.agg(count(lit(1)), max(col("long_id"))).head()
-      baseCount = row.getLong(0)
-      baseMaxLongId = if (row.isNullAt(1)) -1L else row.getLong(1)
+    } else {
+      val path = s"$dir/gen=$g"
+      val files = DriverParquet.open(spark.sparkContext.hadoopConfiguration, path, BaseSchema)
+      val b = spark.read.schema(BaseSchema).parquet(path)
+      baseFiles = Some(files); baseDf = Some(b)
+      baseCount = files.rowCount
+      baseMaxLongId = files.maxLong("long_id").getOrElse(-1L)
       // no false negatives: every base id tests positive, so a negative
-      // put/delete probe can safely skip the point-lookup job
+      // put/delete probe can safely skip the base read
       baseBloom = b.stat.bloomFilter(col("doc_id"), math.max(baseCount, 64L), 0.01)
+    }
   }
 
   private def fromRow(r: org.apache.spark.sql.Row): DocRecord = {
@@ -137,19 +150,22 @@ final class ParquetDocStore private (
     DocRecord(r.getString(0), r.getLong(1), r.getString(2), md)
   }
 
-  /** Base point lookup by doc_id (pushed filter + row-group pruning). */
+  /** Base point lookup by doc_id. */
   private def baseGet(docId: String): Option[DocRecord] =
     if (!baseBloom.mightContainString(docId)) None
-    else baseDf.flatMap(
-      _.where(col("doc_id") === docId).collect().headOption.map(fromRow))
+    else baseFiles.flatMap(_.select(
+      FilterApi.eq(FilterApi.binaryColumn("doc_id"), Binary.fromString(docId)))
+      .headOption.map(fromRow))
 
   def put(rec: DocRecord): Unit = {
     // membership decides upsert-vs-insert accounting; the bloom keeps
-    // brand-new ids jobless, a positive probe pays one point lookup
+    // brand-new ids from reading the base
     val existedInBase =
       !tombstones.contains(rec.docId) && baseGet(rec.docId).isDefined
     if (existedInBase) tombstones.add(rec.docId) // mask the stale base copy
-    delta.put(rec.docId, rec)
+    val prev = delta.put(rec.docId, rec)
+    if (prev != null) deltaByLong.remove(prev.longId)
+    deltaByLong(rec.longId) = rec
     maybeCompact()
   }
 
@@ -161,14 +177,12 @@ final class ParquetDocStore private (
   }
 
   def getByLongIds(ids: Seq[Long]): Map[Long, DocRecord] = {
-    val fromDelta = collection.mutable.Map.empty[Long, DocRecord]
-    val dIt = delta.values().iterator()
-    while (dIt.hasNext) { val r = dIt.next(); fromDelta(r.longId) = r }
-    val hit = ids.iterator.flatMap(id => fromDelta.get(id).map(id -> _)).toMap
+    val hit = ids.iterator.flatMap(id => deltaByLong.get(id).map(id -> _)).toMap
     val missing = ids.filterNot(hit.contains)
-    baseDf match {
+    baseFiles match {
       case Some(b) if missing.nonEmpty =>
-        hit ++ b.where(col("long_id").isin(missing: _*)).collect()
+        val wanted = missing.map(Long.box).toSet.asJava
+        hit ++ b.select(FilterApi.in(FilterApi.longColumn("long_id"), wanted))
           .map(fromRow)
           .filterNot(r => tombstones.contains(r.docId)) // deleted/replaced
           .map(r => r.longId -> r)
@@ -179,6 +193,7 @@ final class ParquetDocStore private (
   def delete(docId: String): Option[DocRecord] = {
     val d = delta.remove(docId)
     if (d != null) {
+      deltaByLong.remove(d.longId)
       // any base copy was already tombstoned when the delta row was put,
       // so removing the delta row finishes the delete; adding a tombstone
       // here would double-subtract a delta-only doc from size
@@ -198,20 +213,15 @@ final class ParquetDocStore private (
     baseCount - tombstones.size + delta.size
   }
 
-  def maxLongId: Long = {
-    var m = baseMaxLongId
-    val it = delta.values().iterator()
-    while (it.hasNext) { val r = it.next(); if (r.longId > m) m = r.longId }
-    m
-  }
+  def maxLongId: Long = (baseMaxLongId +: deltaByLong.keys.toSeq).max
 
   private def maybeCompact(): Unit =
     if (delta.size > maxDelta || tombstones.size > maxDelta) compact()
 
   /** Fold delta + tombstones into the next base generation: survivors ∪
-    * delta, sorted by doc_id (row-group pruning for point lookups),
-    * written to `gen=N+1` then swapped — the old generation stays intact
-    * until the write succeeds, so a failed compaction loses nothing. */
+    * delta, written to `gen=N+1` then swapped — the old generation stays
+    * intact until the write succeeds, so a failed compaction loses
+    * nothing. */
   def compact(): Unit = {
     if (delta.isEmpty && tombstones.isEmpty) return
     import spark.implicits._
@@ -234,10 +244,10 @@ final class ParquetDocStore private (
         kept.unionByName(deltaDf)
     }
     val next = gen + 1
-    survivors.sortWithinPartitions(col("doc_id"))
-      .write.mode("overwrite").parquet(s"$dir/gen=$next")
+    writeGen(survivors, s"$dir/gen=$next")
     val old = gen
     delta.clear()
+    deltaByLong.clear()
     tombstones.clear()
     openGen(next)
     // best-effort cleanup of the superseded generation
@@ -248,7 +258,8 @@ final class ParquetDocStore private (
 object ParquetDocStore {
 
   /** The base generation's schema, as [[bootstrap]] and `compact` write
-    * it; reads pass it, so a lookup runs no footer-inference job. */
+    * it. A generation opens only if every file has exactly this schema
+    * (names, types, order): the driver-side reads decode by position. */
   val BaseSchema: StructType = StructType(Seq(
     StructField("doc_id", StringType), StructField("long_id", LongType),
     StructField("text", StringType), StructField("metadata", StringType)))
@@ -261,7 +272,7 @@ object ParquetDocStore {
   /** Bootstrap a base generation straight from a corpus frame —
     * `(doc_id string-castable, long_id long, text string, metadata
     * json-string or absent)` — without the rows ever visiting the
-    * driver. The frame is sorted by doc_id for row-group pruning.
+    * driver.
     * The corpus replaces whatever `dir` held: it is written as the
     * generation after the latest one (`gen=0` in a fresh directory),
     * and the superseded generations are deleted only once it is open —
@@ -273,14 +284,22 @@ object ParquetDocStore {
       else lit(null).cast("string")
     val prior = generations(spark, dir)
     val next = prior.foldLeft(-1)(math.max) + 1
-    corpus.select(col("doc_id").cast("string"), col("long_id").cast("long"),
-        col("text").cast("string"), md.as("metadata"))
-      .sortWithinPartitions(col("doc_id"))
-      .write.mode("overwrite").parquet(s"$dir/gen=$next")
+    writeGen(corpus.select(col("doc_id").cast("string"), col("long_id").cast("long"),
+        col("text").cast("string"), md.as("metadata")), s"$dir/gen=$next")
     val store = open(spark, dir, maxDelta)
     prior.foreach(g => deletePath(spark, s"$dir/gen=$g"))
     store
   }
+
+  /** Write a base generation: each file sorted by long_id, with a parquet
+    * Bloom filter on doc_id sized to the file's distinct ids — the
+    * smallest of ten candidates halving from 1 MB down to 2 KB. */
+  private def writeGen(rows: DataFrame, path: String): Unit =
+    rows.sortWithinPartitions(col("long_id")).write.mode("overwrite")
+      .option("parquet.bloom.filter.enabled#doc_id", "true")
+      .option("parquet.bloom.filter.adaptive.enabled", "true")
+      .option("parquet.bloom.filter.candidates.number#doc_id", "10")
+      .parquet(path)
 
   private def latestGen(spark: SparkSession, dir: String): Int =
     generations(spark, dir).foldLeft(-1)(math.max)

@@ -235,8 +235,8 @@ object Json {
  * adaptively (k, 4k, 16k, … up to the live size) until `n` survivors
  * match — the same filter-after-candidates shape the engine's filtered
  * k-NN (P1) uses. Hydration is BATCHED per round (one store lookup for
- * the whole candidate list), so a parquet-backed store pays one pushed
- * point-lookup job per round, never one per hit.
+ * the whole candidate list), and a parquet-backed store answers it on the
+ * driver: a round costs one index job and no hydrate job.
  *
  * Thread-safe: the store is guarded by the instance lock; the Mutable
  * index has its own. Handlers may call concurrently.
@@ -303,7 +303,7 @@ final class DocumentService(
       val raw = index.search(Array((0L, qv)), k, KnnSearch.L2).head._2
       val hits = synchronized {
         // one batched hydrate per round: a disk-backed store turns this
-        // into a single pushed IN-filter lookup for all candidates
+        // into a single IN-filter read of its base for all candidates
         val recs = store.getByLongIds(raw.map(_._2).toSeq)
         raw.iterator.flatMap { case (score, longId) =>
           // a race with delete can leave a just-removed id in the result;

@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import graft.operators.{Embedder, ServingCounters, ServingIndex}
 import graft.serving._
+import graft.tools.QueryJobs
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -154,6 +155,76 @@ class ParquetServingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!recs.contains(3L))
     assert(recs(4L).text == "rewritten")
     assert(recs(6L).docId == "d-6")
+  }
+
+  test("filtered search equals the brute-force filtered top-10, through upserts and deletes") {
+    val docs = spark.read.parquet(s"${TestSpark.sfDir}/documents.parquet")
+      .select(col("doc_id"), col("text"), col("lang"),
+        to_json(struct(col("lang"), col("source"))).as("metadata"))
+    val svc = DocumentService.overCorpus(docs, "doc_id", "text",
+      Embedder.MockEncoder(dim), s"$tmp/filtered-store")
+    // the shadow model: doc_id -> (text, lang) of every live document
+    val live = collection.mutable.Map.empty[String, (String, String)]
+    docs.collect().foreach(r => live(r.getLong(0).toString) = (r.getString(1), r.getString(2)))
+    val enc = Embedder.MockEncoder(dim)
+    val vecs = collection.mutable.Map.empty[String, Array[Float]]
+    def dist(q: Array[Float], text: String): Double = {
+      val v = vecs.getOrElseUpdate(text, enc.encodeBatch(Seq(text)).head)
+      q.indices.map { i => val d = q(i).toDouble - v(i); d * d }.sum
+    }
+    val query = "spark window merge table column"
+    val qv = enc.encodeBatch(Seq(query)).head
+    def ranked(): Seq[(String, String, Double)] =
+      live.toSeq.map { case (id, (t, l)) => (id, l, dist(qv, t)) }.sortBy(_._3)
+    // the service's over-fetch rounds for `lang`: k = 10, 40, 160, ...
+    // until the unfiltered top-k holds 10 matches or covers every document
+    def rounds(lang: String): Int = {
+      val all = ranked()
+      var (k, n) = (10, 1)
+      while (all.take(k).count(_._2 == lang) < 10 && k < all.size) {
+        k = math.min(k * 4, all.size); n += 1
+      }
+      n
+    }
+    val counter = new QueryJobs.Counter(spark)
+    def check(lang: String, label: String): Seq[svc.Hit] = {
+      val (hits, _, cost) = counter.profile(svc.search(query, 10, Some(Map("lang" -> lang))))
+      val want = ranked().filter(_._2 == lang).take(10).map(_._3)
+      val got = hits.map(_.distance)
+      assert(got.size === 10, label)
+      assert(got.sorted.zip(want).forall { case (g, w) => math.abs(g - w) <= 1e-4 * math.max(1.0, w) },
+        s"$label: got $got, brute force $want")
+      hits.foreach { h =>
+        assert(live.get(h.docId).map(_._2).contains(lang), s"$label: ${h.docId} is not live in $lang")
+        assert(math.abs(dist(qv, live(h.docId)._1) - h.distance) <= 1e-4 * math.max(1.0, h.distance))
+      }
+      // one index job per over-fetch round, and no hydrate job
+      assert(cost.jobs === rounds(lang), s"$label: $cost")
+      hits
+    }
+    val counts = live.values.groupBy(_._2).map { case (l, v) => l -> v.size }
+    val (rare, common) = (counts.minBy(_._2)._1, counts.maxBy(_._2)._1)
+    assert(rounds(rare) >= 3, s"$rare should need at least three over-fetch rounds")
+    check(rare, s"selective lang $rare")
+    check(common, s"common lang $common")
+    // an upsert moves the common language's nearest doc into the rare one
+    val moved = ranked().find(_._2 == common).get._1
+    svc.insert(moved, live(moved)._1, Some(Map("lang" -> rare, "source" -> "upserted")))
+    live(moved) = (live(moved)._1, rare)
+    assert(check(rare, "after upsert").exists(_.docId == moved))
+    assert(!check(common, "after upsert").exists(_.docId == moved))
+    // a delete drops the rare language's nearest base doc
+    val deleted = ranked().find(r => r._2 == rare && r._1 != moved).get._1
+    assert(svc.delete(deleted))
+    live.remove(deleted)
+    assert(!check(rare, "after delete").exists(_.docId == deleted))
+    // the request path: an unfiltered search is one index job; a base get none
+    val (_, _, plain) = counter.profile(svc.search(query, 10, None))
+    assert(plain.jobs === 1, s"unfiltered search: $plain")
+    val baseDoc = live.keys.find(_ != moved).get
+    val (got, _, get) = counter.profile(svc.get(baseDoc))
+    assert(got.map(_._1) === Some(live(baseDoc)._1))
+    assert(get.jobs === 0, s"base get: $get")
   }
 
   test("heap and parquet stores serve identical search results") {
