@@ -243,10 +243,9 @@ object LocalServing {
                efSearch: Int = 64): Array[(Long, Array[(Float, Long)])] = {
       val desc = metric.descending
       val out = new Array[(Long, Array[(Float, Long)])](queries.length)
-      // HNSW stays parallel-always: walk cost is dominated by the boxed
-      // candidate/result queues, not dim-mults, so a flop estimate would
-      // serialize walks that are ~10× costlier than it predicts (measured:
-      // small-corpus serial walks were 20× slower than the fan-out)
+      // HNSW stays parallel-always: a walk's cost depends on the graph,
+      // ef and how much of it the walk visits, not on a dim-mult count,
+      // so the flop estimate the scan tiers gate on cannot price it
       forStripes(queries.length, serial = false) { qi =>
         val q = queries(qi)._2
         var merged: Array[(Float, Long)] = Array.empty

@@ -1294,10 +1294,12 @@ object ServingIndex {
     }
   }
 
-  /** Same unrolled kernel as the probe ranking (`L2.scoreF32`): cell
-    * assignment and cell probing must round distances identically, or a
-    * vector on a cell boundary could be stored in one cell and probed in
-    * the other at low nprobe. */
+  /** Cell assignment on the scalar `F32Kernels.l2sq`, the
+    * machine-independent kernel the oracle-parity `Clustering` and
+    * `AnnIndex` paths need. The serving probe ranking ([[rankProbes]])
+    * ranks through `SimdSupport.ops` instead, whose lane order can round
+    * differently, so a vector within rounding of a cell boundary can be
+    * stored in one cell and ranked as nearer the other at low nprobe. */
   private[operators] def nearestCentroid(v: Array[Float], cs: Array[Array[Float]]): Int = {
     var best = 0
     var bestD = Float.MaxValue

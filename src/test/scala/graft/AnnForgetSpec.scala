@@ -18,7 +18,7 @@ class AnnForgetSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    TestSpark.tempDir(prefix).toString
 
   private lazy val e = Tables(spark, TestSpark.sfDir, "embeddings").cache()
 

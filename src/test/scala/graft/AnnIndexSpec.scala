@@ -42,7 +42,7 @@ class AnnIndexSpec extends AnyFunSuite {
   }
 
   test("write/open round-trip; disk search prunes cluster partitions") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf").toString
+    val dir = TestSpark.tempDir("ivf").toString
     val index = AnnIndex.buildIvf(e.limit(200), "vec_id", "embedding", nlist = 4)
     AnnIndex.writeIndex(index, dir)
     val reopened = AnnIndex.openIndex(spark, dir)

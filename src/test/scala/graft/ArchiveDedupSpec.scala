@@ -21,7 +21,7 @@ class ArchiveDedupSpec extends AnyFunSuite {
   private val tC = "completely different subject matter entirely about spark catalyst optimizer rules"
 
   private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    TestSpark.tempDir(prefix).toString
 
   private def pairsOf(dir: String): Set[(Long, Long, Long)] =
     spark.read.option("basePath", dir).parquet(dir)

@@ -30,7 +30,7 @@ class ArchiveFormatSpec extends AnyFunSuite {
   /** A writable copy of one family's fixture directory. */
   private def fixture(family: String): java.nio.file.Path = {
     val src = java.nio.file.Paths.get(getClass.getResource(s"/archives/$family").toURI)
-    val dst = java.nio.file.Files.createTempDirectory(s"graft-format-$family")
+    val dst = TestSpark.tempDir(s"graft-format-$family")
     java.nio.file.Files.walk(src).forEach { p =>
       val t = dst.resolve(src.relativize(p).toString)
       if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(t)
@@ -55,7 +55,7 @@ class ArchiveFormatSpec extends AnyFunSuite {
         ArchiveDedup.archivePairs(spark, archive, threshold, exactLimit = Long.MaxValue))
       assert(ArchiveDedup.modalityOf(spark, archive) === family)
       assert(audit() === expected.getProperty("audit"))
-      val pairsDir = java.nio.file.Files.createTempDirectory(s"graft-format-$family-p").toString
+      val pairsDir = TestSpark.tempDir(s"graft-format-$family-p").toString
       ArchiveDedup.processBatch(spark.read.parquet(root.resolve("next_batch").toString),
         1L, archive, pairsDir, "id", payloadCol, threshold, compactEvery = 0)
       assert(digest(spark.read.parquet(s"$pairsDir/batch_id=1")) ===

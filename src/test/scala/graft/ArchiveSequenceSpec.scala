@@ -71,7 +71,7 @@ class ArchiveSequenceSpec extends AnyFunSuite {
     ids.map(id => (id, text(id))).toDF("doc_id", "text").coalesce(1)
 
   private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    TestSpark.tempDir(prefix).toString
 
   // ---- suite-wall budget (round-15 ask #5) ----------------------------
   // The release gate's full depth is 280 sequences (~6 min of wall);

@@ -123,8 +123,8 @@ class ArchiveStateSpec extends AnyFunSuite {
   }
 
   test("reader plan is O(1) in stream age: one FileScan per component however many entries") {
-    val archive = java.nio.file.Files.createTempDirectory("graft-arch-o1").toString
-    val pairsDir = java.nio.file.Files.createTempDirectory("graft-arch-o1p").toString
+    val archive = TestSpark.tempDir("graft-arch-o1").toString
+    val pairsDir = TestSpark.tempDir("graft-arch-o1p").toString
     ArchiveDedup.seedArchive(Dedup.buildMinhashIndex(
       Seq((0L, "alpha beta gamma delta epsilon zeta")).toDF("doc_id", "text"),
       "doc_id", "text"), archive)

@@ -23,7 +23,7 @@ class AutoReseedSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    TestSpark.tempDir(prefix).toString
 
   private def names(dir: String): Set[String] =
     new java.io.File(dir).listFiles().map(_.getName).toSet

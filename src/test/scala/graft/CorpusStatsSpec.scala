@@ -59,7 +59,7 @@ class CorpusStatsSpec extends AnyFunSuite {
   }
 
   test("save/load round trip preserves both indexes exactly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-cstats").toString
+    val dir = TestSpark.tempDir("graft-cstats").toString
     val tix = CorpusStats.buildTokenStats(docs.where(col("doc_id") < 3), "doc_id", "text")
     CorpusStats.saveTokenStats(
       CorpusStats.appendToTokenStats(tix, docs.where(col("doc_id") >= 3), "doc_id", "text"),
@@ -78,7 +78,7 @@ class CorpusStatsSpec extends AnyFunSuite {
 
   test("streaming twin: archive partials per batch, replay-safe, equal to the batch operator") {
     import graft.operators.CorpusStats._
-    val dir = java.nio.file.Files.createTempDirectory("graft-cstats-s").toString
+    val dir = TestSpark.tempDir("graft-cstats-s").toString
     seedTokenStatsArchive(docs.where(col("doc_id") < 2), dir, "doc_id", "text")
     implicit val sqlCtx = spark.sqlContext
     val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
@@ -113,7 +113,7 @@ class CorpusStatsSpec extends AnyFunSuite {
     // compaction folds entries; reads equivalent, and a replay of a
     // batch whose ENTRY was folded away still skips (id-membership
     // coverage, not entry presence)
-    val dst = java.nio.file.Files.createTempDirectory("graft-cstats-c").toString
+    val dst = TestSpark.tempDir("graft-cstats-c").toString
     compactTokenStatsArchive(spark, dir, dst)
     assert(rowsOf(CorpusStats.tokenDf(loadTokenStatsArchive(spark, dst)))
       === rowsOf(CorpusStats.tokenDf(streamed)))
@@ -125,7 +125,7 @@ class CorpusStatsSpec extends AnyFunSuite {
 
   test("ngram streaming twin: streamed archive equals the one-shot model, replay-safe") {
     import graft.operators.CorpusStats._
-    val dir = java.nio.file.Files.createTempDirectory("graft-cstats-ns").toString
+    val dir = TestSpark.tempDir("graft-cstats-ns").toString
     seedNgramStatsArchive(docs.where(col("doc_id") < 2), dir, "doc_id", "text")
     implicit val sqlCtx = spark.sqlContext
     val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
@@ -197,7 +197,7 @@ class CorpusStatsSpec extends AnyFunSuite {
 
   test("windowed scoring: last-W-batch load == batch recompute over the window, both families") {
     import graft.operators.CorpusStats._
-    val dir = java.nio.file.Files.createTempDirectory("graft-cstats-w").toString
+    val dir = TestSpark.tempDir("graft-cstats-w").toString
     seedTokenStatsArchive(docs.where(col("doc_id") < 2), dir, "doc_id", "text")
     (2 to 5).foreach(i => processTokenStatsBatch(
       docs.where(col("doc_id") === i.toLong), i.toLong - 2, dir, "doc_id", "text",
@@ -210,7 +210,7 @@ class CorpusStatsSpec extends AnyFunSuite {
       === rowsOf(QualityFilters.tokenFrequencyMetrics(windowDocs, "doc_id", "text")),
       "windowed scoring must equal the batch operator over the window's docs")
     // ngram twin
-    val ndir = java.nio.file.Files.createTempDirectory("graft-cstats-wn").toString
+    val ndir = TestSpark.tempDir("graft-cstats-wn").toString
     seedNgramStatsArchive(docs.where(col("doc_id") < 2), ndir, "doc_id", "text")
     (2 to 5).foreach(i => processNgramStatsBatch(
       docs.where(col("doc_id") === i.toLong), i.toLong - 2, ndir, "doc_id", "text",
@@ -223,7 +223,7 @@ class CorpusStatsSpec extends AnyFunSuite {
 
   test("in-loop compaction under the sink: reads equivalent, entries bounded, O(1) reader plan, window granularity refused") {
     import graft.operators.CorpusStats._
-    val dir = java.nio.file.Files.createTempDirectory("graft-cstats-k").toString
+    val dir = TestSpark.tempDir("graft-cstats-k").toString
     seedTokenStatsArchive(docs.where(col("doc_id") < 2), dir, "doc_id", "text")
     implicit val sqlCtx = spark.sqlContext
     val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
@@ -264,7 +264,7 @@ class CorpusStatsSpec extends AnyFunSuite {
     }
     assert(ex.getMessage.contains("folded into compacted ranges"), ex.getMessage)
     // ngram family compacts through its sink too
-    val ndir = java.nio.file.Files.createTempDirectory("graft-cstats-kn").toString
+    val ndir = TestSpark.tempDir("graft-cstats-kn").toString
     seedNgramStatsArchive(docs.where(col("doc_id") < 2), ndir, "doc_id", "text")
     (2 to 5).foreach(i => processNgramStatsBatch(
       docs.where(col("doc_id") === i.toLong), i.toLong - 2, ndir, "doc_id", "text",
@@ -316,7 +316,7 @@ class CorpusStatsSpec extends AnyFunSuite {
 
   test("windowed load refuses a window wider than the folded history") {
     import graft.operators.CorpusStats._
-    val dir = java.nio.file.Files.createTempDirectory("graft-cstats-wf").toString
+    val dir = TestSpark.tempDir("graft-cstats-wf").toString
     seedTokenStatsArchive(docs.where(col("doc_id") < 2), dir, "doc_id", "text")
     processTokenStatsBatch(docs.where(col("doc_id") === 2L), 0L, dir,
       "doc_id", "text", compactEvery = 0)
@@ -330,7 +330,7 @@ class CorpusStatsSpec extends AnyFunSuite {
   test("pre-r13 bare-h unigram parquet loads exactly (mark = 1), alone and mixed in an archive") {
     import graft.operators.CorpusStats._
     // saved-index form: overwrite unigrams with the old bare-`h` schema
-    val dir = java.nio.file.Files.createTempDirectory("graft-cstats-old").toString
+    val dir = TestSpark.tempDir("graft-cstats-old").toString
     saveNgramStats(buildNgramStats(docs, "doc_id", "text"), s"$dir/ix")
     val oldUni = spark.read.parquet(s"$dir/ix/unigrams").select(col("h"))
       .localCheckpoint()
@@ -340,7 +340,7 @@ class CorpusStatsSpec extends AnyFunSuite {
       === rowsOf(QualityFilters.bigramCounts(docs, "doc_id", "text")),
       "an old-format saved index must load and score exactly")
     // archive form: old-format seed next to a new-format sliver
-    val adir = java.nio.file.Files.createTempDirectory("graft-cstats-olda").toString
+    val adir = TestSpark.tempDir("graft-cstats-olda").toString
     seedNgramStatsArchive(docs.where(col("doc_id") < 4), adir, "doc_id", "text")
     val seedUni = spark.read.parquet(s"$adir/seed/unigrams").select(col("h"))
       .localCheckpoint()
@@ -364,7 +364,7 @@ class CorpusStatsSpec extends AnyFunSuite {
     // _ucounts sentinel can: strip the sentinel (as that generation
     // never wrote one) and retraction must refuse even though the
     // schema looks current
-    val mdir = java.nio.file.Files.createTempDirectory("graft-cstats-mark").toString
+    val mdir = TestSpark.tempDir("graft-cstats-mark").toString
     seedNgramStatsArchive(docs, mdir, "doc_id", "text")
     val fs = new org.apache.hadoop.fs.Path(mdir)
       .getFileSystem(spark.sessionState.newHadoopConf())
@@ -378,7 +378,7 @@ class CorpusStatsSpec extends AnyFunSuite {
     assert(exM.getMessage.contains("_ucounts"), exM.getMessage)
     // and the unmarked state survives an out-of-band fold — compaction
     // must not launder marks into retraction authorization
-    val cdir = java.nio.file.Files.createTempDirectory("graft-cstats-markc").toString
+    val cdir = TestSpark.tempDir("graft-cstats-markc").toString
     compactNgramStatsArchive(spark, mdir, cdir)
     val exC = intercept[IllegalArgumentException] {
       retractFromNgramStatsArchive(spark, cdir,
@@ -386,7 +386,7 @@ class CorpusStatsSpec extends AnyFunSuite {
     }
     assert(exC.getMessage.contains("_ucounts"), exC.getMessage)
     // the in-memory API carries the same refusal through load
-    val ldir = java.nio.file.Files.createTempDirectory("graft-cstats-markl").toString
+    val ldir = TestSpark.tempDir("graft-cstats-markl").toString
     saveNgramStats(buildNgramStats(docs, "doc_id", "text"), s"$ldir/ix")
     fs.delete(new org.apache.hadoop.fs.Path(s"$ldir/ix/unigrams/_ucounts"), false)
     val exL = intercept[IllegalArgumentException] {
@@ -406,7 +406,7 @@ class CorpusStatsSpec extends AnyFunSuite {
 
   test("in-place archive retraction (token): x entry cancels exactly; every sharp edge refuses") {
     import graft.operators.CorpusStats._
-    val dir = java.nio.file.Files.createTempDirectory("graft-cstats-xr").toString
+    val dir = TestSpark.tempDir("graft-cstats-xr").toString
     seedTokenStatsArchive(docs.where(col("doc_id") < 3), dir, "doc_id", "text")
     processTokenStatsBatch(docs.where(col("doc_id") >= 3 && col("doc_id") < 5),
       0L, dir, "doc_id", "text", compactEvery = 0)
@@ -475,7 +475,7 @@ class CorpusStatsSpec extends AnyFunSuite {
       withNew, "doc_id", "text"))
       === rowsOf(QualityFilters.tokenFrequencyMetrics(withNew, "doc_id", "text")))
     // out-of-band full fold materializes the cancellation and clears x
-    val dst = java.nio.file.Files.createTempDirectory("graft-cstats-xrc").toString
+    val dst = TestSpark.tempDir("graft-cstats-xrc").toString
     compactTokenStatsArchive(spark, dir, dst)
     assert(new java.io.File(dst).listFiles().map(_.getName).sorted
       .sameElements(Array("seed")))
@@ -486,7 +486,7 @@ class CorpusStatsSpec extends AnyFunSuite {
 
   test("in-place archive retraction (ngram): LM counts cancel exactly; family mismatch refuses") {
     import graft.operators.CorpusStats._
-    val dir = java.nio.file.Files.createTempDirectory("graft-cstats-xrn").toString
+    val dir = TestSpark.tempDir("graft-cstats-xrn").toString
     seedNgramStatsArchive(docs.where(col("doc_id") < 3), dir, "doc_id", "text")
     processNgramStatsBatch(docs.where(col("doc_id") >= 3), 0L, dir,
       "doc_id", "text", compactEvery = 0)
@@ -511,7 +511,7 @@ class CorpusStatsSpec extends AnyFunSuite {
 
   test("retraction entries tier-fold in-loop; GC deferred one takedown; ledger plan shuffle-free") {
     import graft.operators.CorpusStats._
-    val dir = java.nio.file.Files.createTempDirectory("graft-cstats-xf").toString
+    val dir = TestSpark.tempDir("graft-cstats-xf").toString
     seedTokenStatsArchive(docs, dir, "doc_id", "text")
     def retract(id: Long): Unit =
       retractFromTokenStatsArchive(spark, dir, docs.where(col("doc_id") === id),
@@ -567,7 +567,7 @@ class CorpusStatsSpec extends AnyFunSuite {
 
   test("net-multiplicity marks: a retracted doc re-folded by a foreign writer counts live; the repeat retraction lands") {
     import graft.operators.CorpusStats._
-    val dir = java.nio.file.Files.createTempDirectory("graft-cstats-refold").toString
+    val dir = TestSpark.tempDir("graft-cstats-refold").toString
     seedTokenStatsArchive(docs.where(col("doc_id") < 3), dir, "doc_id", "text")
     processTokenStatsBatch(docs.where(col("doc_id") === 3), 0L, dir,
       "doc_id", "text", compactEvery = 0)
@@ -610,7 +610,7 @@ class CorpusStatsSpec extends AnyFunSuite {
 
   test("ngram retraction entries tier-fold too (all four components sum through the merge)") {
     import graft.operators.CorpusStats._
-    val dir = java.nio.file.Files.createTempDirectory("graft-cstats-xfn").toString
+    val dir = TestSpark.tempDir("graft-cstats-xfn").toString
     seedNgramStatsArchive(docs, dir, "doc_id", "text")
     Seq(3L, 4L, 5L).foreach { id =>
       retractFromNgramStatsArchive(spark, dir, docs.where(col("doc_id") === id),
@@ -628,7 +628,7 @@ class CorpusStatsSpec extends AnyFunSuite {
 
   test("compaction folds pre-r13 bare-h unigram entries exactly (no crash, no vocab loss)") {
     import graft.operators.CorpusStats._
-    val dir = java.nio.file.Files.createTempDirectory("graft-cstats-oldc").toString
+    val dir = TestSpark.tempDir("graft-cstats-oldc").toString
     seedNgramStatsArchive(docs.where(col("doc_id") < 2), dir, "doc_id", "text")
     // commit 4 slivers with compaction off, then strip b0..b2 back to
     // the pre-r13 bare-`h` unigram schema: the next folds' merge sets
@@ -669,7 +669,7 @@ class CorpusStatsSpec extends AnyFunSuite {
     import graft.operators.CorpusStats._
     val e = intercept[IllegalArgumentException] {
       tokenStatsSink(docs,
-        java.nio.file.Files.createTempDirectory("graft-cstats-k1").toString,
+        TestSpark.tempDir("graft-cstats-k1").toString,
         "doc_id", "text", compactEvery = 1)
     }
     assert(e.getMessage.contains("degenerate"), e.getMessage)
@@ -677,7 +677,7 @@ class CorpusStatsSpec extends AnyFunSuite {
 
   test("streaming batches refuse duplicated/null doc ids loudly (double-count guard)") {
     import graft.operators.CorpusStats._
-    val dir = java.nio.file.Files.createTempDirectory("graft-cstats-dup").toString
+    val dir = TestSpark.tempDir("graft-cstats-dup").toString
     seedNgramStatsArchive(docs.where(col("doc_id") < 2), dir, "doc_id", "text")
     // a micro-batch carrying the same doc twice would double-count the
     // bigram pair/context partials (token-df is shielded by
@@ -700,7 +700,7 @@ class CorpusStatsSpec extends AnyFunSuite {
 
   test("archiveSink facade routes stats archives and refuses mismatched options") {
     import graft.streaming.ArchiveDedup
-    val dir = java.nio.file.Files.createTempDirectory("graft-cstats-fac").toString
+    val dir = TestSpark.tempDir("graft-cstats-fac").toString
     CorpusStats.seedTokenStatsArchive(docs.where(col("doc_id") < 2), dir,
       "doc_id", "text")
     assert(ArchiveDedup.modalityOf(spark, dir) === "token-stats")
@@ -722,7 +722,7 @@ class CorpusStatsSpec extends AnyFunSuite {
         threshold = 0.5)
     }
     assert(ex.getMessage.contains("not dedup pairs"), ex.getMessage)
-    val ndir = java.nio.file.Files.createTempDirectory("graft-cstats-facn").toString
+    val ndir = TestSpark.tempDir("graft-cstats-facn").toString
     CorpusStats.seedNgramStatsArchive(docs.where(col("doc_id") < 2), ndir,
       "doc_id", "text")
     assert(ArchiveDedup.modalityOf(spark, ndir) === "ngram-stats")
@@ -736,7 +736,7 @@ class CorpusStatsSpec extends AnyFunSuite {
 
   test("seed into an already-seeded dir gets the seeded diagnosis, not the counter-reset one") {
     import graft.operators.CorpusStats._
-    val dir = java.nio.file.Files.createTempDirectory("graft-cstats-re").toString
+    val dir = TestSpark.tempDir("graft-cstats-re").toString
     seedTokenStatsArchive(docs.where(col("doc_id") < 2), dir, "doc_id", "text")
     val ex = intercept[IllegalStateException] {
       seedTokenStatsArchive(docs.where(col("doc_id") < 2), dir, "doc_id", "text")

@@ -29,7 +29,7 @@ class CrashRecoverySpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    TestSpark.tempDir(prefix).toString
 
   private def text(id: Long): String =
     s"tok${id % 5} tok${(id * 3 + 1) % 5} crash$id tok${id % 5}"

@@ -196,7 +196,7 @@ class DedupSpec extends AnyFunSuite {
       .filter(p => p._1 >= split || p._2 >= split)
     assert(delta === batchRestricted)
     assert(delta.nonEmpty, "vacuous parity would prove nothing")
-    val dir = java.nio.file.Files.createTempDirectory("graft-ix").toString
+    val dir = TestSpark.tempDir("graft-ix").toString
     Dedup.save(ix, dir)
     val reloaded = Dedup.load(spark, dir, Dedup.MinhashIndex)
     assert(reloaded.numHashes === 16 && reloaded.bands === 4 && reloaded.shingleLen === 3)
@@ -391,7 +391,7 @@ class DedupSpec extends AnyFunSuite {
       .toSet.filter(p => p._1 >= split || p._2 >= split)
     assert(delta === batchRestricted)
     assert(delta.nonEmpty, "vacuous parity would prove nothing")
-    val dir = java.nio.file.Files.createTempDirectory("graft-cix").toString
+    val dir = TestSpark.tempDir("graft-cix").toString
     Dedup.save(ix, dir)
     val reloaded = Dedup.load(spark, dir, Dedup.CosineIndex)
     assert(reloaded.numBits === 8 && reloaded.bands === 8 &&
@@ -500,7 +500,7 @@ class DedupSpec extends AnyFunSuite {
       .toSet.filter(p => p._1 >= split || p._2 >= split)
     assert(delta === batchRestricted)
     assert(delta.nonEmpty, "vacuous parity would prove nothing")
-    val dir = java.nio.file.Files.createTempDirectory("graft-six").toString
+    val dir = TestSpark.tempDir("graft-six").toString
     Dedup.save(ix, dir)
     val reloaded = Dedup.load(spark, dir, Dedup.SemanticIndex)
     assert(reloaded.centroids.length === 4 &&

@@ -7,7 +7,7 @@ class DocumentLoaderSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   private def tmpDir(): java.io.File =
-    java.nio.file.Files.createTempDirectory("docs").toFile
+    TestSpark.tempDir("docs").toFile
 
   private def writeFile(dir: java.io.File, name: String, content: String): Unit = {
     val w = new java.io.PrintWriter(new java.io.File(dir, name))

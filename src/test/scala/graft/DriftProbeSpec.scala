@@ -104,7 +104,7 @@ class DriftProbeSpec extends AnyFunSuite {
     val seedDocs = (0 until 100).map(i => (i.toLong, doc(i, 30))).toDF("doc_id", "text")
     val live = Dedup.buildMinhashIndex(seedDocs, "doc_id", "text",
       numHashes = 16, bands = 4, shingleLen = 3)
-    val dir = java.nio.file.Files.createTempDirectory("graft-baseline").toString
+    val dir = TestSpark.tempDir("graft-baseline").toString
     Dedup.save(Dedup.pinDriftBaseline(live), dir)
     val pinned = Dedup.load(spark, dir, Dedup.MinhashIndex)
     val bl = pinned.baseline.getOrElse(fail("baseline must survive save/load"))
@@ -135,7 +135,7 @@ class DriftProbeSpec extends AnyFunSuite {
       gauss(21, 50, dim).map { case (id, v) =>
         (id, v.zip(cents(1)).map { case (x, c) => c + 0.1f * x }) })
       .toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("graft-frog").toString
+    val dir = TestSpark.tempDir("graft-frog").toString
     Dedup.save(
       Dedup.buildSemanticIndex(seed, "vec_id", "embedding", cents), dir)
     val ix0 = Dedup.pinDriftBaseline(Dedup.load(spark, dir, Dedup.SemanticIndex))
@@ -188,7 +188,7 @@ class DriftProbeSpec extends AnyFunSuite {
   test("archive seeds pin the baseline; loadLatest carries it into per-batch probes") {
     val dim = 8
     val cents = Array(Array.fill(dim)(1f), Array.fill(dim)(-1f))
-    val archive = java.nio.file.Files.createTempDirectory("graft-drift-b").toString
+    val archive = TestSpark.tempDir("graft-drift-b").toString
     graft.streaming.ArchiveDedup.seedArchive(
       Dedup.buildSemanticIndex(Seq((0L, cents(0).map(_ + 0.02f)), (1L, cents(1).map(_ - 0.02f)))
         .toDF("vec_id", "embedding"), "vec_id", "embedding", cents),
@@ -201,9 +201,9 @@ class DriftProbeSpec extends AnyFunSuite {
   test("archive sinks emit the probe alongside pairs when driftDir is set") {
     val dim = 8
     val cents = Array(Array.fill(dim)(1f), Array.fill(dim)(-1f))
-    val archive = java.nio.file.Files.createTempDirectory("graft-drift-a").toString
-    val pairsDir = java.nio.file.Files.createTempDirectory("graft-drift-p").toString
-    val driftDir = java.nio.file.Files.createTempDirectory("graft-drift-d").toString
+    val archive = TestSpark.tempDir("graft-drift-a").toString
+    val pairsDir = TestSpark.tempDir("graft-drift-p").toString
+    val driftDir = TestSpark.tempDir("graft-drift-d").toString
     // seed members sit NEAR the centroids, not on them (a zero seed
     // mean-distance would make any nonzero delta an infinite ratio)
     graft.streaming.ArchiveDedup.seedArchive(

@@ -1,6 +1,7 @@
 package graft
 
-import graft.operators.{HnswIndex, KnnSearch, ServingIndex}
+import graft.operators.{HnswIndex, HnswReference, KnnSearch, ServingIndex}
+import org.apache.spark.rdd.RDD
 import org.scalatest.funsuite.AnyFunSuite
 
 class HnswIndexSpec extends AnyFunSuite {
@@ -82,5 +83,73 @@ class HnswIndexSpec extends AnyFunSuite {
         assert(math.abs(arr.head._1 - exactTop(q)._1) < 1e-5f)
     }
     flat.slabs.unpersist(); hnsw.shards.unpersist(); docs.unpersist()
+  }
+
+  /** Every shard of `got` has `want`'s graph: ids, entry point, top level
+    * and each node's per-level adjacency, in order. */
+  private def assertSameGraphs(got: Array[HnswIndex.Shard], want: Array[HnswIndex.Shard],
+                               label: String): Unit = {
+    assert(got.length === want.length, label)
+    got.zip(want).zipWithIndex.foreach { case ((g, w), s) =>
+      assert(g.ids.toSeq === w.ids.toSeq, s"$label shard $s ids")
+      assert(g.entryPoint === w.entryPoint, s"$label shard $s entry point")
+      assert(g.topLevel === w.topLevel, s"$label shard $s top level")
+      assert(g.neighbors.length === w.neighbors.length, s"$label shard $s nodes")
+      val bad = g.neighbors.indices.find { v =>
+        g.neighbors(v).map(_.toSeq).toSeq != w.neighbors(v).map(_.toSeq).toSeq
+      }
+      assert(bad.isEmpty, s"$label shard $s: node ${bad.getOrElse(-1)} adjacency differs")
+    }
+  }
+
+  /** The parent builder's graphs, one per partition, seeded as
+    * [[HnswIndex.build]] seeds them (`seed + partitionId`). */
+  private def referenceShards(rdd: RDD[(Long, Array[Float])], d: Int, m: Int, efc: Int,
+                              metric: KnnSearch.Metric, seed: Long): Array[HnswIndex.Shard] =
+    rdd.mapPartitionsWithIndex { (pi, it) =>
+      Iterator.single(HnswReference.buildShard(it, d, m, efc, metric, seed + pi))
+    }.collect()
+
+  test("build reproduces the boxed reference builder's graph exactly (tie-free corpora)") {
+    for (metric <- Seq(KnnSearch.L2, KnnSearch.InnerProduct, KnnSearch.Cosine);
+         parts <- Seq(1, 3, 8)) {
+      val docs = ClusteredFixture.corpus(spark, 1500, dim, partitions = parts).cache()
+      val hnsw = HnswIndex.build(docs, dim, m = 16, efConstruction = 64, metric, seed = 7L)
+      assertSameGraphs(hnsw.shards.collect(),
+        referenceShards(docs, dim, 16, 64, metric, 7L), s"$metric at $parts partitions")
+      hnsw.shards.unpersist(); docs.unpersist()
+    }
+    // the IVF centroid router's shape: one graph over 100 trained
+    // centroids, m=16, efc=64, L2, seed 42 (ServingIndex.Ivf.centroidRouter)
+    val docs = ClusteredFixture.corpus(spark, n, dim).cache()
+    val ivf = ServingIndex.buildIvf(docs, dim, 100)
+    val centroids = spark.sparkContext.parallelize(
+      ivf.centroids.toSeq.zipWithIndex.map { case (c, i) => (i.toLong, c) }, 1)
+    val router = HnswIndex.build(centroids, dim, m = 16, efConstruction = 64, KnnSearch.L2, seed = 42L)
+    assertSameGraphs(router.shards.collect(),
+      referenceShards(centroids, dim, 16, 64, KnnSearch.L2, 42L), "centroid router")
+    router.shards.unpersist(); ivf.slabs.unpersist(); docs.unpersist()
+  }
+
+  test("tie-heavy corpus: every vector thrice; recall holds and builds are deterministic") {
+    val base = ClusteredFixture.corpus(spark, 700, dim, partitions = 4)
+    // three copies per vector: exact distance ties at every comparison
+    val docs = base.flatMap { case (id, v) => (0 until 3).map(r => (3 * id + r, v)) }.cache()
+    docs.count()
+    val flat = ServingIndex.buildFlat(docs, dim)
+    val a = HnswIndex.build(docs, dim, m = 16, efConstruction = 64, KnnSearch.L2)
+    val b = HnswIndex.build(docs, dim, m = 16, efConstruction = 64, KnnSearch.L2)
+    assertSameGraphs(a.shards.collect(), b.shards.collect(), "two tie-heavy builds")
+    val exact = flat.search(queries, 10, KnnSearch.L2).toMap
+    val approx = a.search(queries, 10, efSearch = 64)
+    // recall by distance: which of three equally close copies fills the
+    // last exact slot is a tie order, so a hit counts when it is as close
+    // as the exact 10th (relative slack for kernel rounding only)
+    val recall = approx.map { case (q, arr) =>
+      val kth = exact(q).last._1
+      arr.count(_._1 <= kth * (1 + 1e-5f)).toDouble / exact(q).length
+    }.sum / approx.length
+    assert(recall >= 0.9, s"tie-heavy recall@10 = $recall")
+    flat.slabs.unpersist(); a.shards.unpersist(); b.shards.unpersist(); docs.unpersist()
   }
 }

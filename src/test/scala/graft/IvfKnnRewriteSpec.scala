@@ -22,7 +22,7 @@ class IvfKnnRewriteSpec extends AnyFunSuite {
   private def setup(): (String, org.apache.spark.sql.DataFrame) = {
     val docsPath = TestSpark.sfDir + "/embeddings.parquet"
     val docs = spark.read.parquet(docsPath)
-    val indexPath = java.nio.file.Files.createTempDirectory("ivfidx").toString
+    val indexPath = TestSpark.tempDir("ivfidx").toString
     AnnIndex.writeIndex(
       AnnIndex.buildIvf(docs, "vec_id", "embedding", nlist = 8), indexPath)
     (docsPath, docs)

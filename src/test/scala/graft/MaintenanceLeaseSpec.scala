@@ -19,7 +19,7 @@ class MaintenanceLeaseSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    TestSpark.tempDir(prefix).toString
 
   private val docs = Seq(
     (0L, "alpha beta alpha gamma"),

@@ -13,7 +13,7 @@ class ParquetDocStoreSpec extends AnyFunSuite {
 
   private def bootstrapped(name: String): (ParquetDocStore, String) = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory(s"graft-docstore-$name").toString
+    val dir = TestSpark.tempDir(s"graft-docstore-$name").toString
     val corpus = (0 until 40)
       .map(i => (s"d-$i", i.toLong, s"text number $i",
         if (i % 2 == 0) s"""{"k":$i}""" else null))
@@ -90,7 +90,7 @@ class ParquetDocStoreSpec extends AnyFunSuite {
     assert(wrong.getMessage.contains("part-foreign.parquet"), wrong.getMessage)
     assert(wrong.getMessage.contains("does not match"), wrong.getMessage)
     // the base schema, but written without long_id statistics
-    val bare = java.nio.file.Files.createTempDirectory("graft-docstore-nostats").toString
+    val bare = TestSpark.tempDir("graft-docstore-nostats").toString
     Seq(("d-y", 2L, "text y", null: String)).toDF("doc_id", "long_id", "text", "metadata")
       .coalesce(1).write.option("parquet.column.statistics.enabled#long_id", "false")
       .parquet(s"$bare/gen=0")
@@ -101,7 +101,7 @@ class ParquetDocStoreSpec extends AnyFunSuite {
 
   test("bootstrap into a directory that holds a compacted store replaces its corpus") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-docstore-reboot").toString
+    val dir = TestSpark.tempDir("graft-docstore-reboot").toString
     def corpus(ids: String*) = ids.zipWithIndex
       .map { case (d, i) => (d, i.toLong, s"text of $d") }
       .toDF("doc_id", "long_id", "text")

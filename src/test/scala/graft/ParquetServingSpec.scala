@@ -30,7 +30,7 @@ class ParquetServingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def beforeAll(): Unit = {
     super.beforeAll()
-    tmp = java.nio.file.Files.createTempDirectory("graft-docstore")
+    tmp = TestSpark.tempDir("graft-docstore")
     val corpus = spark.read.parquet(s"${TestSpark.sfDir}/documents.parquet")
       .where(col("doc_id") < 80).select(col("doc_id"), col("text"))
     corpusN = corpus.count()

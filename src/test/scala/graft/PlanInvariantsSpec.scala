@@ -201,7 +201,7 @@ class PlanInvariantsSpec extends AnyFunSuite {
   test("q84 delta scan input: banding is delta-sided, pair space never cartesian") {
     import graft.operators.Dedup
     val docs = Tables(spark, dir, "documents")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-plan-mix").toString
+    val tmp = TestSpark.tempDir("graft-plan-mix").toString
     Dedup.save(Dedup.buildMinhashIndex(
       docs.where(col("doc_id") < 400), "doc_id", "text",
       numHashes = 16, bands = 4, shingleLen = 3), tmp)
@@ -221,7 +221,7 @@ class PlanInvariantsSpec extends AnyFunSuite {
     val cents = e.orderBy(col("vec_id")).limit(4)
       .select(col("embedding").cast("array<float>"))
       .collect().map(_.getSeq[Float](0).toArray)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-plan-six").toString
+    val tmp = TestSpark.tempDir("graft-plan-six").toString
     Dedup.save(Dedup.buildSemanticIndex(
       e.where(col("vec_id") < 300), "vec_id", "embedding", cents), tmp)
     val ix0 = Dedup.load(spark, tmp, Dedup.SemanticIndex)
@@ -257,7 +257,7 @@ class PlanInvariantsSpec extends AnyFunSuite {
   test("q90 facade: routes to the gated minhash delta path, rename-only projection") {
     import graft.operators.Dedup
     val docs = Tables(spark, dir, "documents")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-plan-fac").toString
+    val tmp = TestSpark.tempDir("graft-plan-fac").toString
     Dedup.save(Dedup.buildMinhashIndex(
       docs.where(col("doc_id") < 400), "doc_id", "text",
       numHashes = 16, bands = 4, shingleLen = 3), tmp)
@@ -288,7 +288,7 @@ class PlanInvariantsSpec extends AnyFunSuite {
   test("q91/q92 incremental stats scoring: archived text never re-read, partials enter via index parquet") {
     import graft.operators.CorpusStats
     val docs = Tables(spark, dir, "documents")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-plan-cst").toString
+    val tmp = TestSpark.tempDir("graft-plan-cst").toString
     // the daily regime: yesterday's corpus is a SAVED index; today's
     // delta scores against it. The cost contract is that the scoring
     // plan tokenizes the DELTA only — the archive contributes compact
@@ -341,7 +341,7 @@ class PlanInvariantsSpec extends AnyFunSuite {
   test("q93 retracted-archive scoring: x entries enter via partial parquet, archived text never re-read") {
     import graft.operators.CorpusStats
     val docs = Tables(spark, dir, "documents")
-    val adir = java.nio.file.Files.createTempDirectory("graft-plan-cstx").toString
+    val adir = TestSpark.tempDir("graft-plan-cstx").toString
     CorpusStats.seedTokenStatsArchive(
       docs.where(col("doc_id") < 300), adir, "doc_id", "text")
     CorpusStats.processTokenStatsBatch(
@@ -372,7 +372,7 @@ class PlanInvariantsSpec extends AnyFunSuite {
   test("q94 retracted-ngram-archive scoring: x entries enter via partial parquet, archived text never re-read") {
     import graft.operators.CorpusStats
     val docs = Tables(spark, dir, "documents")
-    val adir = java.nio.file.Files.createTempDirectory("graft-plan-csngx").toString
+    val adir = TestSpark.tempDir("graft-plan-csngx").toString
     CorpusStats.seedNgramStatsArchive(
       docs.where(col("doc_id") < 300), adir, "doc_id", "text")
     CorpusStats.processNgramStatsBatch(
@@ -404,7 +404,7 @@ class PlanInvariantsSpec extends AnyFunSuite {
   test("q95 windowed load: the plan reads ONLY the window's sliver entries") {
     import graft.operators.CorpusStats
     val docs = Tables(spark, dir, "documents")
-    val adir = java.nio.file.Files.createTempDirectory("graft-plan-cswin").toString
+    val adir = TestSpark.tempDir("graft-plan-cswin").toString
     CorpusStats.seedTokenStatsArchive(
       docs.where(col("doc_id") < 300), adir, "doc_id", "text")
     CorpusStats.processTokenStatsBatch(
@@ -437,7 +437,7 @@ class PlanInvariantsSpec extends AnyFunSuite {
   test("q85 cosine delta scan input: signature math is delta-sided, no cartesian") {
     import graft.operators.{Dedup, SimilarityJoin}
     val e = Tables(spark, dir, "embeddings")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-plan-cix").toString
+    val tmp = TestSpark.tempDir("graft-plan-cix").toString
     Dedup.save(Dedup.buildCosineIndex(
       e.where(col("vec_id") < 400), "vec_id", "embedding",
       numBits = 8, bands = 8), tmp)

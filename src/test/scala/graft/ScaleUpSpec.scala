@@ -11,7 +11,7 @@ class ScaleUpSpec extends AnyFunSuite {
 
   test("2x replication doubles rows, keeps keys disjoint and text decorrelated") {
     val src = TestSpark.sfDir
-    val dst = java.nio.file.Files.createTempDirectory("scaleup").toString
+    val dst = TestSpark.tempDir("scaleup").toString
     // events.ts is INT64 TIMESTAMP(NANOS) — read as raw nanos, the same
     // conf Verify/Bench sessions set at build time
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

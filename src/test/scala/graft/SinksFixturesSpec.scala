@@ -12,7 +12,7 @@ class SinksFixturesSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("embedding CSV round-trip: one column per dim (S7)") {
-    val dir = java.nio.file.Files.createTempDirectory("embcsv").toString + "/out"
+    val dir = TestSpark.tempDir("embcsv").toString + "/out"
     val df = Seq((1L, Array(0.1f, 0.2f, 0.3f)), (2L, Array(0.4f, 0.5f, 0.6f)))
       .toDF("id", "embedding")
     Sinks.embeddingsToCsv(df, "id", "embedding", 3, dir)
@@ -23,7 +23,7 @@ class SinksFixturesSpec extends AnyFunSuite {
   }
 
   test("ground-truth JSON loader feeds IREval (S17)") {
-    val dir = java.nio.file.Files.createTempDirectory("gt").toFile
+    val dir = TestSpark.tempDir("gt").toFile
     val f = new java.io.File(dir, "gt.json")
     val w = new java.io.PrintWriter(f)
     w.print(

@@ -9,7 +9,7 @@ class SourcesSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("collection write/read/get/delete round-trip") {
-    val root = java.nio.file.Files.createTempDirectory("coll").toString
+    val root = TestSpark.tempDir("coll").toString
     val df = Seq((1L, "a", 1L), (2L, "b", 1L), (3L, "c", 1L)).toDF("id", "content", "v")
     CollectionStore.write(df, root, "docs")
     val back = CollectionStore.read(spark, root, "docs")
@@ -34,7 +34,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("csv vector source: dim_ detection, NaN-row drop, array assembly") {
-    val dir = java.nio.file.Files.createTempDirectory("csv").toFile
+    val dir = TestSpark.tempDir("csv").toFile
     val f = new java.io.File(dir, "vectors.csv")
     val w = new java.io.PrintWriter(f)
     w.println("vector_id,category,dim_0,dim_1,dim_2")

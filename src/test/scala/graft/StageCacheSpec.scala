@@ -74,7 +74,7 @@ class StageCacheSpec extends AnyFunSuite {
 
   test("overwriting the source parquet invalidates: re-derive rebuilds instead of serving stale rows") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-stale").toString + "/corpus"
+    val dir = TestSpark.tempDir("graft-stale").toString + "/corpus"
     Seq((1L, "a"), (2L, "b")).toDF("id", "t").write.parquet(dir)
     var builds = 0
     def derive(): org.apache.spark.sql.DataFrame = {

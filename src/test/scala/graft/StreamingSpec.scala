@@ -9,7 +9,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming windowed counts match the batch aggregation") {
     // stream the sf0.001 events parquet as a finite file source
-    val dir = java.nio.file.Files.createTempDirectory("events").toString
+    val dir = TestSpark.tempDir("events").toString
     // copy the single parquet file into a directory-shaped source
     val src = java.nio.file.Paths.get(TestSpark.sfDir, "events.parquet")
     java.nio.file.Files.copy(src, java.nio.file.Paths.get(dir, "events.parquet"))
@@ -62,7 +62,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming upsert sink applies latest-wins merges across batches") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("sink").toString
+    val root = TestSpark.tempDir("sink").toString
     implicit val sqlCtx = spark.sqlContext
     val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String, Long)]
     val q = EventStream.upsertSink(

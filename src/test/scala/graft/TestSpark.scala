@@ -12,6 +12,19 @@ object TestSpark {
     s
   }
   val sfDir = "/root/testdata/sf0.001"
+
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+  sys.addShutdownHook(tempDirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d)))
+
+  /** A new temporary directory whose name starts with `prefix`, deleted
+    * with everything under it when the test JVM exits: the archives,
+    * stores and indexes the specs write would otherwise pile up in the
+    * temp dir run after run. */
+  def tempDir(prefix: String): java.nio.file.Path = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    tempDirs.add(dir.toFile)
+    dir
+  }
 }
 
 /** The seeded clustered-gaussian corpus the serving-index suites share

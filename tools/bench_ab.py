@@ -29,6 +29,24 @@ and it will
 Exit code 0 = flat, 2 = regression (|delta| > --flat-band after
 normalization), 1 = usage/infra error. The verdict JSON goes to stdout
 (last line) for the round notes.
+
+Perfbench mode A/Bs one workload of the benchmark in BENCHMARK.json:
+
+    python3 tools/bench_ab.py <baseline-ref> --perfbench <workload>
+                              [--pairs 10] [--seed0 21] [--workdir DIR]
+
+It exports the baseline ref's committed files (`git archive`) and a copy
+of the working tree's files (tracked and untracked, not ignored) into two
+new directories under --workdir, so each side builds in its own fresh
+target/ (copying a built checkout's target/ breaks the other tree's
+incremental compiler state). Both sides are built first, then pair i runs
+`perfbench/run.py --seed <seed0 + i>` (untraced, BENCHMARK.json's
+run_seconds) once per side, alternating which side runs first. For every
+end-to-end metric of BENCHMARK.json it prints each side's median and quartiles, the change's win
+fraction over the pairs (ties count for neither side) and whether the
+gain rule holds: wins >= 9/10 of the pairs and a median difference larger
+than the baseline's interquartile spread. The last stdout line is JSON.
+Exit code 0, or 1 on a build or run failure.
 """
 import argparse
 import json
@@ -90,16 +108,132 @@ def calib_of(runs):
             for k in sorted(keys)}
 
 
+def snapshot_ref(ref, dst):
+    """Export `ref`'s committed files into the new directory `dst`."""
+    os.makedirs(dst)
+    git = subprocess.Popen(["git", "archive", ref], cwd=REPO, stdout=subprocess.PIPE)
+    tar = subprocess.run(["tar", "-x", "-C", dst], stdin=git.stdout)
+    git.stdout.close()
+    if git.wait() != 0 or tar.returncode != 0:
+        raise RuntimeError(f"could not export {ref} into {dst}")
+
+
+def snapshot_worktree(dst):
+    """Copy the working tree's tracked and untracked, not ignored, files
+    into the new directory `dst`."""
+    out = subprocess.run(["git", "ls-files", "-z", "--cached", "--others", "--exclude-standard"],
+                         cwd=REPO, stdout=subprocess.PIPE, check=True).stdout
+    for rel in filter(None, out.decode().split("\0")):
+        src = os.path.join(REPO, rel)
+        if os.path.isfile(src):  # a tracked file deleted in the tree is skipped
+            os.makedirs(os.path.dirname(os.path.join(dst, rel)), exist_ok=True)
+            shutil.copy2(src, os.path.join(dst, rel))
+
+
+def quartiles(vals):
+    """(q1, median, q3) of a sample."""
+    if len(vals) < 2:
+        return vals[0], vals[0], vals[0]
+    q1, q2, q3 = statistics.quantiles(vals, n=4, method="inclusive")
+    return q1, q2, q3
+
+
+def metric_value(res, name):
+    """A perfbench metric's number ({"value", "unit"} objects), or None."""
+    v = res["metrics"].get(name)
+    return v["value"] if isinstance(v, dict) else v
+
+
+def perfbench_ab(args):
+    with open(os.path.join(REPO, "BENCHMARK.json")) as f:
+        spec = json.load(f)
+    better = {m["name"]: m["better"] for m in spec["end_to_end"]}
+    names = list(better)
+    work = args.workdir or os.path.join("/tmp", "bench_ab_perfbench")
+    shutil.rmtree(work, ignore_errors=True)
+    trees = {"base": os.path.join(work, "base"), "head": os.path.join(work, "head")}
+    snapshot_ref(args.baseline, trees["base"])
+    snapshot_worktree(trees["head"])
+    for side, tree in trees.items():
+        print(f"[bench_ab] building {side} in {tree}", file=sys.stderr, flush=True)
+        # perfbench/run.py's own build step, without a measured run
+        run([sys.executable, "-c", "import os, sys; sys.path.insert(0, 'perfbench'); "
+             "import run; os.makedirs(run.WORK, exist_ok=True); run.ensure_build()"],
+            cwd=tree, capture=True)
+    runs = {"base": [], "head": []}
+    for i in range(args.pairs):
+        seed = args.seed0 + i
+        for side in (("base", "head") if i % 2 == 0 else ("head", "base")):
+            out = run([sys.executable, "perfbench/run.py", "--workload", args.perfbench,
+                       "--seed", str(seed), "--seconds", str(spec["run_seconds"]),
+                       "--trace", "0"], cwd=trees[side], capture=True)
+            # run.py's stderr is merged in; its result is the last JSON line
+            res = json.loads(next(l for l in reversed(out.splitlines())
+                                  if l.startswith("{") and '"metrics"' in l))
+            runs[side].append(res)
+            print(f"[bench_ab] pair {i + 1}/{args.pairs} seed {seed} {side}: " +
+                  " ".join(f"{n}={metric_value(res, n)}" for n in names) +
+                  f" failed={res['failed']}/{res['attempted']}", file=sys.stderr, flush=True)
+    report = {"baseline_ref": args.baseline, "workload": args.perfbench,
+              "pairs": args.pairs, "seeds": [args.seed0 + i for i in range(args.pairs)]}
+    report.update(summarize(runs, names, better))
+    print(json.dumps(report))
+    if not args.keep_worktree:
+        shutil.rmtree(work, ignore_errors=True)
+    return 0
+
+
+def summarize(runs, names, better):
+    """Per-side failed ratio, and per metric each side's quartiles, the
+    head's win fraction and the gain rule; prints one line per metric."""
+    report = {"metrics": {}}
+    for side in runs:
+        att = sum(r["attempted"] for r in runs[side])
+        report[f"{side}_failed_ratio"] = sum(r["failed"] for r in runs[side]) / att if att else None
+    for n in names:
+        pairs = [(metric_value(b, n), metric_value(h, n)) for b, h in zip(runs["base"], runs["head"])
+                 if metric_value(b, n) is not None and metric_value(h, n) is not None]
+        if not pairs:
+            continue
+        lower = better[n] == "lower"
+        wins = sum(1 for b, h in pairs if (h < b if lower else h > b))
+        bq, hq = quartiles([b for b, _ in pairs]), quartiles([h for _, h in pairs])
+        gain = (hq[1] < bq[1]) == lower and abs(hq[1] - bq[1]) > bq[2] - bq[0]
+        row = {"better": "lower" if lower else "higher",
+               "base_q1_median_q3": [round(x, 4) for x in bq],
+               "head_q1_median_q3": [round(x, 4) for x in hq],
+               "median_change_pct": round(100 * (hq[1] - bq[1]) / bq[1], 2) if bq[1] else None,
+               "head_win_fraction": round(wins / len(pairs), 3),
+               "gain_rule_holds": bool(gain and wins >= 0.9 * len(pairs))}
+        report["metrics"][n] = row
+        print(f"{n:32s} base {bq[1]:.4f} [{bq[0]:.4f}, {bq[2]:.4f}]  "
+              f"head {hq[1]:.4f} [{hq[0]:.4f}, {hq[2]:.4f}]  "
+              f"head wins {wins}/{len(pairs)}  gain rule: {row['gain_rule_holds']}")
+    return report
+
+
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("baseline", help="git ref of the previous round's HEAD")
+    ap.add_argument("--perfbench", metavar="WORKLOAD",
+                    help="A/B one perfbench workload instead of the Bench harness")
+    ap.add_argument("--pairs", type=int, default=10, help="perfbench: interleaved pairs")
+    ap.add_argument("--seed0", type=int, default=1, help="perfbench: seed of the first pair")
+    ap.add_argument("--workdir", help="perfbench: where the two snapshots go")
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     ap.add_argument("--reps", type=int, default=2, help="runs per side")
     ap.add_argument("--cpus", type=int, default=32)
     ap.add_argument("--flat-band", type=float, default=0.05,
                     help="|normalized delta| below this = code flat")
-    ap.add_argument("--keep-worktree", action="store_true")
+    ap.add_argument("--keep-worktree", action="store_true",
+                    help="keep the baseline worktree (perfbench: both snapshots)")
     args = ap.parse_args()
+    if args.perfbench:
+        try:
+            return perfbench_ab(args)
+        except RuntimeError as e:
+            print(f"[bench_ab] {e}", file=sys.stderr)
+            return 1
 
     wt = os.path.join("/tmp", f"bench_ab_{re.sub(r'[^A-Za-z0-9._-]', '_', args.baseline)}")
     if os.path.exists(wt):
